@@ -176,14 +176,32 @@ object ManifestTable {
   /** Size-bounded LRU memo (access-order LinkedHashMap behind a lock).
     * Eviction is per-entry, oldest-accessed first — never a wholesale
     * clear, so a long-lived driver keeps its hot entries instead of
-    * paying a full cold-start burst at the cap (ADVICE r16). */
-  private final class LruMemo[K, V](cap: Int) {
-    private val m = new java.util.LinkedHashMap[K, V](64, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
-        size() > cap
-    }
+    * paying a full cold-start burst at the cap (ADVICE r16). `cap` bounds
+    * the total WEIGHT (one per entry by default); an entry heavier than
+    * the whole cap is served but never kept. */
+  private[graft] final class LruMemo[K, V](cap: Long, weigh: V => Long = (_: V) => 1L) {
+    private val m = new java.util.LinkedHashMap[K, V](64, 0.75f, true)
+    private var total = 0L
+    private val inflight = new java.util.concurrent.ConcurrentHashMap[K, AnyRef]()
     def get(k: K): Option[V] = m.synchronized(Option(m.get(k)))
-    def put(k: K, v: V): Unit = m.synchronized(m.put(k, v): Unit)
+    def put(k: K, v: V): Unit = m.synchronized {
+      val old = m.remove(k)
+      if (old != null) total -= weigh(old)
+      val w = weigh(v)
+      if (w <= cap) {
+        m.put(k, v); total += w
+        val eldest = m.values().iterator()
+        while (total > cap) { total -= weigh(eldest.next()); eldest.remove() }
+      }
+    }
+    /** The memoized value, or `load` run ONCE for concurrent callers of
+      * the same key (the others wait and read the memo). */
+    def getOrLoad(k: K)(load: => V): V = get(k).getOrElse {
+      val lock = inflight.computeIfAbsent(k, _ => new Object)
+      try lock.synchronized {
+        get(k).getOrElse { val v = load; put(k, v); v }
+      } finally inflight.remove(k, lock): Unit
+    }
   }
 
   private val statsCache =

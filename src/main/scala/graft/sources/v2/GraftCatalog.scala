@@ -1791,27 +1791,31 @@ class GraftScanBuilder(ident: String, spark: SparkSession,
   /** Merge-on-read scan over a snapshot carrying delete entries of
     * EITHER kind (or both — the mixed chain, which until r10 session 3
     * refused with a compact pointer) — see [[GraftMoRScan]] for the
-    * group/filter design. */
+    * group/filter design. All delete state comes from
+    * [[MoRDeleteKeyLoader]]'s per-file memos: Spark calls build() once
+    * per statement, and re-planning an unchanged snapshot must neither
+    * start a job nor reopen a delete file. */
   private def buildMoR(): Scan = {
     val delEntries = entries.filter(_.deleteKey.isDefined)
     val delSeqs = delEntries.map(_.seq).distinct.sorted
     val data = prunedDataEntries
+    // built only when some memo misses
+    lazy val hc = spark.sessionState.newHadoopConf()
+    def norm(p: String): String = MoRDeleteKeyLoader.normPath(p)
 
-    // position deletes: (file -> deleted physical ordinals), loaded once
-    // driver-side under the same loud ceiling as equality keys
-    def norm(p: String): String =
-      if (p.startsWith("file:")) java.net.URI.create(p).getPath else p
+    // position deletes: (file -> deleted physical ordinals), under the
+    // same loud ceiling as equality keys
     val posFiles = entries.filter(_.posDelete).map(_.path)
     val posDeletes: Map[String, Array[Long]] =
       if (posFiles.isEmpty) Map.empty
       else {
-        val delRows = spark.read.parquet(posFiles: _*)
-          .select("file_path", "pos").collect()
-        require(delRows.length <= MaxDeleteKeys,
-          s"GraftCatalog: $ident carries ${delRows.length} position deletes — " +
+        val perFile = posFiles.map(p => MoRDeleteKeyLoader.positions(MoRFile.of(p), hc))
+        val n = perFile.iterator.flatMap(_.valuesIterator).map(_.length.toLong).sum
+        require(n <= MaxDeleteKeys,
+          s"GraftCatalog: $ident carries $n position deletes — " +
             s"over the merge-on-read ceiling ($MaxDeleteKeys); compact the table")
-        delRows.groupBy(r => norm(r.getString(0)))
-          .map { case (f, rs) => f -> rs.map(_.getLong(1)) }
+        perFile.flatten.groupBy(_._1)
+          .map { case (f, ps) => f -> ps.flatMap(_._2).toArray }
       }
 
     // row-group layout of every position-touched file, read ONCE from
@@ -1824,21 +1828,8 @@ class GraftScanBuilder(ident: String, spark: SparkSession,
     // are bounded by the number of pos-touched files (rewrite_deletes
     // compacts them away).
     val rowGroups: Map[String, Array[(Long, Long)]] =
-      if (posDeletes.isEmpty) Map.empty
-      else {
-        val touchedPaths = data.map(e => norm(e.path))
-          .filter(posDeletes.contains).distinct
-        val hc = spark.sessionState.newHadoopConf()
-        touchedPaths.map { p =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(p), hc)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try {
-            p -> r.getFooter.getBlocks.asScala.toArray
-              .map(b => (b.getStartingPos, b.getRowCount))
-          } finally r.close()
-        }.toMap
-      }
+      data.map(e => norm(e.path)).filter(posDeletes.contains).distinct
+        .map(p => p -> MoRDeleteKeyLoader.rowGroups(MoRFile.of(p), hc)).toMap
 
     def kindOf(col: String): Int = {
       val f = physFull.fields.find(_.name == col).getOrElse(sys.error(
@@ -1855,70 +1846,48 @@ class GraftScanBuilder(ident: String, spark: SparkSession,
       }
     }
 
-    // footer row counts of every equality-delete file (free metadata —
-    // the same bounded pass the position path uses) decide eager vs
-    // executor-side loading BEFORE any driver collect can OOM
-    val eqDeleteRows: Long = {
-      val eqPaths = delEntries.filterNot(_.posDelete).map(_.path).distinct
-      if (eqPaths.isEmpty) 0L
-      else {
-        val hc = spark.sessionState.newHadoopConf()
-        eqPaths.map { p =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(p), hc)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-          finally r.close()
-        }.sum
-      }
-    }
+    // footer row counts of every equality-delete file (the `__rows` of
+    // the memoized footer stats) decide eager vs executor-side loading
+    // BEFORE any driver load can OOM
+    val eqDeleteRows: Long = delEntries.map(_.path).distinct.map { p =>
+      ManifestTable.fileStats(p).get("__rows").map(_._1.toLong).getOrElse(sys.error(
+        s"GraftCatalog: cannot read the footer of delete file $p of $ident"))
+    }.sum
     val lazyEqKeys = eqDeleteRows > MaxDeleteKeys
+    val delFiles = delEntries.map(e => e.path -> MoRFile.of(e.path)).toMap
     val lazyConf =
       if (lazyEqKeys) new SerializableHadoopConf(spark.sessionState.newHadoopConf())
       else null
-
-    // each (delete seq, key spec)'s key set is loaded ONCE, then unioned
-    // per group — a chain of k delete commits costs k small driver reads.
-    // A spec is one or more comma-separated columns (composite row ids).
-    val loaded = scala.collection.mutable.Map.empty[(Int, String), Array[Array[Any]]]
-    def keysOf(seq: Int, spec: String): Array[Array[Any]] = loaded.getOrElseUpdate(
-      (seq, spec), {
-        val cols = ManifestTable.delKeyCols(spec)
-        val paths = delEntries.filter(e => e.seq == seq && e.deleteKey.contains(spec))
-          .map(_.path)
-        spark.read.parquet(paths: _*)
-          .select(cols.map(org.apache.spark.sql.functions.col): _*)
-          .collect().map(r => Array.tabulate[Any](cols.length)(r.get))
-      })
 
     // group data files by how many delete commits apply: a delete at seq
     // d covers data with seq < d, so "applicable deletes" is a suffix of
     // delSeqs and the groups are contiguous — at most |delSeqs|+1 of them
     val groups = data.groupBy(e => delSeqs.count(_ > e.seq)).toSeq.sortBy(_._1)
 
+    // eager keys loaded per delete file (memoized across scans), counted
+    // once each against the ceiling however many groups share them
+    val loaded = scala.collection.mutable.Map.empty[String, Array[Any]]
     val built = groups.map { case (nApplicable, es) =>
       val applicable = delSeqs.takeRight(nApplicable)
-      // (key cols, eager rows, lazy files) per delete spec: exactly one
-      // of rows/files is populated, chosen by the footer estimate above
-      val bySpec: Seq[(Seq[String], Array[Array[Any]], Seq[String])] =
-        delEntries.filter(e => applicable.contains(e.seq))
-          .groupBy(_.deleteKey.get).toSeq.sortBy(_._1)
-          .map { case (spec, ds) =>
-            if (lazyEqKeys)
-              (ManifestTable.delKeyCols(spec), Array.empty[Array[Any]],
-                ds.map(_.path).distinct)
-            else
-              (ManifestTable.delKeyCols(spec),
-                ds.map(_.seq).distinct.flatMap(sq => keysOf(sq, spec)).toArray,
-                Seq.empty[String])
-          }
+      // one delete set per key spec (one or more comma-separated columns
+      // — composite row ids): eager keys or, over the ceiling, the files
+      val bySpec = delEntries.filter(e => applicable.contains(e.seq))
+        .groupBy(_.deleteKey.get).toSeq.sortBy(_._1)
+        .map { case (spec, ds) =>
+          val cols = ManifestTable.delKeyCols(spec).toArray
+          val files = ds.map(_.path).distinct.map(delFiles).toArray
+          val kinds = cols.map(kindOf)
+          if (lazyEqKeys) (cols, kinds, Array.empty[Any], files)
+          else (cols, kinds, files.flatMap(f => loaded.getOrElseUpdate(f.path,
+            MoRDeleteKeyLoader.keys(f, cols, kinds, hc))), Array.empty[MoRFile])
+        }
       val keyCols = bySpec.flatMap(_._1).distinct
       val internal = StructType(required.fields ++
         keyCols.filterNot(c => required.fieldNames.contains(c))
           .map(c => physFull.fields.find(_.name == c).get))
-      def batchOver(paths: Seq[String], push: Boolean,
-                    extraOpts: Map[String, String] = Map.empty)
-          : org.apache.spark.sql.connector.read.Batch = {
+      // no files of a kind, no batch: no inner table, no reader factory
+      def batchOver(paths: Seq[String], extraOpts: Map[String, String] = Map.empty)
+          : Option[org.apache.spark.sql.connector.read.Batch] = Option.when(paths.nonEmpty) {
         val t = ParquetTable(ident, spark,
           new CaseInsensitiveStringMap(Map("mergeSchema" -> "true").asJava),
           paths.toIndexedSeq, Some(physFull), classOf[ParquetFileFormat])
@@ -1927,7 +1896,7 @@ class GraftScanBuilder(ident: String, spark: SparkSession,
           else new CaseInsensitiveStringMap(
             (options.asScala.toMap ++ extraOpts).asJava)
         val sb = t.newScanBuilder(sbOpts)
-        if (push) { sb.pushFilters(fileConjuncts): Unit }
+        sb.pushFilters(fileConjuncts): Unit
         sb.pruneColumns(internal)
         sb.build().toBatch
       }
@@ -1939,20 +1908,20 @@ class GraftScanBuilder(ident: String, spark: SparkSession,
       // ordinal bases, making group-level skipping ordinal-exact
       val (posTouched, plain) = es.partition(e => posDeletes.contains(norm(e.path)))
       val spec = MoRGroupSpec(
-        deleteSets = bySpec.map { case (cols, rows, files) =>
+        deleteSets = bySpec.map { case (cols, kinds, keys, files) =>
           MoRDeleteSet(
-            keyIdxs = cols.map(c => internal.fieldIndex(c)).toArray,
-            keyKinds = cols.map(kindOf).toArray,
-            keyRows = rows,
-            keyFiles = files.toArray,
-            keyNames = cols.toArray,
+            keyIdxs = cols.map(c => internal.fieldIndex(c)),
+            keyKinds = kinds,
+            keys = keys,
+            keyFiles = files,
+            keyNames = cols,
             conf = lazyConf)
         }.toArray,
         projection = required.fields.map(f => internal.fieldIndex(f.name)),
         readTypes = internal.fields.map(_.dataType),
         readNullable = internal.fields.map(_.nullable))
-      (batchOver(plain.map(_.path), push = true),
-        batchOver(posTouched.map(_.path), push = true, extraOpts = Map(
+      (batchOver(plain.map(_.path)),
+        batchOver(posTouched.map(_.path), extraOpts = Map(
           "parquet.filter.columnindex.enabled" -> "false",
           "parquet.filter.record-level.enabled" -> "false")), spec)
     }

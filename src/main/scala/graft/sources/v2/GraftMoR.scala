@@ -31,21 +31,34 @@ import graft.sources.ManifestTable
   */
 /** One delete specification applicable to a group: the (possibly
   * composite) key columns' positions/kinds in the group's read schema and
-  * the deleted key tuples (each row = one composite key, scalar = one
-  * element). */
+  * the deleted keys in the probe domain (a boxed value per scalar key, a
+  * Vector per composite key; NULL-bearing keys never enter). */
 private[v2] final case class MoRDeleteSet(
     keyIdxs: Array[Int],
     keyKinds: Array[Int],          // 0=long 1=int 2=double 3=string 4=boolean
-    keyRows: Array[Array[Any]],
+    keys: Array[Any],
     // the OVER-CEILING path (r16): when the footer-estimated key count
     // exceeds the driver ceiling, the driver ships the delete FILES
-    // (paths + key column names + a serializable hadoop conf) instead
-    // of collected rows, and executors load them once per JVM through
-    // [[MoRDeleteKeyLoader]] — the Iceberg posture: delete-set size is
-    // bounded by executor memory, never by the driver
-    keyFiles: Array[String] = Array.empty,
+    // (content identities + key column names + a serializable hadoop
+    // conf) instead of loaded keys, and executors load them once per JVM
+    // through [[MoRDeleteKeyLoader]] — the Iceberg posture: delete-set
+    // size is bounded by executor memory, never by the driver
+    keyFiles: Array[MoRFile] = Array.empty,
     keyNames: Array[String] = Array.empty,
     conf: SerializableHadoopConf = null)
+
+/** A file as the merge-on-read memos identify it: (path, length, mtime),
+  * the key [[ManifestTable.fileStats]] uses. Committed files are
+  * immutable and UUID-named; a file re-created at the same path with
+  * other bytes gets a new identity, so a memo hit is never stale. */
+private[graft] final case class MoRFile(path: String, length: Long, mtime: Long)
+
+private[graft] object MoRFile {
+  def of(path: String): MoRFile = {
+    val f = new java.io.File(path)
+    MoRFile(path, f.length(), f.lastModified())
+  }
+}
 
 /** Minimal serializable Hadoop Configuration carrier (Spark's own
   * wrapper is private[spark]): writes the conf's XML-backed key/value
@@ -64,62 +77,118 @@ private[v2] final class SerializableHadoopConf(
   }
 }
 
-/** Executor-side delete-key loading with a process-level cache: each
-  * executor JVM materializes a given (delete files, key columns) set
-  * ONCE — a 1000-executor scan pays 1000 small parquet reads, not one
-  * per task — and every partition reader probes the shared HashSet.
-  * Values land in the exact domain the row probe extracts
-  * (boxed Long/Int/Double/String/Boolean; composite keys as Vector), so
-  * eager and lazy sets are interchangeable. */
+/** The single reader of merge-on-read delete state: equality-delete keys
+  * (driver-side for the eager path, executor-side for the over-ceiling
+  * sets), position-delete ordinals and the row-group layout of
+  * position-touched files. Each result is memoized per [[MoRFile]] in a
+  * per-entry LRU weighted by key count, so re-planning an unchanged
+  * snapshot reads nothing, a new delete commit reads only its own files
+  * once, and no read is a Spark job. Keys land in the exact domain the
+  * row probe extracts (boxed Long/Int/Double/String/Boolean; composite
+  * keys as Vector), so eager and executor-side sets are interchangeable. */
 private[graft] object MoRDeleteKeyLoader {
+  import org.apache.hadoop.conf.Configuration
+
+  /** Delete files read from storage, equality and position alike. */
+  private[graft] val fileLoads = new java.util.concurrent.atomic.AtomicLong(0L)
+  /** Executor-side key sets assembled: once per distinct (files, key
+    * columns) set per JVM, however many partitions probe it. */
   private[graft] val loads = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.HashSet[Any]]()
 
-  def set(ds: MoRDeleteSet): java.util.HashSet[Any] = {
-    val key = ds.keyFiles.mkString("|") + "#" + ds.keyNames.mkString(",")
-    // delete files are immutable (manifest commits never rewrite them),
-    // so path-keyed entries never go stale; bound the cache coarsely
-    if (cache.size > 64) cache.clear()
-    cache.computeIfAbsent(key, _ => load(ds))
-  }
+  /** Bound of each key memo, in keys: a boxed key costs ~16-40 bytes,
+    * so a full memo holds well under 100 MB. */
+  private val MemoKeys = 2000000L
 
-  private def load(ds: MoRDeleteSet): java.util.HashSet[Any] = {
-    loads.incrementAndGet(): Unit
-    val s = new java.util.HashSet[Any]()
-    val conf =
-      if (ds.conf == null) new org.apache.hadoop.conf.Configuration()
-      else ds.conf.value
-    ds.keyFiles.foreach { f =>
-      val rdr = org.apache.parquet.hadoop.ParquetReader.builder(
-        new org.apache.parquet.hadoop.example.GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(f)).withConf(conf).build()
-      try {
-        var g = rdr.read()
-        while (g != null) {
-          var anyNull = false
-          val vals = new Array[Any](ds.keyNames.length)
-          var i = 0
-          while (i < ds.keyNames.length && !anyNull) {
-            val nm = ds.keyNames(i)
-            // NULL delete keys erase nothing (the left-anti contract)
-            if (g.getFieldRepetitionCount(nm) == 0) anyNull = true
-            else vals(i) = ds.keyKinds(i) match {
-              case 0 => g.getLong(nm, 0)
-              case 1 => g.getInteger(nm, 0)
-              case 2 => g.getDouble(nm, 0)
-              case 3 => g.getString(nm, 0)
-              case 4 => g.getBoolean(nm, 0)
-            }
-            i += 1
-          }
-          if (!anyNull)
-            s.add(if (vals.length == 1) vals(0) else vals.toVector): Unit
-          g = rdr.read()
-        }
-      } finally rdr.close()
+  private val fileKeys =
+    new ManifestTable.LruMemo[(MoRFile, Seq[String], Seq[Int]), Array[Any]](
+      MemoKeys, _.length + 1L)
+  private val sets =
+    new ManifestTable.LruMemo[(Seq[MoRFile], Seq[String], Seq[Int]), java.util.HashSet[Any]](
+      MemoKeys, _.size + 1L)
+  private val positionMemo =
+    new ManifestTable.LruMemo[MoRFile, Map[String, Array[Long]]](
+      MemoKeys, _.valuesIterator.map(_.length.toLong).sum + 1L)
+  private val rowGroupMemo = new ManifestTable.LruMemo[MoRFile, Array[(Long, Long)]](65536)
+
+  /** The keys of one equality-delete file. NULL delete keys erase
+    * nothing (the left-anti contract), so they never enter. */
+  def keys(f: MoRFile, names: Array[String], kinds: Array[Int],
+           conf: => Configuration): Array[Any] =
+    fileKeys.getOrLoad((f, names.toSeq, kinds.toSeq)) {
+      val out = Array.newBuilder[Any]
+      records(f.path, conf) { g =>
+        if (names.forall(g.getFieldRepetitionCount(_) > 0))
+          out += (if (names.length == 1) value(g, names(0), kinds(0))
+                  else Vector.tabulate(names.length)(i => value(g, names(i), kinds(i))))
+      }
+      out.result()
     }
-    s
+
+  /** The executor-side probe set of an over-ceiling delete spec. */
+  def set(ds: MoRDeleteSet): java.util.HashSet[Any] =
+    sets.getOrLoad((ds.keyFiles.toSeq, ds.keyNames.toSeq, ds.keyKinds.toSeq)) {
+      loads.incrementAndGet(): Unit
+      val conf =
+        if (ds.conf == null) new Configuration() else ds.conf.value
+      val s = new java.util.HashSet[Any]()
+      ds.keyFiles.foreach(f =>
+        keys(f, ds.keyNames, ds.keyKinds, conf).foreach(k => s.add(k): Unit))
+      s
+    }
+
+  /** One position-delete file's deleted ordinals, by data file path
+    * (`file:` URIs normalized to plain paths). */
+  def positions(f: MoRFile, conf: => Configuration): Map[String, Array[Long]] =
+    positionMemo.getOrLoad(f) {
+      val byFile = scala.collection.mutable.HashMap.empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
+      records(f.path, conf) { g =>
+        if (g.getFieldRepetitionCount("file_path") > 0 && g.getFieldRepetitionCount("pos") > 0)
+          byFile.getOrElseUpdate(normPath(g.getString("file_path", 0)),
+            new scala.collection.mutable.ArrayBuilder.ofLong) += g.getLong("pos", 0)
+      }
+      byFile.map { case (p, b) => p -> b.result() }.toMap
+    }
+
+  /** (starting byte, row count) of each row group of a data file, from
+    * its parquet footer. */
+  def rowGroups(f: MoRFile, conf: => Configuration): Array[(Long, Long)] =
+    rowGroupMemo.getOrLoad(f) {
+      import scala.jdk.CollectionConverters._
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.path), conf))
+      try r.getFooter.getBlocks.asScala.toArray.map(b => (b.getStartingPos, b.getRowCount))
+      finally r.close()
+    }
+
+  def normPath(p: String): String =
+    if (p.startsWith("file:")) java.net.URI.create(p).getPath else p
+
+  private def value(g: org.apache.parquet.example.data.Group, nm: String, kind: Int): Any =
+    kind match {
+      case 0 =>
+        // an INT32 key column (a library delete of int keys) widens to
+        // the table's long domain, as the library read's join does
+        if (g.getType.getType(nm).asPrimitiveType.getPrimitiveTypeName ==
+            org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32)
+          g.getInteger(nm, 0).toLong
+        else g.getLong(nm, 0)
+      case 1 => g.getInteger(nm, 0)
+      case 2 => g.getDouble(nm, 0)
+      case 3 => g.getString(nm, 0)
+      case 4 => g.getBoolean(nm, 0)
+    }
+
+  private def records(path: String, conf: Configuration)(
+      each: org.apache.parquet.example.data.Group => Unit): Unit = {
+    fileLoads.incrementAndGet(): Unit
+    val rdr = org.apache.parquet.hadoop.ParquetReader.builder(
+      new org.apache.parquet.hadoop.example.GroupReadSupport(),
+      new org.apache.hadoop.fs.Path(path)).withConf(conf).build()
+    try {
+      var g = rdr.read()
+      while (g != null) { each(g); g = rdr.read() }
+    } finally rdr.close()
   }
 }
 
@@ -132,7 +201,6 @@ private[v2] final case class MoRGroupSpec(
     projection.length == readTypes.length &&
       projection.zipWithIndex.forall { case (p, i) => p == i }
   def hasKeys: Boolean = deleteSets.nonEmpty
-  def lazyKeys: Boolean = deleteSets.exists(_.keyFiles.nonEmpty)
 
   /** Executor-side probe sets, one per delete spec: scalar keys probe a
     * HashSet[Any] directly (no per-row allocation); composite keys probe
@@ -141,13 +209,8 @@ private[v2] final case class MoRGroupSpec(
   def buildSets(): Array[java.util.HashSet[Any]] = deleteSets.map { ds =>
     if (ds.keyFiles.nonEmpty) MoRDeleteKeyLoader.set(ds)
     else {
-      val s = new java.util.HashSet[Any](math.max(16, ds.keyRows.length * 2))
-      ds.keyRows.foreach { r =>
-        if (r.forall(_ != null)) {
-          val key: Any = if (r.length == 1) r(0) else r.toVector
-          s.add(key): Unit
-        }
-      }
+      val s = new java.util.HashSet[Any](math.max(16, ds.keys.length * 2))
+      ds.keys.foreach(k => s.add(k): Unit)
       s
     }
   }
@@ -166,9 +229,11 @@ private[v2] final case class MoRInputPartition(group: Int,
                                                posBase: Long = 0L)
     extends InputPartition
 
+/** Per-group inner factories; `None` where the group has no files of
+  * that kind (no partition ever asks for one). */
 private[v2] final class MoRReaderFactory(
-    innerFactories: Array[PartitionReaderFactory],
-    touchedFactories: Array[PartitionReaderFactory],
+    innerFactories: Array[Option[PartitionReaderFactory]],
+    touchedFactories: Array[Option[PartitionReaderFactory]],
     specs: Broadcast[Array[MoRGroupSpec]],
     posDeletes: Broadcast[Map[String, Array[Long]]],
     columnar: Boolean)
@@ -186,11 +251,11 @@ private[v2] final class MoRReaderFactory(
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[MoRInputPartition]
     val base = p.posPath match {
-      case None => innerFactories(p.group).createReader(p.inner)
+      case None => innerFactories(p.group).get.createReader(p.inner)
       // ordinal filter FIRST (it must see every physical row of the
       // file), key filter on whatever survives
       case Some(path) => new PosFilteringReader(
-        touchedFactories(p.group).createReader(p.inner),
+        touchedFactories(p.group).get.createReader(p.inner),
         posDeletes.value(path), p.posBase)
     }
     val spec = specs.value(p.group)
@@ -204,7 +269,7 @@ private[v2] final class MoRReaderFactory(
     val spec = specs.value(p.group)
     p.posPath match {
       case None =>
-        val base = innerFactories(p.group).createColumnarReader(p.inner)
+        val base = innerFactories(p.group).get.createColumnarReader(p.inner)
         // delete-free group with identity projection: zero-cost pass-through
         if (!spec.hasKeys && spec.identityProjection) base
         else new MoRColumnarReader(base, spec, null)
@@ -213,7 +278,7 @@ private[v2] final class MoRReaderFactory(
         val set = new java.util.HashSet[java.lang.Long](math.max(16, dels.length * 2))
         dels.foreach(d => set.add(d): Unit)
         new MoRColumnarReader(
-          touchedFactories(p.group).createColumnarReader(p.inner), spec, set,
+          touchedFactories(p.group).get.createColumnarReader(p.inner), spec, set,
           p.posBase)
     }
   }
@@ -455,12 +520,14 @@ private[v2] final class MoRColumnarReader(
   * are physical file positions (untouched by logical equality deletes),
   * and equality deletes scope by commit sequence exactly as in the
   * delete-free-file case, matching `ManifestTable.assemble`'s library
-  * semantics row for row. `dataPaths` backs
-  * [[GraftCatalog.scannedFiles]] pruning assertions. */
+  * semantics row for row. A group without plain (or without
+  * position-touched) files has no batch of that kind — no inner table,
+  * no reader factory. `dataPaths` backs [[GraftCatalog.scannedFiles]]
+  * pruning assertions. */
 private[v2] final class GraftMoRScan(spark: SparkSession,
                                      output: StructType,
-                                     groupBatches: Seq[Batch],
-                                     touchedBatches: Seq[Batch],
+                                     groupBatches: Seq[Option[Batch]],
+                                     touchedBatches: Seq[Option[Batch]],
                                      groupSpecs: Seq[MoRGroupSpec],
                                      posDeletes: Map[String, Array[Long]],
                                      val dataPaths: Seq[String],
@@ -484,7 +551,7 @@ private[v2] final class GraftMoRScan(spark: SparkSession,
       override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
     }
   override def description(): String =
-    s"GraftMoRScan(${groupBatches.length} delete-scope groups, " +
+    s"GraftMoRScan(${groupSpecs.length} delete-scope groups, " +
       s"${posDeletes.size} position-deleted files" +
       (if (posDeletes.nonEmpty)
         s", $pushedToTouched filters pushed to row-group-aligned " +
@@ -492,18 +559,18 @@ private[v2] final class GraftMoRScan(spark: SparkSession,
       else "") + ")"
   override def toBatch: Batch = new Batch {
     private lazy val innerFactories =
-      groupBatches.map(_.createReaderFactory()).toArray
+      groupBatches.map(_.map(_.createReaderFactory())).toArray
     private lazy val touchedFactories =
-      touchedBatches.map(_.createReaderFactory()).toArray
+      touchedBatches.map(_.map(_.createReaderFactory())).toArray
 
     private lazy val parts: Array[InputPartition] = {
       import org.apache.spark.sql.execution.datasources.FilePartition
       val out = Array.newBuilder[InputPartition]
       var idx = 0
-      groupBatches.zipWithIndex.foreach { case (b, gi) =>
-        b.planInputPartitions().foreach { p =>
+      groupSpecs.indices.foreach { gi =>
+        groupBatches(gi).foreach(_.planInputPartitions().foreach { p =>
           out += MoRInputPartition(gi, p); idx += 1
-        }
+        })
         // re-slice the group's pos-touched files along their ROW GROUP
         // boundaries (footer offsets): one partition per row group, each
         // carrying its starting ordinal. A byte range [start_g, start_g+1)
@@ -511,7 +578,8 @@ private[v2] final class GraftMoRScan(spark: SparkSession,
         // assigns each group to exactly one partition; pushed filters may
         // then skip whole groups (their partitions read nothing) while
         // every surviving partition counts ordinals from its own base.
-        val byFile = touchedBatches(gi).planInputPartitions().flatMap {
+        val byFile = touchedBatches(gi).fold(Array.empty[InputPartition])(
+            _.planInputPartitions()).flatMap {
           case fp: FilePartition => fp.files
           case other => sys.error(s"GraftMoRScan: unexpected partition $other")
         }.groupBy(f => f.filePath.toPath.toUri.getPath)
@@ -551,8 +619,8 @@ private[v2] final class GraftMoRScan(spark: SparkSession,
     // delete-carrying read keeps the batch path's decode throughput
     private lazy val columnar: Boolean = parts.forall {
       case p: MoRInputPartition => p.posPath match {
-        case None    => innerFactories(p.group).supportColumnarReads(p.inner)
-        case Some(_) => touchedFactories(p.group).supportColumnarReads(p.inner)
+        case None    => innerFactories(p.group).get.supportColumnarReads(p.inner)
+        case Some(_) => touchedFactories(p.group).get.supportColumnarReads(p.inner)
       }
       case _ => false
     }
