@@ -157,11 +157,10 @@ object ManifestTable {
     // Data files are immutable once written (the manifest IS the state),
     // but several commit verbs stat the same new file twice (a zero-row
     // filter, then the manifest line) and maintenance re-stats carried
-    // files — memoize per (path, length, mtime) so every footer is parsed
-    // once per content. The (length, mtime) key keeps a re-created scratch
-    // path from serving stale stats.
-    val f = new java.io.File(path)
-    val key = (path, f.length(), f.lastModified())
+    // files — memoize per [[FileId]] so every footer is parsed once per
+    // content. The (length, mtime) part keeps a re-created scratch path
+    // from serving stale stats.
+    val key = FileId.of(path)
     statsCache.get(key).getOrElse {
       // only SUCCESSFUL footer reads enter the memo: a transient read
       // error must not pin stats-free manifest lines for the rest of the
@@ -173,13 +172,29 @@ object ManifestTable {
     }
   }
 
+  /** A file as the per-file memos identify it: (path, length, mtime).
+    * Committed files are immutable and UUID-named; a file re-created at
+    * the same path with other bytes gets a new identity, so a memo hit
+    * is never stale. Keys [[fileStats]] and the merge-on-read delete
+    * state memos alike. */
+  private[graft] final case class FileId(path: String, length: Long, mtime: Long)
+
+  private[graft] object FileId {
+    def of(path: String): FileId = {
+      val f = new java.io.File(path)
+      FileId(path, f.length(), f.lastModified())
+    }
+  }
+
   /** Size-bounded LRU memo (access-order LinkedHashMap behind a lock).
     * Eviction is per-entry, oldest-accessed first — never a wholesale
     * clear, so a long-lived driver keeps its hot entries instead of
     * paying a full cold-start burst at the cap (ADVICE r16). `cap` bounds
-    * the total WEIGHT (one per entry by default); an entry heavier than
+    * the total WEIGHT (one per entry by default) and is read at every
+    * put, so a bound tied to a setting follows it; an entry heavier than
     * the whole cap is served but never kept. */
-  private[graft] final class LruMemo[K, V](cap: Long, weigh: V => Long = (_: V) => 1L) {
+  private[graft] final class LruMemo[K, V](cap: () => Long, weigh: V => Long) {
+    def this(entries: Long) = this(() => entries, (_: V) => 1L)
     private val m = new java.util.LinkedHashMap[K, V](64, 0.75f, true)
     private var total = 0L
     private val inflight = new java.util.concurrent.ConcurrentHashMap[K, AnyRef]()
@@ -187,12 +202,11 @@ object ManifestTable {
     def put(k: K, v: V): Unit = m.synchronized {
       val old = m.remove(k)
       if (old != null) total -= weigh(old)
+      val c = cap()
       val w = weigh(v)
-      if (w <= cap) {
-        m.put(k, v); total += w
-        val eldest = m.values().iterator()
-        while (total > cap) { total -= weigh(eldest.next()); eldest.remove() }
-      }
+      if (w <= c) { m.put(k, v); total += w }
+      val eldest = m.values().iterator()
+      while (total > c) { total -= weigh(eldest.next()); eldest.remove() }
     }
     /** The memoized value, or `load` run ONCE for concurrent callers of
       * the same key (the others wait and read the memo). */
@@ -205,7 +219,7 @@ object ManifestTable {
   }
 
   private val statsCache =
-    new LruMemo[(String, Long, Long), Map[String, (Double, Double)]](65536)
+    new LruMemo[FileId, Map[String, (Double, Double)]](65536)
 
   /** Pre-compute footer stats for many files CONCURRENTLY (they are
     * independent metadata reads); subsequent per-file [[fileStats]] /

@@ -1775,19 +1775,6 @@ class GraftScanBuilder(ident: String, spark: SparkSession,
         physFull, data, Nil, streamDir, sv, renames = renames)
   }
 
-  /** Ceiling on driver-resident delete keys per scan. Delete files are
-    * key-only (orders of magnitude smaller than the data they mask);
-    * below the ceiling they collect on the driver once and ship to
-    * executors inside the broadcast specs. ABOVE it (r16), equality
-    * deletes switch to the executor-side path: the specs carry the
-    * delete FILE PATHS and each executor JVM loads+caches the key set
-    * once ([[MoRDeleteKeyLoader]]) — the Iceberg posture, bounded by
-    * executor memory instead of a driver cliff. Position deletes keep
-    * the hard ceiling (their per-file ordinal maps drive row-group
-    * planning on the driver). Test override: -Dgraft.mor.maxDeleteKeys. */
-  private def MaxDeleteKeys: Int =
-    sys.props.get("graft.mor.maxDeleteKeys").map(_.toInt).getOrElse(5000000)
-
   /** Merge-on-read scan over a snapshot carrying delete entries of
     * EITHER kind (or both — the mixed chain, which until r10 session 3
     * refused with a compact pointer) — see [[GraftMoRScan]] for the
@@ -1799,6 +1786,7 @@ class GraftScanBuilder(ident: String, spark: SparkSession,
     val delEntries = entries.filter(_.deleteKey.isDefined)
     val delSeqs = delEntries.map(_.seq).distinct.sorted
     val data = prunedDataEntries
+    val ceiling = MoRDeleteKeyLoader.maxDeleteKeys
     // built only when some memo misses
     lazy val hc = spark.sessionState.newHadoopConf()
     def norm(p: String): String = MoRDeleteKeyLoader.normPath(p)
@@ -1809,11 +1797,11 @@ class GraftScanBuilder(ident: String, spark: SparkSession,
     val posDeletes: Map[String, Array[Long]] =
       if (posFiles.isEmpty) Map.empty
       else {
-        val perFile = posFiles.map(p => MoRDeleteKeyLoader.positions(MoRFile.of(p), hc))
+        val perFile = posFiles.map(p => MoRDeleteKeyLoader.positions(ManifestTable.FileId.of(p), hc))
         val n = perFile.iterator.flatMap(_.valuesIterator).map(_.length.toLong).sum
-        require(n <= MaxDeleteKeys,
+        require(n <= ceiling,
           s"GraftCatalog: $ident carries $n position deletes — " +
-            s"over the merge-on-read ceiling ($MaxDeleteKeys); compact the table")
+            s"over the merge-on-read ceiling ($ceiling); compact the table")
         perFile.flatten.groupBy(_._1)
           .map { case (f, ps) => f -> ps.flatMap(_._2).toArray }
       }
@@ -1829,7 +1817,7 @@ class GraftScanBuilder(ident: String, spark: SparkSession,
     // compacts them away).
     val rowGroups: Map[String, Array[(Long, Long)]] =
       data.map(e => norm(e.path)).filter(posDeletes.contains).distinct
-        .map(p => p -> MoRDeleteKeyLoader.rowGroups(MoRFile.of(p), hc)).toMap
+        .map(p => p -> MoRDeleteKeyLoader.rowGroups(ManifestTable.FileId.of(p), hc)).toMap
 
     def kindOf(col: String): Int = {
       val f = physFull.fields.find(_.name == col).getOrElse(sys.error(
@@ -1853,8 +1841,8 @@ class GraftScanBuilder(ident: String, spark: SparkSession,
       ManifestTable.fileStats(p).get("__rows").map(_._1.toLong).getOrElse(sys.error(
         s"GraftCatalog: cannot read the footer of delete file $p of $ident"))
     }.sum
-    val lazyEqKeys = eqDeleteRows > MaxDeleteKeys
-    val delFiles = delEntries.map(e => e.path -> MoRFile.of(e.path)).toMap
+    val lazyEqKeys = eqDeleteRows > ceiling
+    val delFiles = delEntries.map(e => e.path -> ManifestTable.FileId.of(e.path)).toMap
     val lazyConf =
       if (lazyEqKeys) new SerializableHadoopConf(spark.sessionState.newHadoopConf())
       else null
@@ -1879,7 +1867,7 @@ class GraftScanBuilder(ident: String, spark: SparkSession,
           val kinds = cols.map(kindOf)
           if (lazyEqKeys) (cols, kinds, Array.empty[Any], files)
           else (cols, kinds, files.flatMap(f => loaded.getOrElseUpdate(f.path,
-            MoRDeleteKeyLoader.keys(f, cols, kinds, hc))), Array.empty[MoRFile])
+            MoRDeleteKeyLoader.keys(f, cols, kinds, hc))), Array.empty[ManifestTable.FileId])
         }
       val keyCols = bySpec.flatMap(_._1).distinct
       val internal = StructType(required.fields ++
@@ -1926,9 +1914,9 @@ class GraftScanBuilder(ident: String, spark: SparkSession,
           "parquet.filter.record-level.enabled" -> "false")), spec)
     }
     val totalKeys = loaded.values.map(_.length.toLong).sum
-    require(totalKeys <= MaxDeleteKeys,
+    require(totalKeys <= ceiling,
       s"GraftCatalog: $ident carries $totalKeys equality-delete keys — " +
-        s"over the merge-on-read ceiling ($MaxDeleteKeys); compact the table")
+        s"over the merge-on-read ceiling ($ceiling); compact the table")
     // the reported read schema speaks LOGICAL names (rows are
     // positional; only Spark's attribute matching sees the names)
     new GraftMoRScan(spark, logicalRequired, built.map(_._1), built.map(_._2),

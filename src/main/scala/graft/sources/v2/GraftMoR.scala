@@ -43,22 +43,9 @@ private[v2] final case class MoRDeleteSet(
     // conf) instead of loaded keys, and executors load them once per JVM
     // through [[MoRDeleteKeyLoader]] — the Iceberg posture: delete-set
     // size is bounded by executor memory, never by the driver
-    keyFiles: Array[MoRFile] = Array.empty,
+    keyFiles: Array[ManifestTable.FileId] = Array.empty,
     keyNames: Array[String] = Array.empty,
     conf: SerializableHadoopConf = null)
-
-/** A file as the merge-on-read memos identify it: (path, length, mtime),
-  * the key [[ManifestTable.fileStats]] uses. Committed files are
-  * immutable and UUID-named; a file re-created at the same path with
-  * other bytes gets a new identity, so a memo hit is never stale. */
-private[graft] final case class MoRFile(path: String, length: Long, mtime: Long)
-
-private[graft] object MoRFile {
-  def of(path: String): MoRFile = {
-    val f = new java.io.File(path)
-    MoRFile(path, f.length(), f.lastModified())
-  }
-}
 
 /** Minimal serializable Hadoop Configuration carrier (Spark's own
   * wrapper is private[spark]): writes the conf's XML-backed key/value
@@ -80,14 +67,16 @@ private[v2] final class SerializableHadoopConf(
 /** The single reader of merge-on-read delete state: equality-delete keys
   * (driver-side for the eager path, executor-side for the over-ceiling
   * sets), position-delete ordinals and the row-group layout of
-  * position-touched files. Each result is memoized per [[MoRFile]] in a
-  * per-entry LRU weighted by key count, so re-planning an unchanged
-  * snapshot reads nothing, a new delete commit reads only its own files
-  * once, and no read is a Spark job. Keys land in the exact domain the
-  * row probe extracts (boxed Long/Int/Double/String/Boolean; composite
-  * keys as Vector), so eager and executor-side sets are interchangeable. */
+  * position-touched files. Each result is memoized per
+  * [[ManifestTable.FileId]] in a per-entry LRU, so re-planning an
+  * unchanged snapshot reads nothing, a new delete commit reads only its
+  * own files once, and no read is a Spark job. Keys land in the exact
+  * domain the row probe extracts (boxed Long/Int/Double/String/Boolean;
+  * composite keys as Vector), so eager and executor-side sets are
+  * interchangeable. */
 private[graft] object MoRDeleteKeyLoader {
   import org.apache.hadoop.conf.Configuration
+  import ManifestTable.{FileId, LruMemo}
 
   /** Delete files read from storage, equality and position alike. */
   private[graft] val fileLoads = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -95,50 +84,70 @@ private[graft] object MoRDeleteKeyLoader {
     * columns) set per JVM, however many partitions probe it. */
   private[graft] val loads = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Bound of each key memo, in keys: a boxed key costs ~16-40 bytes,
-    * so a full memo holds well under 100 MB. */
-  private val MemoKeys = 2000000L
+  /** Ceiling on the delete keys one scan holds on the driver (equality
+    * keys and position ordinals, each). Delete files are key-only, orders
+    * of magnitude smaller than the data they mask; below the ceiling
+    * their keys load on the driver and ship inside the broadcast specs.
+    * Above it equality deletes ship as FILES and each executor JVM loads
+    * the key set once ([[set]]) — the Iceberg posture, bounded by
+    * executor memory instead of a driver cliff — while position deletes
+    * refuse with a pointer to compact() (their per-file ordinal maps
+    * drive row-group planning on the driver). Test override:
+    * -Dgraft.mor.maxDeleteKeys. */
+  private[graft] def maxDeleteKeys: Long =
+    sys.props.get("graft.mor.maxDeleteKeys").map(_.toLong).getOrElse(5000000L)
 
-  private val fileKeys =
-    new ManifestTable.LruMemo[(MoRFile, Seq[String], Seq[Int]), Array[Any]](
-      MemoKeys, _.length + 1L)
+  // The driver-side memos are bounded, in keys, by the same ceiling: any
+  // one scan the ceiling admits fits whole, so its re-plans read nothing.
+  // Measured with Spark's SizeEstimator over 1 M-key delete files, a
+  // memoized key costs 28 bytes as a BIGINT and 60 bytes as a 10-char
+  // string, so a full key memo at the default ceiling holds ~140 MB of
+  // BIGINT keys; an executor-side set costs 60 bytes per BIGINT key.
+  private val fileKeys = new LruMemo[(FileId, Seq[String], Seq[Int]), Array[Any]](
+    () => maxDeleteKeys, ks => math.max(1L, ks.length.toLong))
+  private val positionMemo = new LruMemo[FileId, Map[String, Array[Long]]](
+    () => maxDeleteKeys, m => math.max(1L, m.valuesIterator.map(_.length.toLong).sum))
+  private val rowGroupMemo = new LruMemo[FileId, Array[(Long, Long)]](65536)
+  // executor-side sets exceed the ceiling by construction, so they are
+  // bounded by count: a set is never refused for its size, and every
+  // partition of a scan probes the one set its JVM assembled
   private val sets =
-    new ManifestTable.LruMemo[(Seq[MoRFile], Seq[String], Seq[Int]), java.util.HashSet[Any]](
-      MemoKeys, _.size + 1L)
-  private val positionMemo =
-    new ManifestTable.LruMemo[MoRFile, Map[String, Array[Long]]](
-      MemoKeys, _.valuesIterator.map(_.length.toLong).sum + 1L)
-  private val rowGroupMemo = new ManifestTable.LruMemo[MoRFile, Array[(Long, Long)]](65536)
+    new LruMemo[(Seq[FileId], Seq[String], Seq[Int]), java.util.HashSet[Any]](64)
 
-  /** The keys of one equality-delete file. NULL delete keys erase
-    * nothing (the left-anti contract), so they never enter. */
-  def keys(f: MoRFile, names: Array[String], kinds: Array[Int],
+  /** The keys of one equality-delete file, memoized. */
+  def keys(f: FileId, names: Array[String], kinds: Array[Int],
            conf: => Configuration): Array[Any] =
     fileKeys.getOrLoad((f, names.toSeq, kinds.toSeq)) {
       val out = Array.newBuilder[Any]
-      records(f.path, conf) { g =>
-        if (names.forall(g.getFieldRepetitionCount(_) > 0))
-          out += (if (names.length == 1) value(g, names(0), kinds(0))
-                  else Vector.tabulate(names.length)(i => value(g, names(i), kinds(i))))
-      }
+      eachKey(f, names, kinds, conf)(out += _)
       out.result()
     }
 
-  /** The executor-side probe set of an over-ceiling delete spec. */
+  /** The executor-side probe set of an over-ceiling delete spec, read
+    * straight from its files (not through the driver-side key memo). */
   def set(ds: MoRDeleteSet): java.util.HashSet[Any] =
     sets.getOrLoad((ds.keyFiles.toSeq, ds.keyNames.toSeq, ds.keyKinds.toSeq)) {
       loads.incrementAndGet(): Unit
       val conf =
         if (ds.conf == null) new Configuration() else ds.conf.value
       val s = new java.util.HashSet[Any]()
-      ds.keyFiles.foreach(f =>
-        keys(f, ds.keyNames, ds.keyKinds, conf).foreach(k => s.add(k): Unit))
+      ds.keyFiles.foreach(f => eachKey(f, ds.keyNames, ds.keyKinds, conf)(k => s.add(k): Unit))
       s
+    }
+
+  /** Every key of one equality-delete file. NULL delete keys erase
+    * nothing (the left-anti contract), so they never surface. */
+  private def eachKey(f: FileId, names: Array[String], kinds: Array[Int],
+                      conf: Configuration)(each: Any => Unit): Unit =
+    records(f.path, conf) { g =>
+      if (names.forall(g.getFieldRepetitionCount(_) > 0))
+        each(if (names.length == 1) value(g, names(0), kinds(0))
+             else Vector.tabulate(names.length)(i => value(g, names(i), kinds(i))))
     }
 
   /** One position-delete file's deleted ordinals, by data file path
     * (`file:` URIs normalized to plain paths). */
-  def positions(f: MoRFile, conf: => Configuration): Map[String, Array[Long]] =
+  def positions(f: FileId, conf: => Configuration): Map[String, Array[Long]] =
     positionMemo.getOrLoad(f) {
       val byFile = scala.collection.mutable.HashMap.empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
       records(f.path, conf) { g =>
@@ -151,7 +160,7 @@ private[graft] object MoRDeleteKeyLoader {
 
   /** (starting byte, row count) of each row group of a data file, from
     * its parquet footer. */
-  def rowGroups(f: MoRFile, conf: => Configuration): Array[(Long, Long)] =
+  def rowGroups(f: FileId, conf: => Configuration): Array[(Long, Long)] =
     rowGroupMemo.getOrLoad(f) {
       import scala.jdk.CollectionConverters._
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.sources.ManifestTable
-import graft.sources.v2.{MoRDeleteKeyLoader, MoRFile}
+import graft.sources.v2.MoRDeleteKeyLoader
 
 /** Merge-on-read delete state is memoized per delete file (path, length,
   * mtime): re-planning a keyed catalog table on an unchanged snapshot
@@ -127,7 +127,7 @@ class MoRDeleteMemoSpec extends SparkSpec {
     // a delete file re-created at the same path with other bytes is read
     // again: widen the newest delete file by ten more keys
     val target = newDeletes.head
-    val old = MoRFile.of(target)
+    val old = ManifestTable.FileId.of(target)
     val oldKeys = spark.read.parquet(target).as[Long].collect().toSet
     val extra = (300L until 310L).toSet
     val tmp = java.nio.file.Files.createTempDirectory("graft_mdm_rewrite").toString
@@ -137,7 +137,7 @@ class MoRDeleteMemoSpec extends SparkSpec {
       .find(_.getName.endsWith(".parquet")).get
     java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(target),
       java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-    assert(MoRFile.of(target) != old, "the rewrite must change the file's identity")
+    assert(ManifestTable.FileId.of(target) != old, "the rewrite must change the file's identity")
     val expected3 = expected2.filterNot(r => extra.contains(r._1))
     assert(rows(spark.sql(s"SELECT * FROM $t")) == expected3,
       "a replaced delete file must be reloaded, never served stale")
@@ -145,6 +145,53 @@ class MoRDeleteMemoSpec extends SparkSpec {
     try assert(rows(spark.sql(s"SELECT * FROM $t")) == expected3,
       "the executor-side sets must key on the file identity too")
     finally sys.props.remove("graft.mor.maxDeleteKeys"): Unit
+  }
+
+  test("over the ceiling, a many-partition scan assembles its key set once, however large") {
+    wh: Unit
+    spark.sql("CREATE TABLE gmdm.ns.big (k BIGINT, v BIGINT)")
+    val dir = s"$wh/ns/big"
+    ManifestTable.commit((1L to 4000L).map(i => (i, i * 7)).toDF("k", "v").repartition(8),
+      dir, append = true): Unit
+    ManifestTable.delete((1L to 2000L).filter(_ % 3 == 0).toDF("k"), dir, "k")
+    ManifestTable.delete((2001L to 4000L).filter(_ % 3 == 0).toDF("k"), dir, "k")
+    val expected = ManifestTable.read(spark, dir)
+      .select($"k", $"v").as[(Long, Long)].collect().toSet
+    assert(expected.size == 4000 - 1333)
+    def read() = spark.sql("SELECT k, v FROM gmdm.ns.big").as[(Long, Long)].collect().toSet
+    // the ceiling bounds the driver-side key memo too: a scan just under
+    // it stays whole in the memo, so its re-plan reads no delete file
+    sys.props("graft.mor.maxDeleteKeys") = "1400"
+    try {
+      assert(read() == expected)
+      val f0 = MoRDeleteKeyLoader.fileLoads.get()
+      assert(read() == expected)
+      assert(MoRDeleteKeyLoader.fileLoads.get() == f0,
+        "an eager scan the ceiling admits must re-plan from the memo")
+    } finally sys.props.remove("graft.mor.maxDeleteKeys"): Unit
+    // the ceiling of 64 keys also bounds the driver-side key memos, so
+    // the 1 333-key set is far heavier than any key-weighted memo bound
+    sys.props("graft.mor.maxDeleteKeys") = "64"
+    val maxBytes = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+    try {
+      val df = spark.sql("SELECT k, v FROM gmdm.ns.big")
+      assert(df.rdd.getNumPartitions >= 8, "the scan must span many partitions")
+      val (l0, f0) = (MoRDeleteKeyLoader.loads.get(), MoRDeleteKeyLoader.fileLoads.get())
+      assert(read() == expected)
+      assert(MoRDeleteKeyLoader.loads.get() - l0 == 1,
+        "one key spec over both delete files: one set per JVM, not one per partition")
+      assert(MoRDeleteKeyLoader.fileLoads.get() - f0 == 2,
+        "each delete file must be read once, not once per partition")
+      assert(spark.sql("SELECT k, v FROM gmdm.ns.big WHERE k > 100")
+        .as[(Long, Long)].collect().toSet == expected.filter(_._1 > 100))
+      assert(MoRDeleteKeyLoader.loads.get() - l0 == 1 &&
+        MoRDeleteKeyLoader.fileLoads.get() - f0 == 2,
+        "a repeat scan must reuse the JVM's set and read no delete file")
+    } finally {
+      spark.conf.set("spark.sql.files.maxPartitionBytes", maxBytes)
+      sys.props.remove("graft.mor.maxDeleteKeys"): Unit
+    }
   }
 
   test("INT delete keys on a BIGINT key column apply, eager and over the ceiling") {
