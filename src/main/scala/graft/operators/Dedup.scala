@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{ParityFunctions => PF}
 
@@ -137,7 +137,9 @@ object Dedup {
   /** [[connectedComponents]] plus per-iteration wall seconds — the scale
     * probe ([[graft.CCProbe]]) asserts iteration count stays within the
     * graph diameter bound and per-iteration cost stays flat (i.e. the
-    * persist/checkpoint discipline really does stop lineage growth). */
+    * persist/checkpoint discipline really does stop lineage growth).
+    * Throws IllegalStateException when round `maxIter` still changed a
+    * label: the labels have not converged. */
   def connectedComponentsStats(pairs: DataFrame, maxIter: Int = 20,
                                checkpointDir: Option[String] = None,
                                checkpointEvery: Int = 3): (DataFrame, List[Double]) = {
@@ -203,6 +205,12 @@ object Dedup {
       iter += 1
       iterSecs += (System.nanoTime() - t0) / 1e9
     }
+    // min-label propagation moves a label one hop per round, so a graph
+    // whose diameter exceeds the cap is still changing here — returning
+    // those labels would silently split real components
+    if (!done) throw new IllegalStateException(
+      s"connectedComponents: labels still changing after maxIter = $maxIter " +
+        "rounds (the graph's diameter exceeds the cap); raise maxIter")
     (labels, iterSecs.result())
   }
 

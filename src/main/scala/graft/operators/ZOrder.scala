@@ -29,7 +29,7 @@ object ZOrder {
 
   /** Scale an arbitrary numeric column into [0, 2^bits) using its global
     * min/max, carried as a broadcast 1-row join (no driver collect). */
-  private def scaled(df: DataFrame, c: String, bits: Int): Column = {
+  private def scaled(c: String, bits: Int): Column = {
     val lo = col(s"_min_$c")
     val hi = col(s"_max_$c")
     least(lit((1 << bits) - 1),
@@ -46,7 +46,7 @@ object ZOrder {
       min(col(colA)).as(s"_min_$colA"), max(col(colA)).as(s"_max_$colA"),
       min(col(colB)).as(s"_min_$colB"), max(col(colB)).as(s"_max_$colB"))
     val withZ = df.crossJoin(broadcast(stats))
-      .withColumn("_z", zValue(scaled(df, colA, bits), scaled(df, colB, bits), bits))
+      .withColumn("_z", zValue(scaled(colA, bits), scaled(colB, bits), bits))
     val parts = if (numPartitions > 0) numPartitions
       else df.sparkSession.sessionState.conf.numShufflePartitions
     withZ.repartitionByRange(parts, col("_z"))

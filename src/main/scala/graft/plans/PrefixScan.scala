@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Attribut
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.types.LongType
 
 /** Whole-operator implementation of the distributed prefix scan — the
   * custom-`LogicalPlan` + `SparkStrategy` + `SparkPlan` stack (extension

@@ -4107,7 +4107,7 @@ object WarehouseQueries {
   // to stats-overlapping files, and the commit replaces EXACTLY the
   // scanned set while every other line — data files with their stats,
   // delete entries — carries forward verbatim
-  // (ManifestTable.publishCowExpected). q360 keeps the degenerate shape
+  // (a ManifestTable.publish replace-set commit). q360 keeps the degenerate shape
   // (unprunable condition → full rewrite); this face pins the bounded
   // one: survivors > 0 AND rewritten ≪ total, hash-green across two
   // stages against the oracle's relational recompute.
@@ -5351,7 +5351,7 @@ object WarehouseQueries {
         "q387: main's content must be frozen during staging")
       val bv = ManifestTable.branchVersion(tdir, "stage")
       require(bv == 3, s"q387: two staged mutations expected, branch head v$bv")
-      val be = ManifestTable.sqlBranchEntriesAt(tdir, "stage", bv)
+      val be = ManifestTable.sqlEntriesAt(tdir, bv, ManifestTable.Ref.Branch("stage"))
       require(mainFiles.toSet.subsetOf(be.filter(_.isData).map(_.path).toSet),
         "q387: staging must rewrite ZERO pre-mutation files (pure deltas)")
       require(be.exists(_.deleteKey.isDefined),

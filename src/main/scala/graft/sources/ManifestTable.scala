@@ -36,6 +36,50 @@ object ManifestTable {
   final class CommitConflictException(msg: String, cause: Throwable = null)
     extends RuntimeException(msg, cause)
 
+  /** The manifest namespace a commit or read targets: main's
+    * `_manifests/`, or a branch's `_manifests/branch-<name>/`. The ref
+    * decides where manifests live, the head version, and the data
+    * directory a new version's files land under ([[nextCommit]]). */
+  sealed trait Ref
+  object Ref {
+    case object Main extends Ref
+    final case class Branch(name: String) extends Ref
+    def of(branch: Option[String]): Ref = branch.fold[Ref](Main)(Branch(_))
+  }
+
+  /** Where a commit's manifest starts: the previous version's lines
+    * (`Append`), nothing (`Empty`, an overwrite), or given lines carried
+    * verbatim (`Lines`: RTAS, rollback, fast-forward, clone, and the
+    * position-delete verbs, whose `P|` lines ride in here). Verbatim
+    * lines keep their stats segments and bucket tags: an RTAS swap
+    * re-opens none of the footers its stage commit already read. */
+  sealed trait Base
+  object Base {
+    case object Append extends Base
+    case object Empty extends Base
+    final case class Lines(lines: Seq[String]) extends Base
+    def of(append: Boolean): Base = if (append) Append else Empty
+  }
+
+  /** A data file entering the manifest. `extraStats` merge over its
+    * footer stats: manifest-only planning metadata such as the
+    * `_ptn_bucket_<col>` tag a bucketed writer knows for each file. */
+  final case class DataFile(path: String,
+                            extraStats: Map[String, (Double, Double)] = Map.empty)
+
+  /** One commit in the Iceberg/Delta add/remove action model. The new
+    * manifest is `base`, minus the data files in `replaced` (with their
+    * position deletes reconciled), plus `eqDeletes` (key column spec →
+    * equality-delete files, scoped to data committed before this
+    * version), plus `added` with fresh footer stats. `sidecars` are
+    * `v<N>.<kind>` files (bloom, ndv, hist, rw) written after the claim:
+    * a lost claim leaves no orphan sidecar. */
+  final case class CommitPlan(base: Base = Base.Append,
+                              replaced: Set[String] = Set.empty,
+                              added: Seq[DataFile] = Nil,
+                              eqDeletes: Option[(String, Seq[String])] = None,
+                              sidecars: Seq[(String, Seq[String])] = Nil)
+
   private def manifests(dir: String): Path = Paths.get(dir, "_manifests")
 
   /** Manifest version numbers present on disk, closing the directory
@@ -58,8 +102,43 @@ object ManifestTable {
     else versionsOnDisk(md).foldLeft(0)(math.max)
   }
 
-  private def manifestFiles(dir: String, v: Int): Seq[String] =
-    Files.readAllLines(manifests(dir).resolve(s"v$v.list")).asScala.toSeq
+  private def manifestFiles(dir: String, v: Int, ref: Ref = Ref.Main): Seq[String] =
+    linesIn(mdOf(dir, ref), v)
+
+  private def linesIn(md: Path, v: Int): Seq[String] =
+    Files.readAllLines(md.resolve(s"v$v.list")).asScala.toSeq
+
+  /** The manifest directory of `ref`; a branch must exist. */
+  private def mdOf(dir: String, ref: Ref): Path = ref match {
+    case Ref.Main => manifests(dir)
+    case Ref.Branch(name) =>
+      val md = branchMd(dir, name)
+      require(Files.isDirectory(md), s"no branch '$name' under $dir")
+      md
+  }
+
+  /** Head version of `ref`: main's current version (0 for a new table),
+    * or a branch's newest (its fork version until its first commit). */
+  private def headVersion(dir: String, ref: Ref): Int = ref match {
+    case Ref.Main => currentVersion(dir)
+    case Ref.Branch(_) => versionsOnDisk(mdOf(dir, ref)).max
+  }
+
+  /** The data directory version `v` of `ref` writes under. A branch's
+    * carries the branch nonce (`commit-<v>-<nonce>`): its bytes stay out
+    * of main's commit directories, and the version still parses as the
+    * entry sequence. */
+  private def commitDir(dir: String, ref: Ref, v: Int): String = ref match {
+    case Ref.Main => s"$dir/data/commit-$v"
+    case Ref.Branch(name) => s"$dir/data/commit-$v-${branchNonce(name)}"
+  }
+
+  /** `ref`'s next version and the data directory its files must land
+    * under — what a writer stages into before [[publish]]. */
+  def nextCommit(dir: String, ref: Ref): (Int, String) = {
+    val v = headVersion(dir, ref) + 1
+    (v, commitDir(dir, ref, v))
+  }
 
   /** Manifest line → (commit sequence, kind, data path, column stats).
     * Five line shapes, all newline-framed and `|`-separated — no JSON
@@ -222,9 +301,9 @@ object ManifestTable {
     new LruMemo[FileId, Map[String, (Double, Double)]](65536)
 
   /** Pre-compute footer stats for many files CONCURRENTLY (they are
-    * independent metadata reads); subsequent per-file [[fileStats]] /
-    * [[dataLine]] calls hit the memo. Commit-time stats for a 32-file
-    * commit drop from 32 sequential footer opens to one parallel burst. */
+    * independent metadata reads); subsequent per-file [[fileStats]]
+    * calls hit the memo. Commit-time stats for a 32-file commit drop
+    * from 32 sequential footer opens to one parallel burst. */
   private def warmFileStats(paths: Iterable[String]): Unit = {
     val distinct = paths.toSeq.distinct
     if (distinct.sizeIs > 1)
@@ -232,11 +311,29 @@ object ManifestTable {
         .parallel().forEach(p => fileStats(p): Unit)
   }
 
-  /** Manifest lines for a batch of plain data files: one parallel
-    * footer-stat burst, then order-preserving line construction. */
-  private def dataLines(files: Seq[String]): Seq[String] = {
+  /** The parquet files directly under `dir`, absolute and sorted. */
+  private[graft] def parquetFiles(dir: String): Seq[String] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).sorted
+
+  /** Write `df` under `dir` (mode overwrite: a crashed attempt's
+    * leftovers are rewritten) and return the files it wrote. */
+  private def stage(df: DataFrame, dir: String): Seq[String] = {
+    df.write.mode("overwrite").parquet(dir)
+    parquetFiles(dir)
+  }
+
+  /** `files` without the zero-row ones: a rewrite whose every row was
+    * deleted, or a predicate matching nothing, writes empty files that
+    * would only pin a scan split (or, as delete files, the merge-on-read
+    * path) for nothing. */
+  private[graft] def nonEmptyFiles(files: Seq[String]): Seq[String] = {
     warmFileStats(files)
-    files.map(f => dataLine(f))
+    files.filterNot(f => fileStats(f).get("__rows").exists(_._1 == 0))
+  }
+
+  private[graft] def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).toSeq.flatten.foreach(rmTree); f.delete(): Unit
   }
 
   /** One immutable ParquetReadOptions shared by every local footer read:
@@ -321,125 +418,112 @@ object ManifestTable {
       } finally rd.close()
     }.toOption
 
-  /** A data file's manifest line: `F|path|stats[|blooms]` when the footer
-    * yields usable stats or the commit built blooms, the bare legacy path
-    * otherwise. */
-  private def dataLine(path: String,
-                       blooms: Map[String, Array[Long]] = Map.empty,
-                       extraStats: Map[String, (Double, Double)] = Map.empty): String = {
-    val st = fileStats(path) ++ extraStats
-    if (st.isEmpty && blooms.isEmpty) path
-    else {
-      val statSeg =
-        if (st.isEmpty) "-"
-        else st.toSeq.sortBy(_._1)
-          .map { case (n, (lo, hi)) => s"$n:$lo:$hi" }.mkString(";")
-      val bloomSeg =
-        if (blooms.isEmpty) ""
-        else "|" + blooms.toSeq.sortBy(_._1).map { case (c, ws) =>
-          c + ":" + ws.map(w => f"$w%016x").mkString }.mkString(";")
-      "F|" + path + "|" + statSeg + bloomSeg
-    }
+  /** `c:min:max;…` — a manifest line's stats segment, `-` when empty. */
+  private def statSeg(st: Map[String, (Double, Double)]): String =
+    if (st.isEmpty) "-"
+    else st.toSeq.sortBy(_._1)
+      .map { case (n, (lo, hi)) => s"$n:$lo:$hi" }.mkString(";")
+
+  /** A data file's manifest line: `F|path|stats` when the footer (or the
+    * writer's extra stats) yields any, the bare legacy path otherwise. */
+  private def dataLine(f: DataFile): String = {
+    val st = fileStats(f.path) ++ f.extraStats
+    if (st.isEmpty) f.path else "F|" + f.path + "|" + statSeg(st)
   }
 
-  /** Publish ALREADY-WRITTEN files at EXACTLY version `v`, each with
-    * caller-supplied EXTRA manifest stats merged over the footer's — the
-    * bucketed write's landing verb: the writer KNOWS each staged file's
-    * bucket id and records it as a `_ptn_bucket_<col>` stats entry
-    * (manifest-only planning metadata: no physical column, and the
-    * key-grouped scan + hidden-partition pruning both read it). */
-  def publishTaggedExpected(dir: String, v: Int,
-                            files: Seq[(String, Map[String, (Double, Double)])],
-                            append: Boolean): Int = {
-    val cur = currentVersion(dir)
-    if (v != cur + 1)
+  /** A position-delete file's line. Its footer stats ride along (`__rows`
+    * above all): positions are exact-count deletions, so a pos-only
+    * snapshot keeps zero-IO COUNT(*) — see [[countStar]]. */
+  private def posDeleteLine(path: String): String =
+    s"P|$path|${statSeg(fileStats(path))}"
+
+  /** The one commit verb: land `plan` as EXACTLY version `v` of `ref`, or
+    * fail without publishing anything. `v` must be the ref's next version
+    * — a writer that planned against an older head gets
+    * [[CommitConflictException]] here — and the link-CAS in
+    * [[claimManifestIn]] is the atomic create: if a concurrent writer
+    * claimed `v<v>.list` first, the claim throws and this commit's staged
+    * files stay unreferenced (readers resolve manifests, never listings),
+    * so the conflict is detected BEFORE any state becomes visible. Every
+    * DSv2 writer (batch, streaming, delta, copy-on-write; main or a WAP
+    * branch) and every RTAS commits through here. Returns `v`. */
+  def publish(dir: String, ref: Ref, v: Int, plan: CommitPlan): Int = {
+    val head = headVersion(dir, ref)
+    if (v != head + 1)
       throw new CommitConflictException(
-        s"publishTaggedExpected: version $v is not next (current $cur) — concurrent writer")
-    warmFileStats(files.map(_._1))
-    val lines = (if (append && v > 1) manifestFiles(dir, v - 1) else Seq.empty) ++
-      files.sortBy(_._1).map { case (f, ex) => dataLine(f, extraStats = ex) }
-    claimManifest(dir, v, lines)
+        s"publish: version $v is not next on $ref of $dir (head $head) — concurrent writer")
+    land(dir, ref, v, plan)
   }
+
+  /** [[publish]] without the head check, for verbs that derived `v` from
+    * the head themselves a moment earlier (the claim still refuses a
+    * taken version). Prior lines carry forward verbatim; new files enter
+    * WITH footer stats — written once, at the only moment the file is
+    * new. */
+  private def land(dir: String, ref: Ref, v: Int, plan: CommitPlan): Int = {
+    val md = mdOf(dir, ref)
+    val base = plan.base match {
+      case Base.Append => if (v > 1) linesIn(md, v - 1) else Seq.empty
+      case Base.Empty => Seq.empty
+      case Base.Lines(lines) => lines
+    }
+    val kept =
+      if (plan.replaced.isEmpty) base
+      else reconcilePosDeletes(base.filter { l =>
+        val e = parseEntry(l)
+        !(e.isData && plan.replaced.contains(e.path))
+      }, plan.replaced, commitDir(dir, ref, v))
+    val dels = plan.eqDeletes.toSeq.flatMap { case (keyCol, files) =>
+      require(v > 1, s"publish: equality deletes with no committed data under $dir")
+      val cols = delKeyCols(keyCol)
+      require(cols.nonEmpty && cols.forall(c => !c.exists("|;:".contains(_))),
+        s"publish: illegal delete key spec '$keyCol'")
+      files.sorted.map(f => s"D|$keyCol|$f")
+    }
+    warmFileStats(plan.added.map(_.path))
+    val adds = plan.added.sortBy(_.path).map(dataLine)
+    claimManifestIn(md, v, kept ++ dels ++ adds)
+    plan.sidecars.foreach { case (kind, lines) =>
+      val tmp = md.resolve(s".v$v.$kind.tmp")
+      Files.write(tmp, lines.asJava)
+      Files.move(tmp, md.resolve(s"v$v.$kind"),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
+    }
+    v
+  }
+
+  /** Stage `df` under `ref`'s next commit directory and land it with
+    * `plan` as the next version. */
+  private def commitDf(df: DataFrame, dir: String, ref: Ref, plan: CommitPlan): Int = {
+    val (v, dataDir) = nextCommit(dir, ref)
+    land(dir, ref, v, plan.copy(added = stage(df, dataDir).map(DataFile(_))))
+  }
+
+  /** The `dataChange=false` marker sidecar — see [[rewriteVersions]]. */
+  private val RewriteMarker = Seq("rw" -> Seq("rewrite"))
 
   /** Commit `df` as the next version. Returns the new version number.
     * `sized = true` opts into [[SizedWriter.sizeEstimated]] file sizing
     * (callers that pin an explicit layout — `repartition(8)`,
     * `repartitionByRange` clustering — keep the default and own it). */
   def commit(df: DataFrame, dir: String, append: Boolean,
-             sized: Boolean = false): Int = {
-    val v = currentVersion(dir) + 1
-    val dataDir = s"$dir/data/commit-$v"
-    val w = if (sized) SizedWriter.sizeEstimated(df) else df
-    w.write.mode("overwrite").parquet(dataDir)
-    val newFiles = Option(new java.io.File(dataDir).listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).sorted
-    publishAt(dir, v, newFiles, append)
-  }
-
-  /** Publish ALREADY-WRITTEN data files as the next version — the commit
-    * half of the protocol, shared by [[commit]] and the DSv2 batch writer
-    * (executors stage files, exactly one driver-side publish makes them
-    * visible). Returns the committed version. */
-  def publish(dir: String, files: Seq[String], append: Boolean): Int =
-    publishAt(dir, currentVersion(dir) + 1, files.sorted, append)
+             sized: Boolean = false): Int =
+    commitDf(if (sized) SizedWriter.sizeEstimated(df) else df, dir, Ref.Main,
+      CommitPlan(Base.of(append)))
 
   /** Commit `df` at EXACTLY version `v` (or fail without publishing):
     * the idempotent-writer primitive. Staged data goes under the target
     * version's own directory with mode=overwrite, so a CRASHED previous
     * attempt's leftovers are simply rewritten, and the no-replace
-    * manifest rename is the single atomic commit point. A concurrent or
+    * manifest claim is the single atomic commit point. A concurrent or
     * replayed writer claiming the same `v` fails the CAS with its files
     * unreferenced — which is exactly what lets a streaming sink map
     * batchId → version deterministically and treat "version already
     * exists" as "this batch already committed" (exactly-once without a
     * separate batch ledger). */
-  def commitAt(df: DataFrame, dir: String, v: Int, append: Boolean): Int = {
-    val dataDir = s"$dir/data/commit-$v"
-    df.write.mode("overwrite").parquet(dataDir)
-    val newFiles = Option(new java.io.File(dataDir).listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).sorted
-    publishExpected(dir, v, newFiles, append)
-  }
-
-  /** Publish at EXACTLY version `v`, or fail without publishing anything.
-    * The no-replace manifest rename in [[publishAt]] is the atomic create:
-    * if a concurrent writer already claimed `v<v>.list`, the move throws
-    * and the caller's files stay unreferenced (invisible to readers) —
-    * the conflict is detected BEFORE any state becomes visible, not after.
-    * This is the CAS the DSv2 batch writer commits through. */
-  def publishExpected(dir: String, v: Int, files: Seq[String],
-                      append: Boolean): Int = {
-    val cur = currentVersion(dir)
-    if (v != cur + 1)
-      throw new CommitConflictException(
-        s"publishExpected: version $v is not next (current $cur) — concurrent writer")
-    publishAt(dir, v, files.sorted, append) // link-CAS conflicts throw CommitConflictException
-  }
-
-  /** Publish a full replacement snapshot at exactly version `v` from
-    * pre-built manifest LINES — stats segments and bucket tags carried
-    * VERBATIM. The atomic-RTAS commit publishes through this: the staged
-    * table's manifest already holds each file's footer stats (and, for
-    * bucketed layouts, its `_ptn_bucket_*` tag), so re-deriving them here
-    * would re-open every footer for information the stage commit already
-    * paid for — at 100 TB, that is a second full round of metadata IO. */
-  def publishLinesExpected(dir: String, v: Int, lines: Seq[String]): Int = {
-    val cur = currentVersion(dir)
-    if (v != cur + 1)
-      throw new CommitConflictException(
-        s"publishLinesExpected: version $v is not next (current $cur) — concurrent writer")
-    claimManifest(dir, v, lines.sorted)
-  }
-
-  private def publishAt(dir: String, v: Int, newFiles: Seq[String],
-                        append: Boolean): Int = {
-    // the new files enter the manifest WITH footer stats (file-skipping
-    // metadata); prior lines carry forward verbatim — stats are written
-    // once, at the only moment the file is new
-    val all = (if (append && v > 1) manifestFiles(dir, v - 1) else Seq.empty) ++
-      dataLines(newFiles)
-    claimManifest(dir, v, all)
-  }
+  def commitAt(df: DataFrame, dir: String, v: Int, append: Boolean): Int =
+    publish(dir, Ref.Main, v, CommitPlan(Base.of(append),
+      added = stage(df, commitDir(dir, Ref.Main, v)).map(DataFile(_))))
 
   /** Atomically claim `v<v>.list` with `lines` — the ONE code path every
     * commit kind publishes through. Write-then-LINK: the manifest appears
@@ -454,10 +538,7 @@ object ManifestTable {
     * interleave writes into one file. (On an object store this maps to a
     * conditional PUT / If-None-Match; on HDFS, to create-no-overwrite —
     * same single-arbiter contract.) */
-  private def claimManifest(dir: String, v: Int, lines: Seq[String]): Int =
-    claimManifestIn(manifests(dir), v, lines)
-
-  private def claimManifestIn(md: Path, v: Int, lines: Seq[String]): Int = {
+  private def claimManifestIn(md: Path, v: Int, lines: Seq[String]): Unit = {
     Files.createDirectories(md)
     val tmp = md.resolve(
       s".v$v.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
@@ -476,7 +557,6 @@ object ManifestTable {
     try Files.write(md.resolve(s"v$v.ts"),
       Seq(System.currentTimeMillis().toString).asJava): Unit
     catch { case _: java.io.IOException => }
-    v
   }
 
   /** How many md5-derived bit positions a manifest bloom sets/probes per
@@ -511,13 +591,12 @@ object ManifestTable {
     * Commits that DEPEND on the base snapshot (overwrite/compaction,
     * sequence-scoped deletes) must NOT blind-retry — a foreign commit
     * may have changed what they read; they keep the loud-abort contract
-    * ([[publishExpected]]/[[delete]]'s CAS failure), and the caller
+    * ([[publish]]/[[delete]]'s CAS failure), and the caller
     * re-reads and re-derives. Returns the committed version. */
   def appendOptimistic(df: DataFrame, dir: String, maxAttempts: Int = 10): Int = {
     val id = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    val stage = s"$dir/staging/opt-$id"
-    df.write.mode("overwrite").parquet(stage)
-    var cur = Paths.get(stage)
+    var cur = Paths.get(s"$dir/staging/opt-$id")
+    stage(df, cur.toString): Unit
     var attempt = 0
     while (attempt < maxAttempts) {
       val v = currentVersion(dir) + 1
@@ -525,9 +604,8 @@ object ManifestTable {
       Files.createDirectories(target.getParent)
       Files.move(cur, target)
       cur = target
-      val files = Option(target.toFile.listFiles()).toSeq.flatten
-        .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).sorted
-      try return publishExpected(dir, v, files, append = v > 1)
+      try return publish(dir, Ref.Main, v,
+        CommitPlan(added = parquetFiles(target.toString).map(DataFile(_))))
       catch { case _: CommitConflictException => attempt += 1 }
     }
     throw new CommitConflictException(
@@ -555,11 +633,8 @@ object ManifestTable {
                       bloomCols: Seq[String], bits: Int = 16384): Int = {
     require(bits % 64 == 0, "commitWithBloom: bits must be a multiple of 64")
     require(bloomCols.nonEmpty, "commitWithBloom: no bloom columns given")
-    val v = currentVersion(dir) + 1
-    val dataDir = s"$dir/data/commit-$v"
-    df.write.mode("overwrite").parquet(dataDir)
-    val newFiles = Option(new java.io.File(dataDir).listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).sorted
+    val (v, dataDir) = nextCommit(dir, Ref.Main)
+    val newFiles = stage(df, dataDir)
     import org.apache.spark.sql.functions._
     val spark = df.sparkSession
     val masks = typedLit(Array.tabulate(64)(1L << _).toSeq)
@@ -572,26 +647,18 @@ object ManifestTable {
       .groupBy(col("_f"), col("_c"), shiftright(col("_p"), 6).cast("int").as("_w"))
       .agg(sum(element_at(masks, (col("_p") % 64).cast("int") + 1)).as("_m"))
       .collect()
-    val blooms: Map[String, Map[String, Array[Long]]] = words
-      .groupBy(r => new java.net.URI(r.getString(0)).getPath)
-      .map { case (path, rows) =>
-        path -> rows.groupBy(_.getString(1)).map { case (c, rs) =>
-          val arr = new Array[Long](bits / 64)
-          rs.foreach(r => arr(r.getInt(2)) = r.getLong(3))
-          c -> arr
-        }
+    // one sidecar line per (file, column): `path|col:<hex words>`
+    val lines = words
+      .groupBy(r => (new java.net.URI(r.getString(0)).getPath, r.getString(1)))
+      .toSeq.sortBy(_._1).map { case ((path, c), rs) =>
+        val arr = new Array[Long](bits / 64)
+        rs.foreach(r => arr(r.getInt(2)) = r.getLong(3))
+        s"$path|$c:${arr.map(w => f"$w%016x").mkString}"
       }
-    val committed = publishAt(dir, v, newFiles, append)
-    // sidecar AFTER the manifest claim: a conflict leaves no orphan, and
-    // a reader racing the sidecar write just scans conservatively
-    val lines = blooms.toSeq.sortBy(_._1).flatMap { case (path, byCol) =>
-      byCol.toSeq.sortBy(_._1).map { case (c, ws) =>
-        s"$path|$c:${ws.map(w => f"$w%016x").mkString}" }
-    }
-    val tmp = manifests(dir).resolve(s".v$committed.bloom.tmp")
-    Files.write(tmp, lines.asJava)
-    Files.move(tmp, manifests(dir).resolve(s"v$committed.bloom")): Unit
-    committed
+    // the sidecar lands after the manifest claim: a conflict leaves no
+    // orphan, and a reader racing the sidecar write scans conservatively
+    land(dir, Ref.Main, v, CommitPlan(Base.of(append),
+      added = newFiles.map(DataFile(_)), sidecars = Seq("bloom" -> lines)))
   }
 
   /** path → col → bloom words, merged from the `.bloom` sidecars of the
@@ -671,16 +738,12 @@ object ManifestTable {
     * commit materializes the merged read. */
   def delete(keys: DataFrame, dir: String, keyCol: String,
              sized: Boolean = false): Int = {
-    val v = currentVersion(dir) + 1
+    val (v, dataDir) = nextCommit(dir, Ref.Main)
     require(v > 1, s"ManifestTable.delete: no committed data under $dir")
-    val dataDir = s"$dir/data/commit-$v"
     val distinctKeys = keys.select(keyCol).distinct()
-    val w = if (sized) SizedWriter.sizeEstimated(distinctKeys) else distinctKeys
-    w.write.mode("overwrite").parquet(dataDir)
-    val delFiles = Option(new java.io.File(dataDir).listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(".parquet"))
-      .map(f => s"D|$keyCol|${f.getAbsolutePath}").sorted
-    claimManifest(dir, v, manifestFiles(dir, v - 1) ++ delFiles)
+    val delFiles =
+      stage(if (sized) SizedWriter.sizeEstimated(distinctKeys) else distinctKeys, dataDir)
+    land(dir, Ref.Main, v, CommitPlan(eqDeletes = Some(keyCol -> delFiles)))
   }
 
   /** MERGE INTO (merge-on-read): upsert every `updates` row by `keyCol`
@@ -699,23 +762,17 @@ object ManifestTable {
     * hold by construction of the commit protocol. Returns the committed
     * version. */
   def merge(updates: DataFrame, dir: String, keyCol: String): Int = {
-    val v = currentVersion(dir) + 1
+    val (v, dataDir) = nextCommit(dir, Ref.Main)
     require(v > 1, s"ManifestTable.merge: no committed data under $dir")
-    val dataDir = s"$dir/data/commit-$v"
     // deltas are the small-files hot spot (a daily keyed update is tiny
     // relative to the table, and its source frame often carries the
     // session's full partition count): size-estimate the layout — large
     // deltas pass through untouched (files >= partitions)
-    SizedWriter.sizeEstimated(updates)
-      .write.mode("overwrite").parquet(s"$dataDir/rows")
-    SizedWriter.sizeEstimated(updates.select(keyCol).distinct())
-      .write.mode("overwrite").parquet(s"$dataDir/del")
-    def files(sub: String): Seq[String] =
-      Option(new java.io.File(s"$dataDir/$sub").listFiles()).toSeq.flatten
-        .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).sorted
-    val lines = files("del").map(f => s"D|$keyCol|$f") ++
-      dataLines(files("rows"))
-    claimManifest(dir, v, manifestFiles(dir, v - 1) ++ lines)
+    val rows = stage(SizedWriter.sizeEstimated(updates), s"$dataDir/rows")
+    val dels = stage(SizedWriter.sizeEstimated(updates.select(keyCol).distinct()),
+      s"$dataDir/del")
+    land(dir, Ref.Main, v, CommitPlan(added = rows.map(DataFile(_)),
+      eqDeletes = Some(keyCol -> dels)))
   }
 
   /** Read a snapshot; `version = -1` (default) reads the latest. Replays
@@ -726,11 +783,11 @@ object ManifestTable {
     * surviving delete commit (compaction collapses the chain). A
     * delete-free manifest takes the plain multi-path scan. */
   def read(spark: SparkSession, dir: String, version: Int = -1,
-           tableSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
-    val v = if (version > 0) version else currentVersion(dir)
+           tableSchema: Option[org.apache.spark.sql.types.StructType] = None,
+           ref: Ref = Ref.Main): DataFrame = {
+    val v = if (version > 0) version else headVersion(dir, ref)
     require(v > 0, s"ManifestTable.read: no committed version under $dir")
-    assemble(spark, manifestFiles(dir, v).map(parseEntry), dir,
+    assemble(spark, manifestFiles(dir, v, ref).map(parseEntry), dir,
       withMeta = false, tableSchema = tableSchema)
   }
 
@@ -747,9 +804,8 @@ object ManifestTable {
                 lo: Double, hi: Double, version: Int = -1): DataFrame = {
     val v = if (version > 0) version else currentVersion(dir)
     require(v > 0, s"ManifestTable.readWhere: no committed version under $dir")
-    val entries = manifestFiles(dir, v).map(parseEntry).filter { e =>
-      !e.isData || e.stats.get(col).forall { case (mn, mx) => mx >= lo && mn <= hi }
-    }
+    val entries = manifestFiles(dir, v).map(parseEntry)
+      .filter(e => !e.isData || overlaps(e.stats, Map(col -> (lo, hi))))
     assemble(spark, entries, dir, withMeta = false)
   }
 
@@ -760,9 +816,7 @@ object ManifestTable {
                 version: Int = -1): (Int, Int) = {
     val v = if (version > 0) version else currentVersion(dir)
     val datas = manifestFiles(dir, v).map(parseEntry).filter(_.isData)
-    val kept = datas.count(_.stats.get(col).forall {
-      case (mn, mx) => mx >= lo && mn <= hi })
-    (kept, datas.size)
+    (datas.count(e => overlaps(e.stats, Map(col -> (lo, hi)))), datas.size)
   }
 
   /** Metadata-only COUNT(*): the snapshot's row count summed from the
@@ -838,20 +892,6 @@ object ManifestTable {
     }
   }
 
-  /** (isData, path, stats) of the entries visible at `v` — the planning
-    * surface the SQL catalog ([[graft.sources.v2.GraftCatalog]]) consumes:
-    * it prunes paths against the stats and refuses delete entries. */
-  private[sources] def entriesAt(dir: String, v: Int)
-      : Seq[(Boolean, String, Map[String, (Double, Double)])] =
-    manifestFiles(dir, v).map(parseEntry).map(e => (e.isData, e.path, e.stats))
-
-  /** [[entriesAt]] for a branch snapshot — the catalog's
-    * `.option("branch", name)` read path. */
-  private[sources] def branchEntriesAt(dir: String, name: String, v: Int)
-      : Seq[(Boolean, String, Map[String, (Double, Double)])] =
-    Files.readAllLines(branchMd(dir, name).resolve(s"v$v.list")).asScala.toSeq
-      .map(parseEntry).map(e => (e.isData, e.path, e.stats))
-
   /** The SQL face's full view of one manifest entry — what
     * [[graft.sources.v2.GraftScanBuilder]] needs to assemble a
     * merge-on-read scan: the commit sequence (equality deletes scope to
@@ -861,65 +901,10 @@ object ManifestTable {
       posDelete: Boolean, path: String, stats: Map[String, (Double, Double)]) {
     def isData: Boolean = deleteKey.isEmpty && !posDelete
   }
-  private[graft] def sqlEntriesAt(dir: String, v: Int): Seq[SqlEntry] =
-    manifestFiles(dir, v).map(parseEntry)
+  private[graft] def sqlEntriesAt(dir: String, v: Int,
+                                  ref: Ref = Ref.Main): Seq[SqlEntry] =
+    manifestFiles(dir, v, ref).map(parseEntry)
       .map(e => SqlEntry(e.seq, e.deleteKey, e.posDelete, e.path, e.stats))
-  private[graft] def sqlBranchEntriesAt(dir: String, name: String,
-                                        v: Int): Seq[SqlEntry] =
-    Files.readAllLines(branchMd(dir, name).resolve(s"v$v.list")).asScala.toSeq
-      .map(parseEntry)
-      .map(e => SqlEntry(e.seq, e.deleteKey, e.posDelete, e.path, e.stats))
-
-  /** Publish ONE delta commit — equality-deletes of `keyCol` paired with
-    * appended row files — at EXACTLY version `v` (the [[merge]] manifest
-    * shape under the [[publishExpected]] CAS). This is the landing verb
-    * of the SupportsDelta SQL UPDATE/MERGE path: the delete files scope
-    * to data committed strictly before `v`, the row files carry seq `v`,
-    * so matched keys are replaced and the delta's own re-inserts survive
-    * — O(|delta|) with zero target-file rewrites. */
-  def publishDeltaExpected(dir: String, v: Int, keyCol: String,
-                           delFiles: Seq[String], rowFiles: Seq[String]): Int = {
-    val cur = currentVersion(dir)
-    if (v != cur + 1)
-      throw new CommitConflictException(
-        s"publishDeltaExpected: version $v is not next (current $cur) — concurrent writer")
-    require(v > 1, s"publishDeltaExpected: no committed data under $dir")
-    val cols = delKeyCols(keyCol)
-    require(cols.nonEmpty && cols.forall(c => !c.exists("|;:".contains(_))),
-      s"publishDeltaExpected: illegal delete key spec '$keyCol'")
-    val lines = manifestFiles(dir, v - 1) ++
-      delFiles.sorted.map(f => s"D|$keyCol|$f") ++
-      dataLines(rowFiles.sorted)
-    claimManifest(dir, v, lines)
-  }
-
-  /** Publish a GROUP copy-on-write commit at EXACTLY version `v`: the
-    * data files in `replaced` leave the manifest, `newFiles` (their
-    * rewritten content plus any inserts) enter with seq `v`, and every
-    * other line — untouched data files WITH their stats, delete entries
-    * still scoping surviving data — carries forward verbatim. This is
-    * the landing verb of the bounded group-based SQL UPDATE/MERGE: the
-    * scan reads only groups that may contain matching rows (static
-    * stats pruning + runtime group filtering), and the commit replaces
-    * exactly what the scan produced — Iceberg's copy-on-write contract.
-    * `replaced` = every scanned file, so an unpruned scan degenerates to
-    * the full overwrite this verb replaced. */
-  def publishCowExpected(dir: String, v: Int, replaced: Set[String],
-                         newFiles: Seq[String]): Int = {
-    val cur = currentVersion(dir)
-    if (v != cur + 1)
-      throw new CommitConflictException(
-        s"publishCowExpected: version $v is not next (current $cur) — concurrent writer")
-    val keep =
-      if (v > 1) manifestFiles(dir, v - 1).filter { l =>
-        val e = parseEntry(l)
-        !(e.isData && replaced.contains(e.path))
-      }
-      else Seq.empty
-    claimManifest(dir, v,
-      reconcilePosDeletes(dir, v, keep, replaced) ++
-        dataLines(newFiles.sorted))
-  }
 
   /** Reconcile prior POSITION-DELETE entries with a copy-on-write
     * replacement set. The row-level scan that produced the replacement
@@ -944,9 +929,8 @@ object ManifestTable {
     * because position deletes carry no sequence scoping (the MoR reader
     * anti-joins one global (file_path, pos) set) and is compaction for
     * free. */
-  private def reconcilePosDeletes(dir: String, v: Int, keep: Seq[String],
-                                  replaced: Set[String],
-                                  commitDir: Option[Path] = None): Seq[String] = {
+  private def reconcilePosDeletes(keep: Seq[String], replaced: Set[String],
+                                  commitDir: String): Seq[String] = {
     if (replaced.isEmpty || !keep.exists(_.startsWith("P|"))) return keep
     val spark = org.apache.spark.sql.SparkSession.active
     import org.apache.spark.sql.functions.col
@@ -990,54 +974,15 @@ object ManifestTable {
         // plan string and the codegen'd predicate — the dead-path FRAME
         // stays one broadcast of file-path strings at any touch-set size
         val deadRaw = refPairs.map(_._2).distinct.filter(isDead)
-        val dataDir = commitDir.getOrElse(Paths.get(dir, "data", s"commit-$v"))
-        Files.createDirectories(dataDir)
-        val rwDir = dataDir.resolve(
-          s"posrw-${java.util.UUID.randomUUID().toString.take(8)}").toString
         import spark.implicits._
         val deadDf = org.apache.spark.sql.functions.broadcast(
           deadRaw.toIndexedSeq.toDF("file_path"))
-        spark.read.parquet(spanning.toSeq.sorted: _*)
-          .join(deadDf, Seq("file_path"), "left_anti")
-          .coalesce(1).write.parquet(rwDir)
-        Option(new java.io.File(rwDir).listFiles()).toSeq.flatten
-          .filter(_.getName.endsWith(".parquet"))
-          .map { f =>
-            val st = fileStats(f.getAbsolutePath)
-            val seg =
-              if (st.isEmpty) "-"
-              else st.toSeq.sortBy(_._1)
-                .map { case (n, (lo, hi)) => s"$n:$lo:$hi" }.mkString(";")
-            s"P|${f.getAbsolutePath}|$seg"
-          }.sorted
+        stage(spark.read.parquet(spanning.toSeq.sorted: _*)
+            .join(deadDf, Seq("file_path"), "left_anti").coalesce(1),
+          s"$commitDir/posrw-${java.util.UUID.randomUUID().toString.take(8)}")
+          .map(posDeleteLine)
       }
     kept ++ rewritten
-  }
-
-  /** [[publishCowExpected]] with caller-supplied extra stats per new file
-    * — the landing verb of a group copy-on-write rewrite on a BUCKETED
-    * table: the replacement files must re-enter the manifest with their
-    * `_ptn_bucket_*` tags or one SQL UPDATE would silently knock the
-    * table out of storage-partitioned-join eligibility (the key-grouped
-    * scan falls back to a shuffling plan when ANY file lacks its tag —
-    * at 100 TB that is every downstream join paying two exchanges again
-    * until someone notices and compacts). */
-  def publishCowTaggedExpected(dir: String, v: Int, replaced: Set[String],
-                               files: Seq[(String, Map[String, (Double, Double)])]): Int = {
-    val cur = currentVersion(dir)
-    if (v != cur + 1)
-      throw new CommitConflictException(
-        s"publishCowTaggedExpected: version $v is not next (current $cur) — concurrent writer")
-    val keep =
-      if (v > 1) manifestFiles(dir, v - 1).filter { l =>
-        val e = parseEntry(l)
-        !(e.isData && replaced.contains(e.path))
-      }
-      else Seq.empty
-    warmFileStats(files.map(_._1))
-    claimManifest(dir, v,
-      reconcilePosDeletes(dir, v, keep, replaced) ++
-        files.sortBy(_._1).map { case (f, ex) => dataLine(f, extraStats = ex) })
   }
 
   private val MetaCols = Seq("_graft_file", "_graft_pos")
@@ -1078,13 +1023,13 @@ object ManifestTable {
     }
     val key = (spark, sb.result())
     planCache.get(key).getOrElse {
-      val df = assembleBuild(spark, entries, dir, withMeta, tableSchema)
+      val df = assembleBuild(spark, entries, withMeta, tableSchema)
       planCache.put(key, df)
       df
     }
   }
 
-  private def assembleBuild(spark: SparkSession, entries: Seq[Entry], dir: String,
+  private def assembleBuild(spark: SparkSession, entries: Seq[Entry],
                             withMeta: Boolean,
                             tableSchema: Option[org.apache.spark.sql.types.StructType])
       : DataFrame = {
@@ -1181,47 +1126,27 @@ object ManifestTable {
   def deleteWhere(spark: SparkSession, dir: String,
                   predicate: org.apache.spark.sql.Column): Int = {
     import org.apache.spark.sql.functions.col
-    val v = currentVersion(dir) + 1
+    val (v, dataDir) = nextCommit(dir, Ref.Main)
     require(v > 1, s"ManifestTable.deleteWhere: no committed data under $dir")
-    val snapEntries = manifestFiles(dir, v - 1).map(parseEntry)
+    val base = manifestFiles(dir, v - 1)
+    val snapEntries = base.map(parseEntry)
     // a data-less snapshot has nothing to delete — a NO-OP, not a crash
     // (the predicate could not even resolve against an empty frame)
     if (!snapEntries.exists(_.isData)) return v - 1
     val snap = assemble(spark, snapEntries, dir, withMeta = true)
     val hits = snap.filter(predicate)
       .select(col(MetaCols(0)).as("file_path"), col(MetaCols(1)).as("pos"))
-    val dataDir = s"$dir/data/commit-$v"
-    hits.write.mode("overwrite").parquet(dataDir)
-    // the delete file's own footer stats ride the line (`__rows` above
-    // all): positions are exact-count deletions, so a pos-only snapshot
-    // keeps zero-IO COUNT(*) — see [[countStar]]
-    val delFiles = Option(new java.io.File(dataDir).listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(".parquet"))
-      // a predicate matching NOTHING writes zero-row delete files — keep
-      // them out of the manifest (an empty delete file masks nothing but
-      // pins the table on the merge-on-read path forever)
-      .filterNot(f => fileStats(f.getAbsolutePath).get("__rows").exists(_._1 == 0))
-      .map { f =>
-        val st = fileStats(f.getAbsolutePath)
-        val seg =
-          if (st.isEmpty) "-"
-          else st.toSeq.sortBy(_._1)
-            .map { case (n, (lo, hi)) => s"$n:$lo:$hi" }.mkString(";")
-        s"P|${f.getAbsolutePath}|$seg"
-      }.sorted
+    val delFiles = nonEmptyFiles(stage(hits, dataDir))
     // no matches at all → a NO-OP, not an empty commit (the snapshot is
     // bit-identical; versioning it would only churn retention) — and the
     // zero-row parquet (+ _SUCCESS/.crc) already written under
     // data/commit-$v must not linger: the directory belongs to a FUTURE
     // commit, and directory-listing tooling would misread the orphans
     if (delFiles.isEmpty) {
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).toSeq.flatten.foreach(rmTree); f.delete(): Unit
-      }
       rmTree(new java.io.File(dataDir))
       return v - 1
     }
-    claimManifest(dir, v, manifestFiles(dir, v - 1) ++ delFiles)
+    land(dir, Ref.Main, v, CommitPlan(Base.Lines(base ++ delFiles.map(posDeleteLine))))
   }
 
   /** Maintenance verb: merge the head snapshot's POSITION-delete files
@@ -1247,31 +1172,18 @@ object ManifestTable {
     val pos = lines.map(parseEntry).filter(_.posDelete)
     if (pos.size <= 1) return (pos.size, pos.size)
     val v = cur + 1
-    val dataDir = Paths.get(dir, "data", s"commit-$v")
-    Files.createDirectories(dataDir)
-    val rwDir = dataDir.resolve(
-      s"posmerge-${java.util.UUID.randomUUID().toString.take(8)}").toString
-    spark.read.parquet(pos.map(_.path): _*).coalesce(1).write.parquet(rwDir)
-    val merged = Option(new java.io.File(rwDir).listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(".parquet"))
-      // an all-empty delete set merges to zero rows → drop entirely (an
-      // empty delete file masks nothing but pins the MoR path)
-      .filterNot(f => fileStats(f.getAbsolutePath).get("__rows").exists(_._1 == 0))
-      .map { f =>
-        val st = fileStats(f.getAbsolutePath)
-        val seg =
-          if (st.isEmpty) "-"
-          else st.toSeq.sortBy(_._1)
-            .map { case (n, (lo, hi)) => s"$n:$lo:$hi" }.mkString(";")
-        s"P|${f.getAbsolutePath}|$seg"
-      }.sorted
+    // an all-empty delete set merges to zero rows → drop entirely (an
+    // empty delete file masks nothing but pins the MoR path)
+    val merged = nonEmptyFiles(stage(spark.read.parquet(pos.map(_.path): _*).coalesce(1),
+      s"${commitDir(dir, Ref.Main, v)}/posmerge-${java.util.UUID.randomUUID().toString.take(8)}"))
     // dataChange=false: the merged delete set masks the exact same rows,
     // so the snapshot is bit-identical to v-1 — without the rewrite
     // marker, every change feed spanning this commit would refuse the
     // range ("removed files") and one maintenance CALL would break all
     // incremental consumers, syncClone included (ADVICE r12 medium)
-    markRewrite(dir,
-      claimManifest(dir, v, lines.filterNot(parseEntry(_).posDelete) ++ merged))
+    land(dir, Ref.Main, v, CommitPlan(
+      Base.Lines(lines.filterNot(parseEntry(_).posDelete) ++ merged.map(posDeleteLine)),
+      sidecars = RewriteMarker))
     (pos.size, merged.size)
   }
 
@@ -1386,18 +1298,67 @@ object ManifestTable {
     }
   }
 
-  /** Per-column bounds implied by a predicate — intersection of every
-    * recognized conjunct's interval. A row satisfying the predicate
-    * satisfies every bound, so a file whose stats miss ANY bound holds no
-    * matching row. */
   /** Per-column bounds implied by a Column predicate — intersection of
     * every recognized conjunct's interval, walked over the Column-DSL
-    * node tree by [[org.apache.spark.sql.graftbridge.ColumnBridge]]. */
+    * node tree by [[org.apache.spark.sql.graftbridge.ColumnBridge]]. A
+    * row satisfying the predicate satisfies every bound, so a file whose
+    * stats miss ANY bound holds no matching row. */
   private[sources] def predicateBounds(predicate: org.apache.spark.sql.Column)
       : Map[String, (Double, Double)] =
     org.apache.spark.sql.graftbridge.ColumnBridge.predicateIntervals(predicate)
       .groupBy(_._1).map { case (c, ivs) =>
         c -> ((ivs.map(_._2).max, ivs.map(_._3).min)) }
+
+  /** Whether a file's stats may hold a row inside every bound (a column
+    * without stats never cuts). */
+  private def overlaps(stats: Map[String, (Double, Double)],
+                       bounds: Map[String, (Double, Double)]): Boolean =
+    bounds.forall { case (c, (lo, hi)) =>
+      stats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi } }
+
+  /** The data files of `lines` a predicate-scoped rewrite must open:
+    * those whose stats overlap `bounds`. Every other line carries
+    * forward verbatim. */
+  private def touchSet(lines: Seq[String],
+                       bounds: Map[String, (Double, Double)]): Seq[String] =
+    lines.map(parseEntry).filter(e => e.isData && overlaps(e.stats, bounds)).map(_.path)
+
+  /** The copy-on-write rewrite verbs refuse tables carrying delete
+    * entries: rewriting a file shifts row positions out from under
+    * position deletes and re-sequences rows past equality deletes —
+    * compact first (which purges deletes physically). */
+  private def requireNoDeletes(verb: String, dir: String, lines: Seq[String]): Unit =
+    require(lines.map(parseEntry).forall(_.isData),
+      s"$verb: $dir carries row-level delete entries — a rewrite " +
+        "would shift positions/sequences under them; compact first")
+
+  /** The rewrite read of touched files. With a declared TABLE schema
+    * (PHYSICAL names, metadata intact) the files read AGAINST it, so
+    * ALTER-added columns missing from a PRE-ALTER file read as their
+    * EXISTS_DEFAULT — the value every reader sees. Filtering on NULL
+    * instead keeps/deletes the wrong rows, and the rewrite would
+    * MATERIALIZE the nulls. Spark's parquet reader fills the defaults
+    * PER FILE, which a driver-side withColumn backfill cannot do once the
+    * touch set MIXES pre- and post-ALTER files (mergeSchema then reports
+    * the column present, and the old files' rows silently read NULL;
+    * found by the evolution property test's 56-step sequence).
+    * `keepHidden` (transform tables) keeps the files' physical `_ptn_*`
+    * columns so the surviving rows' cell stats — and the pruning they
+    * feed — ride into the replacement files' footers. */
+  private def rewriteScan(spark: SparkSession, paths: Seq[String],
+                          tableSchema: Option[org.apache.spark.sql.types.StructType],
+                          keepHidden: Boolean = false): DataFrame = {
+    def merged = spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    tableSchema match {
+      case Some(sch) =>
+        val req =
+          if (!keepHidden) sch
+          else org.apache.spark.sql.types.StructType(
+            sch.fields ++ merged.schema.fields.filter(_.name.startsWith("_ptn_")))
+        spark.read.schema(req).parquet(paths: _*)
+      case None => if (keepHidden) merged else dropHidden(merged)
+    }
+  }
 
   /** Copy-on-write UPDATE: set `assignments` on every row matching
     * `predicate`, rewriting ONLY the files whose manifest stats overlap
@@ -1409,44 +1370,28 @@ object ManifestTable {
     * not O(table) — on a 100 TB date-clustered table, an UPDATE over one
     * month rewrites that month, and the stats that prune reads are the
     * SAME stats that bound the write (one metadata stack, both
-    * directions). Refuses tables carrying delete entries: rewriting a
-    * file shifts row positions out from under position deletes and
-    * re-sequences rows past equality deletes — compact first (which
-    * purges deletes physically), then update. Returns the new version. */
+    * directions). Refuses tables carrying delete entries
+    * ([[requireNoDeletes]]). Returns the new version. */
   def updateWhere(spark: SparkSession, dir: String,
                   predicate: org.apache.spark.sql.Column,
                   assignments: Map[String, org.apache.spark.sql.Column]): Int = {
-    import org.apache.spark.sql.functions.when
+    import org.apache.spark.sql.functions.{col, when}
     require(assignments.nonEmpty, "updateWhere: no assignments")
-    val v = currentVersion(dir) + 1
+    val (v, dataDir) = nextCommit(dir, Ref.Main)
     require(v > 1, s"ManifestTable.updateWhere: no committed data under $dir")
     val lines = manifestFiles(dir, v - 1)
-    val entries = lines.map(parseEntry)
-    require(entries.forall(_.isData),
-      s"updateWhere: $dir carries row-level delete entries — a rewrite " +
-        "would shift positions/sequences under them; compact first")
-    val bounds = predicateBounds(predicate)
-    val (touchedLines, keptLines) = lines.partition { l =>
-      val st = parseEntry(l).stats
-      bounds.forall { case (c, (lo, hi)) =>
-        st.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi } }
-    }
-    require(touchedLines.nonEmpty,
+    requireNoDeletes("updateWhere", dir, lines)
+    val touched = touchSet(lines, predicateBounds(predicate))
+    require(touched.nonEmpty,
       "updateWhere: predicate bounds exclude every file — nothing to update")
-    val touched = touchedLines.map(parseEntry).map(_.path)
     // ONE simultaneous projection: every assignment (and the predicate)
     // evaluates against the ORIGINAL row — sequential withColumn would let
     // an assignment that rewrites a predicate column corrupt the next
-    val rewritten =
-      dropHidden(spark.read.option("mergeSchema", "true").parquet(touched: _*))
-        .withColumns(assignments.map { case (c, expr) =>
-          c -> when(predicate, expr)
-            .otherwise(org.apache.spark.sql.functions.col(c)) })
-    val dataDir = s"$dir/data/commit-$v"
-    rewritten.write.mode("overwrite").parquet(dataDir)
-    val newFiles = Option(new java.io.File(dataDir).listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).sorted
-    claimManifest(dir, v, keptLines ++ dataLines(newFiles))
+    val rewritten = rewriteScan(spark, touched, None)
+      .withColumns(assignments.map { case (c, expr) =>
+        c -> when(predicate, expr).otherwise(col(c)) })
+    land(dir, Ref.Main, v, CommitPlan(Base.Lines(lines), replaced = touched.toSet,
+      added = stage(rewritten, dataDir).map(DataFile(_))))
   }
 
   /** Copy-on-write DELETE: drop every row where `predicate` is TRUE
@@ -1456,115 +1401,65 @@ object ManifestTable {
     * [[deleteWhere]]'s merge-on-read position deletes when the caller
     * wants a delete-free snapshot afterwards (the SQL catalog's DELETE
     * FROM routes here so its reads keep working without compaction).
-    * Same delete-entry refusal as [[updateWhere]], same reason. */
+    * Same delete-entry refusal as [[updateWhere]], same reason;
+    * `tableSchema` as in [[rewriteScan]]. */
   def deleteWhereCow(spark: SparkSession, dir: String,
                      predicate: org.apache.spark.sql.Column,
                      tableSchema: Option[org.apache.spark.sql.types.StructType] = None): Int = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
-    val v = currentVersion(dir) + 1
+    val (v, dataDir) = nextCommit(dir, Ref.Main)
     require(v > 1, s"ManifestTable.deleteWhereCow: no committed data under $dir")
     val lines = manifestFiles(dir, v - 1)
-    require(lines.map(parseEntry).forall(_.isData),
-      s"deleteWhereCow: $dir carries row-level delete entries — a rewrite " +
-        "would shift positions/sequences under them; compact first")
-    val bounds = predicateBounds(predicate)
-    val (touchedLines, keptLines) = lines.partition { l =>
-      val st = parseEntry(l).stats
-      bounds.forall { case (c, (lo, hi)) =>
-        st.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi } }
-    }
-    if (touchedLines.isEmpty) return claimManifest(dir, v, keptLines)
-    val touched = touchedLines.map(parseEntry).map(_.path)
-    // same contract as overwriteWhere's rewrite scan: with a declared
-    // table schema, read the touched files AGAINST IT so ALTER-added
-    // columns fill their EXISTS_DEFAULT per file — a mixed pre/post-ALTER
-    // touch set under mergeSchema reads the old files' rows as NULL and
-    // both mis-scopes the delete AND materializes the nulls
-    val scan = tableSchema match {
-      case Some(sch) => spark.read.schema(sch).parquet(touched: _*)
-      case None =>
-        dropHidden(spark.read.option("mergeSchema", "true").parquet(touched: _*))
-    }
-    val rewritten = scan.filter(not(coalesce(predicate, lit(false))))
-    val dataDir = s"$dir/data/commit-$v"
-    rewritten.write.mode("overwrite").parquet(dataDir)
-    val rawFiles = Option(new java.io.File(dataDir).listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).sorted
-    warmFileStats(rawFiles)
-    // a wholly-deleted file rewrites to zero rows — keep it out of the
-    // manifest (a stats-free empty file survives every prune for nothing)
-    val newFiles = rawFiles
-      .filterNot(f => fileStats(f).get("__rows").exists(_._1 == 0))
-    claimManifest(dir, v, keptLines ++ dataLines(newFiles))
+    requireNoDeletes("deleteWhereCow", dir, lines)
+    val touched = touchSet(lines, predicateBounds(predicate))
+    if (touched.isEmpty) return land(dir, Ref.Main, v, CommitPlan(Base.Lines(lines)))
+    val rewritten = rewriteScan(spark, touched, tableSchema)
+      .filter(not(coalesce(predicate, lit(false))))
+    land(dir, Ref.Main, v, CommitPlan(Base.Lines(lines), replaced = touched.toSet,
+      added = nonEmptyFiles(stage(rewritten, dataDir)).map(DataFile(_))))
   }
 
   /** DYNAMIC OVERWRITE as one commit: delete every row matching
-    * `predicate` AND append `newFiles`, atomically at the next version —
+    * `predicate` AND add `newFiles`, atomically at the next version —
     * the landing verb of `df.writeTo(t).overwrite(cond)`, i.e. the
     * nightly "replace this day's partition" pattern. The delete side is
     * stats-bounded exactly like [[deleteWhereCow]] (files whose stats
     * exclude the predicate carry forward verbatim; only stats-overlapping
     * files rewrite — bounds are necessary, not sufficient, so whole-match
     * files still pass through the filter scan), and the insert side is
-    * the staged files the DSv2 write already produced. At 100 TB the alternative — DELETE then
-    * INSERT as two commits — has a window where readers see the day
-    * missing; this verb has none. */
+    * the staged files the DSv2 write already produced. At 100 TB the
+    * alternative — DELETE then INSERT as two commits — has a window where
+    * readers see the day missing; this verb has none.
+    *
+    * On a BUCKET-partitioned table (`bucket` = (column, n)) the rewrite
+    * re-splits survivors PER BUCKET and every replacement re-enters the
+    * manifest with its `_ptn_bucket_*` tag — an untagged rewrite would
+    * silently knock the table out of storage-partitioned-join
+    * eligibility (the key-grouped scan falls back when ANY file lacks its
+    * tag). The INSERT side arrives already bucket-split and tagged from
+    * the clustered DSv2 writer. `renames` is the catalog's RENAME COLUMN
+    * map (logical → physical); `tableSchema`/`keepHidden` as in
+    * [[rewriteScan]]. */
   def overwriteWhere(spark: SparkSession, dir: String,
                      predicate: org.apache.spark.sql.Column,
-                     newFiles: Seq[String],
+                     newFiles: Seq[DataFile],
                      keepHidden: Boolean = false,
                      tableSchema: Option[org.apache.spark.sql.types.StructType] = None,
-                     renames: Map[String, String] = Map.empty): Int = {
+                     renames: Map[String, String] = Map.empty,
+                     bucket: Option[(String, Int)] = None): Int = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
-    val v = currentVersion(dir) + 1
+    val (v, dataDir) = nextCommit(dir, Ref.Main)
     val lines = if (v > 1) manifestFiles(dir, v - 1) else Seq.empty
-    require(lines.map(parseEntry).forall(_.isData),
-      s"overwriteWhere: $dir carries row-level delete entries — a rewrite " +
-        "would shift positions/sequences under them; compact first")
+    requireNoDeletes("overwriteWhere", dir, lines)
     // the user predicate names LOGICAL columns; footer stats (and the
-    // files) carry PHYSICAL names — `renames` (logical -> physical, the
-    // catalog's RENAME COLUMN map) bridges both below
+    // files) carry PHYSICAL names — `renames` bridges both below
     val bounds = predicateBounds(predicate).map { case (c, b) =>
       (renames.getOrElse(c, c), b) }
-    val (touchedLines, keptLines) = lines.partition { l =>
-      val st = parseEntry(l).stats
-      bounds.forall { case (c, (lo, hi)) =>
-        st.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi } }
-    }
-    val rewrittenFiles: Seq[String] =
-      if (touchedLines.isEmpty) Seq.empty
+    val touched = touchSet(lines, bounds)
+    val rewritten: Seq[DataFile] =
+      if (touched.isEmpty) Seq.empty
       else {
-        val touched = touchedLines.map(parseEntry).map(_.path)
-        // the rewrite must see the TABLE's view of every touched file,
-        // not the raw file bytes: ALTER-added columns missing from a
-        // PRE-ALTER file must read as their EXISTS_DEFAULT (the value
-        // every reader sees — filtering on NULL instead keeps/deletes
-        // the wrong rows, and the rewrite would MATERIALIZE the nulls).
-        // Passing `tableSchema` (PHYSICAL names, metadata intact) as the
-        // requested read schema makes Spark's parquet reader fill the
-        // defaults PER FILE — which a driver-side withColumn backfill
-        // cannot do once the touch set MIXES pre- and post-ALTER files
-        // (mergeSchema then reports the column present, and the old
-        // files' rows silently read NULL; found by the evolution
-        // property test's 56-step sequence). `keepHidden` (transform
-        // tables) appends the files' physical _ptn_* columns to the
-        // requested schema so the surviving rows' cell stats — and the
-        // pruning they feed — ride into the replacement files' footers.
-        val scan = tableSchema match {
-          case Some(sch) =>
-            val req =
-              if (!keepHidden) sch
-              else {
-                val ptn = spark.read.option("mergeSchema", "true")
-                  .parquet(touched: _*).schema.fields
-                  .filter(_.name.startsWith("_ptn_"))
-                org.apache.spark.sql.types.StructType(sch.fields ++ ptn)
-              }
-            spark.read.schema(req).parquet(touched: _*)
-          case None =>
-            val raw = spark.read.option("mergeSchema", "true").parquet(touched: _*)
-            if (keepHidden) raw else dropHidden(raw)
-        }
+        val scan = rewriteScan(spark, touched, tableSchema, keepHidden)
         val logicalScan =
           if (renames.isEmpty) scan
           else scan.withColumnsRenamed(renames.map(_.swap)) // phys -> logical
@@ -1574,100 +1469,45 @@ object ManifestTable {
           else survivors0.withColumnsRenamed(renames)       // back to physical
         // `rw` subdir: the staged INSERT files move into data/commit-$v
         // by bare name before publish — the rewrite must never collide
-        val rwDir = s"$dir/data/commit-$v/rw"
-        survivors.write.mode("overwrite").parquet(rwDir)
-        val raw = Option(new java.io.File(rwDir).listFiles()).toSeq.flatten
-          .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).sorted
-        warmFileStats(raw)
-        // a wholly-replaced file rewrites to zero rows — keep it out of
-        // the manifest (a stats-free empty file would survive every
-        // prune for nothing)
-        raw.filterNot(f => fileStats(f).get("__rows").exists(_._1 == 0))
+        bucket match {
+          case Some((c, n)) => stageBuckets(survivors, c, n, dataDir, s"$dataDir/rw", "rwb")
+          case None => nonEmptyFiles(stage(survivors, s"$dataDir/rw")).map(DataFile(_))
+        }
       }
-    claimManifest(dir, v,
-      keptLines ++ dataLines((rewrittenFiles ++ newFiles).sorted))
+    land(dir, Ref.Main, v, CommitPlan(Base.Lines(lines), replaced = touched.toSet,
+      added = rewritten ++ newFiles))
   }
 
-  /** [[overwriteWhere]] for a BUCKET-partitioned table (r11; previously
-    * a capability refusal): the delete-side rewrite re-splits survivors
-    * PER BUCKET and every replacement file re-enters the manifest with
-    * its `_ptn_bucket_*` tag — an untagged rewrite would silently knock
-    * the table out of storage-partitioned-join eligibility (the
-    * key-grouped scan falls back when ANY file lacks its tag; at 100 TB
-    * that is every downstream join paying two exchanges again until a
-    * compact). The INSERT side arrives already bucket-split and tagged
-    * from the clustered DSv2 writer. Untouched files carry forward
-    * verbatim, tags and all. */
-  def overwriteWhereTagged(spark: SparkSession, dir: String,
-                           predicate: org.apache.spark.sql.Column,
-                           newTagged: Seq[(String, Map[String, (Double, Double)])],
-                           bucketCol: String, n: Int,
-                           tableSchema: Option[org.apache.spark.sql.types.StructType] = None,
-                           renames: Map[String, String] = Map.empty): Int = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not, pmod}
-    val v = currentVersion(dir) + 1
-    val lines = if (v > 1) manifestFiles(dir, v - 1) else Seq.empty
-    require(lines.map(parseEntry).forall(_.isData),
-      s"overwriteWhereTagged: $dir carries row-level delete entries — a " +
-        "rewrite would shift positions/sequences under them; compact first")
-    val bounds = predicateBounds(predicate).map { case (c, b) =>
-      (renames.getOrElse(c, c), b) }
-    val (touchedLines, keptLines) = lines.partition { l =>
-      val st = parseEntry(l).stats
-      bounds.forall { case (c, (lo, hi)) =>
-        st.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi } }
-    }
-    val dataDir = s"$dir/data/commit-$v"
-    val rewrittenTagged: Seq[(String, Map[String, (Double, Double)])] =
-      if (touchedLines.isEmpty) Seq.empty
-      else {
-        val touched = touchedLines.map(parseEntry).map(_.path)
-        // same TABLE-schema contract as overwriteWhere: ALTER-added
-        // columns fill their EXISTS_DEFAULT per file
-        val scan = tableSchema match {
-          case Some(sch) => spark.read.schema(sch).parquet(touched: _*)
-          case None =>
-            dropHidden(spark.read.option("mergeSchema", "true").parquet(touched: _*))
+  /** Stage `df` split per bucket of `bucketCol` — the pmod formula is
+    * GraftBucketFunction.bucketOf for longs. One partitionBy write under
+    * `tmpDir` (it strips the routing column from file content, each leaf
+    * holds one bucket); each non-empty file then hoists into `dataDir` as
+    * `<prefix><bucket>-<name>` with its `_ptn_bucket_<col>` tag. Flat
+    * bucket-tagged files are the bucketed write's own shape;
+    * partition-dir layouts confuse downstream path handling. */
+  private[graft] def stageBuckets(df: DataFrame, bucketCol: String, n: Int,
+                                  dataDir: String, tmpDir: String,
+                                  prefix: String): Seq[DataFile] = {
+    import org.apache.spark.sql.functions.{col, lit, pmod}
+    df.withColumn("_b", pmod(pmod(col(bucketCol), lit(n.toLong)) + n, lit(n.toLong)))
+      .repartition(n, col("_b"))
+      .write.partitionBy("_b").mode("overwrite").parquet(tmpDir)
+    val moved = Option(new java.io.File(tmpDir).listFiles()).toSeq.flatten
+      .filter(d => d.isDirectory && d.getName.startsWith("_b="))
+      .flatMap { d =>
+        val b = d.getName.stripPrefix("_b=").toInt
+        parquetFiles(d.getPath).map { f =>
+          val src = Paths.get(f)
+          val target = Paths.get(dataDir, s"$prefix$b-${src.getFileName}")
+          Files.move(src, target)
+          DataFile(target.toAbsolutePath.toString,
+            Map(s"_ptn_bucket_$bucketCol" -> (b.toDouble, b.toDouble)))
         }
-        val logicalScan =
-          if (renames.isEmpty) scan
-          else scan.withColumnsRenamed(renames.map(_.swap))
-        val survivors0 = logicalScan.filter(not(coalesce(predicate, lit(false))))
-        val survivors =
-          if (renames.isEmpty) survivors0
-          else survivors0.withColumnsRenamed(renames)
-        // re-split per bucket, compactBucketed's shape: partitionBy
-        // strips the routing column from file content, each leaf dir
-        // holds one bucket, files hoist out bucket-prefixed + tagged
-        survivors.withColumn("_b",
-            pmod(pmod(col(bucketCol), lit(n.toLong)) + n, lit(n.toLong)))
-          .repartition(n, col("_b"))
-          .write.partitionBy("_b").mode("overwrite").parquet(s"$dataDir/rw")
-        val tagged = Option(new java.io.File(s"$dataDir/rw").listFiles()).toSeq
-          .flatten.filter(d => d.isDirectory && d.getName.startsWith("_b="))
-          .flatMap { d =>
-            val b = d.getName.stripPrefix("_b=").toInt
-            Option(d.listFiles()).toSeq.flatten
-              .filter(_.getName.endsWith(".parquet"))
-              .map { f =>
-                val target = Paths.get(dataDir, s"rwb$b-${f.getName}")
-                Files.move(f.toPath, target)
-                target.toAbsolutePath.toString ->
-                  Map(s"_ptn_bucket_$bucketCol" -> (b.toDouble, b.toDouble))
-              }
-          }
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit
-        }
-        rm(new java.io.File(s"$dataDir/rw"))
-        warmFileStats(tagged.map(_._1))
-        tagged.filterNot { case (f, _) =>
-          fileStats(f).get("__rows").exists(_._1 == 0) }
       }
-    warmFileStats((rewrittenTagged ++ newTagged).map(_._1))
-    claimManifest(dir, v,
-      keptLines ++ (rewrittenTagged ++ newTagged).sortBy(_._1)
-        .map { case (f, ex) => dataLine(f, extraStats = ex) })
+    rmTree(new java.io.File(tmpDir))
+    val kept = nonEmptyFiles(moved.map(_.path)).toSet
+    moved.filterNot(f => kept(f.path)).foreach(f => Files.delete(Paths.get(f.path)))
+    moved.filter(f => kept(f.path))
   }
 
   /** (files to rewrite, files carried forward verbatim) for an
@@ -1676,11 +1516,9 @@ object ManifestTable {
   def updatePruneInfo(dir: String, predicate: org.apache.spark.sql.Column,
                       version: Int = -1): (Int, Int) = {
     val v = if (version > 0) version else currentVersion(dir)
-    val bounds = predicateBounds(predicate)
-    val datas = manifestFiles(dir, v).map(parseEntry).filter(_.isData)
-    val touched = datas.count(e => bounds.forall { case (c, (lo, hi)) =>
-      e.stats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi } })
-    (touched, datas.size - touched)
+    val lines = manifestFiles(dir, v)
+    val touched = touchSet(lines, predicateBounds(predicate)).size
+    (touched, lines.map(parseEntry).count(_.isData) - touched)
   }
 
   /** Incremental read (change feed): the rows ADDED between `fromVersion`
@@ -1744,21 +1582,18 @@ object ManifestTable {
     // sees — a raw mergeSchema compact would materialize NULL instead
     // and the default would be lost FOREVER (found by the r11 property
     // test's compact step; same class as the overwriteWhere fix)
-    markRewrite(dir, commit(read(spark, dir, tableSchema = tableSchema)
-      .coalesce(numFiles), dir, append = false))
+    rewriteAll(read(spark, dir, tableSchema = tableSchema).coalesce(numFiles), dir)
 
-  /** Flag version `v` as a REWRITE commit (`dataChange = false` in Delta
-    * terms): its snapshot is bit-identical in content to `v-1`, only the
-    * physical layout changed. The change feed uses the marker to treat
-    * the commit as a row-level no-op instead of refusing the range —
-    * without it, any table that ever compacts becomes unreadable to
-    * incremental consumers. Marker is a zero-meaning sidecar file keyed
-    * by VERSION (`v<v>.rw`), reclaimed with its manifest at expire. */
-  private def markRewrite(dir: String, v: Int): Int = {
-    Files.write(manifests(dir).resolve(s"v$v.rw"),
-      Seq("rewrite").asJava): Unit
-    v
-  }
+  /** Publish `df` as an overwrite commit flagged as a REWRITE
+    * (`dataChange = false` in Delta terms): its snapshot is bit-identical
+    * in content to `v-1`, only the physical layout changed. The change
+    * feed uses the marker to treat the commit as a row-level no-op
+    * instead of refusing the range — without it, any table that ever
+    * compacts becomes unreadable to incremental consumers. The marker is
+    * a zero-meaning sidecar keyed by VERSION (`v<v>.rw`), reclaimed with
+    * its manifest at expire. */
+  private def rewriteAll(df: DataFrame, dir: String): Int =
+    commitDf(df, dir, Ref.Main, CommitPlan(Base.Empty, sidecars = RewriteMarker))
 
   /** Versions in `(from, to]` whose commits are marked `dataChange=false`. */
   private def rewriteVersions(dir: String, from: Int, to: Int): Seq[Int] =
@@ -1797,53 +1632,50 @@ object ManifestTable {
   def compactSmall(spark: SparkSession, dir: String, smallBytes: Long,
                    targetBytes: Long = 128L * 1024 * 1024,
                    tableSchema: Option[org.apache.spark.sql.types.StructType] = None): Int = {
+    require(targetBytes > 0, "compactSmall: thresholds must be positive")
+    binpack(spark, dir, "compactSmall", smallBytes, tableSchema, refuseBucketed = true) {
+      (small, merged, dataDir) =>
+        val smallTotal = small.map(p => new java.io.File(p).length()).sum
+        val nOut = math.max(1, math.ceil(smallTotal.toDouble / targetBytes).toInt)
+        nonEmptyFiles(stage(merged.coalesce(nOut), dataDir)).map(DataFile(_))
+    }
+  }
+
+  /** The binpack commit shared by [[compactSmall]] and
+    * [[compactSmallBucketed]]: `write` gets the small files, their
+    * merge-on-read view and the commit's data directory, and returns the
+    * merged files. Big data lines and equality-delete lines carry
+    * VERBATIM (stats, blooms — no footer re-reads); position-delete lines
+    * reconcile against the rewritten set. */
+  private def binpack(spark: SparkSession, dir: String, verb: String, smallBytes: Long,
+                      tableSchema: Option[org.apache.spark.sql.types.StructType],
+                      refuseBucketed: Boolean = false)(
+                      write: (Seq[String], DataFrame, String) => Seq[DataFile]): Int = {
     val cur = currentVersion(dir)
-    require(cur > 0, s"compactSmall: no committed version under $dir")
-    require(smallBytes > 0 && targetBytes > 0,
-      "compactSmall: thresholds must be positive")
+    require(cur > 0, s"$verb: no committed version under $dir")
+    require(smallBytes > 0, s"$verb: thresholds must be positive")
     val lines = manifestFiles(dir, cur)
-    val entries = lines.map(parseEntry)
-    require(!Files.exists(Paths.get(dir, "_partition.bucket")) &&
-      !lines.exists(_.contains("_ptn_bucket_")),
-      s"compactSmall: $dir is bucket-partitioned — a cross-bucket merge " +
+    require(!refuseBucketed || (!Files.exists(Paths.get(dir, "_partition.bucket")) &&
+      !lines.exists(_.contains("_ptn_bucket_"))),
+      s"$verb: $dir is bucket-partitioned — a cross-bucket merge " +
         "drops the metadata-only _ptn_bucket_* tags and the key-grouped " +
         "scan silently falls back to shuffling; use compact (the SQL verb " +
         "rewrites per bucket and re-tags)")
-    val (small, big) = entries.filter(_.isData).partition { e =>
-      val f = new java.io.File(e.path); f.exists() && f.length() < smallBytes
+    val entries = lines.map(parseEntry)
+    val small = entries.filter { e =>
+      val f = new java.io.File(e.path); e.isData && f.exists() && f.length() < smallBytes
     }
     if (small.size < 2) return cur
-    val smallTotal = small.map(e => new java.io.File(e.path).length()).sum
-    val nOut = math.max(1, math.ceil(smallTotal.toDouble / targetBytes).toInt)
     val v = cur + 1
-    val dataDir = s"$dir/data/commit-$v"
     // MoR view of JUST the small files: their data entries plus every
     // delete entry of the snapshot — equality deletes apply by sequence,
     // position deletes by (file, pos); refs to large files match nothing
-    val smallPaths = small.map(_.path).toSet
-    val delEntries = entries.filterNot(_.isData)
-    assemble(spark, small ++ delEntries, dir, withMeta = false,
-        tableSchema = tableSchema)
-      .coalesce(nOut)
-      .write.mode("overwrite").parquet(dataDir)
-    val rawNew = Option(new java.io.File(dataDir).listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).sorted
-    warmFileStats(rawNew)
-    // an all-deleted small subset merges to zero rows — keep empty
-    // outputs out of the manifest (harmless to read, but they pin a
-    // scan split and skew stats)
-    val newFiles = rawNew
-      .filterNot(f => fileStats(f).get("__rows").exists(_._1 == 0))
-    // big data lines + equality-delete lines carry VERBATIM (stats,
-    // blooms — no footer re-reads); position-delete lines reconcile
-    // against the rewritten set; merged files enter with fresh footers
-    val carried = lines.filter { l =>
-      val e = parseEntry(l)
-      !(e.isData && smallPaths.contains(e.path))
-    }
-    markRewrite(dir, claimManifest(dir, v,
-      reconcilePosDeletes(dir, v, carried, smallPaths) ++
-        dataLines(newFiles)))
+    val merged = assemble(spark, small ++ entries.filterNot(_.isData), dir,
+      withMeta = false, tableSchema = tableSchema)
+    val smallPaths = small.map(_.path)
+    land(dir, Ref.Main, v, CommitPlan(Base.Lines(lines), replaced = smallPaths.toSet,
+      added = write(smallPaths, merged, commitDir(dir, Ref.Main, v)),
+      sidecars = RewriteMarker))
   }
 
   /** [[compactSmall]] for a BUCKET-PARTITIONED table (r13, handoff #2):
@@ -1862,59 +1694,11 @@ object ManifestTable {
   def compactSmallBucketed(spark: SparkSession, dir: String,
                            bucketCol: String, nBuckets: Int, smallBytes: Long,
                            tableSchema: Option[org.apache.spark.sql.types.StructType] = None): Int = {
-    import org.apache.spark.sql.functions.{col, lit, pmod}
-    val cur = currentVersion(dir)
-    require(cur > 0, s"compactSmallBucketed: no committed version under $dir")
-    require(smallBytes > 0 && nBuckets > 0,
-      "compactSmallBucketed: thresholds must be positive")
-    val lines = manifestFiles(dir, cur)
-    val entries = lines.map(parseEntry)
-    val (small, _) = entries.filter(_.isData).partition { e =>
-      val f = new java.io.File(e.path); f.exists() && f.length() < smallBytes
+    require(nBuckets > 0, "compactSmallBucketed: thresholds must be positive")
+    binpack(spark, dir, "compactSmallBucketed", smallBytes, tableSchema) {
+      (_, merged, dataDir) =>
+        stageBuckets(merged, bucketCol, nBuckets, dataDir, s"$dataDir/staged", "b")
     }
-    if (small.size < 2) return cur
-    val smallPaths = small.map(_.path).toSet
-    val delEntries = entries.filterNot(_.isData)
-    val v = cur + 1
-    val dataDir = s"$dir/data/commit-$v"
-    // MoR view of the small subset, re-routed by the declared bucket
-    // function (pmod formula = GraftBucketFunction.bucketOf for longs)
-    assemble(spark, small ++ delEntries, dir, withMeta = false,
-        tableSchema = tableSchema)
-      .withColumn("_b",
-        pmod(pmod(col(bucketCol), lit(nBuckets.toLong)) + nBuckets,
-          lit(nBuckets.toLong)))
-      .repartition(nBuckets, col("_b"))
-      .write.partitionBy("_b").mode("overwrite").parquet(s"$dataDir/staged")
-    // hoist each file out of its _b= dir with a bucket-prefixed name and
-    // its SPJ tag (flat bucket-tagged files are the bucketed write's own
-    // shape; partition-dir layouts confuse downstream path handling)
-    val tagged = Option(new java.io.File(s"$dataDir/staged").listFiles()).toSeq
-      .flatten.filter(d => d.isDirectory && d.getName.startsWith("_b="))
-      .flatMap { d =>
-        val b = d.getName.stripPrefix("_b=").toInt
-        Option(d.listFiles()).toSeq.flatten
-          .filter(_.getName.endsWith(".parquet"))
-          .filterNot(f => fileStats(f.getAbsolutePath)
-            .get("__rows").exists(_._1 == 0))
-          .map { f =>
-            val target = Paths.get(dataDir, s"b$b-${f.getName}")
-            Files.move(f.toPath, target)
-            target.toAbsolutePath.toString ->
-              Map(s"_ptn_bucket_$bucketCol" -> (b.toDouble, b.toDouble))
-          }
-      }
-    def rmTree(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rmTree); f.delete(): Unit }
-    rmTree(new java.io.File(s"$dataDir/staged"))
-    val carried = lines.filter { l =>
-      val e = parseEntry(l)
-      !(e.isData && smallPaths.contains(e.path))
-    }
-    warmFileStats(tagged.map(_._1))
-    markRewrite(dir, claimManifest(dir, v,
-      reconcilePosDeletes(dir, v, carried, smallPaths) ++
-        tagged.sortBy(_._1).map { case (f, ex) => dataLine(f, extraStats = ex) }))
   }
 
   /** CLUSTERED compaction: rewrite the snapshot range-partitioned + sorted
@@ -1930,9 +1714,8 @@ object ManifestTable {
                        tableSchema: Option[org.apache.spark.sql.types.StructType] = None): Int = {
     import org.apache.spark.sql.functions.col
     val cs = cols.map(col)
-    markRewrite(dir, commit(read(spark, dir, tableSchema = tableSchema)
-      .repartitionByRange(numFiles, cs: _*)
-      .sortWithinPartitions(cs: _*), dir, append = false))
+    rewriteAll(read(spark, dir, tableSchema = tableSchema)
+      .repartitionByRange(numFiles, cs: _*).sortWithinPartitions(cs: _*), dir)
   }
 
   /** Commit `df` WITH per-commit NDV sketches for `cols` — the planner
@@ -1948,7 +1731,6 @@ object ManifestTable {
                     cols: Seq[String]): Int = {
     import org.apache.spark.sql.functions.{base64, col, hll_sketch_agg}
     require(cols.nonEmpty, "commitWithNdv: no columns given")
-    val v = commit(df, dir, append)
     val row = df.agg(
       base64(hll_sketch_agg(col(cols.head))).as(cols.head),
       cols.tail.map(c => base64(hll_sketch_agg(col(c))).as(c)): _*).head()
@@ -1957,10 +1739,7 @@ object ManifestTable {
     // sketch bytes
     val lines = cols.zipWithIndex.map { case (c, i) =>
       s"$c:${row.getString(i).replaceAll("\\s", "")}" }
-    val tmp = manifests(dir).resolve(s".v$v.ndv.tmp")
-    Files.write(tmp, lines.asJava)
-    Files.move(tmp, manifests(dir).resolve(s"v$v.ndv")): Unit
-    v
+    commitDf(df, dir, Ref.Main, CommitPlan(Base.of(append), sidecars = Seq("ndv" -> lines)))
   }
 
   /** Table-level NDV estimate for `col` at a version: union of the HLL
@@ -2003,7 +1782,6 @@ object ManifestTable {
     require(hi > lo && (hi - lo) % buckets == 0,
       "commitWithHistogram: (hi - lo) must divide by buckets")
     val w = (hi - lo) / buckets
-    val v = commit(df, dir, append)
     val b = when(col(histCol) < lo, lit(-1L))
       .when(col(histCol) >= hi, lit(buckets.toLong))
       .otherwise(floor((col(histCol) - lo) / w).cast("long"))
@@ -2013,10 +1791,7 @@ object ManifestTable {
     val cells = (0 until buckets).map(i => counts.getOrElse(i.toLong, 0L))
     val line = s"$histCol:$lo:$hi:${counts.getOrElse(-1L, 0L)}:" +
       s"${counts.getOrElse(buckets.toLong, 0L)}:${cells.mkString(",")}"
-    val tmp = manifests(dir).resolve(s".v$v.hist.tmp")
-    Files.write(tmp, Seq(line).asJava)
-    Files.move(tmp, manifests(dir).resolve(s"v$v.hist")): Unit
-    v
+    commitDf(df, dir, Ref.Main, CommitPlan(Base.of(append), sidecars = Seq("hist" -> Seq(line))))
   }
 
   /** Range-cardinality SANDWICH for `histCol ∈ [qlo, qhi)` at a version,
@@ -2079,9 +1854,8 @@ object ManifestTable {
   def compactZOrder(spark: SparkSession, dir: String, numFiles: Int,
                     colA: String, colB: String,
                     tableSchema: Option[org.apache.spark.sql.types.StructType] = None): Int =
-    markRewrite(dir, commit(graft.operators.ZOrder.zOrderBy(
-      read(spark, dir, tableSchema = tableSchema),
-      colA, colB, numPartitions = numFiles), dir, append = false))
+    rewriteAll(graft.operators.ZOrder.zOrderBy(
+      read(spark, dir, tableSchema = tableSchema), colA, colB, numPartitions = numFiles), dir)
 
   /** The event-kind column every [[changeFeed]] row carries
     * (`insert` | `delete`). */
@@ -2310,7 +2084,7 @@ object ManifestTable {
       line.split('|') match {
         case Array("days", src, _)      => DaysTransform(src)
         case Array("bucket", n, src, _) => BucketTransform(n.toInt, src)
-        case other => throw new IllegalStateException(
+        case _ => throw new IllegalStateException(
           s"partitionTransforms: unreadable spec line '$line'")
       }
     }
@@ -2564,8 +2338,7 @@ object ManifestTable {
     val cur = currentVersion(dir)
     require(toVersion >= 1 && toVersion <= cur,
       s"rollback: version $toVersion not in [1, $cur]")
-    val v = cur + 1
-    claimManifest(dir, v, manifestFiles(dir, toVersion))
+    land(dir, Ref.Main, cur + 1, CommitPlan(Base.Lines(manifestFiles(dir, toVersion))))
   }
 
   /** The snapshot's file inventory as a DataFrame — the `table$files`
@@ -2641,15 +2414,12 @@ object ManifestTable {
     * abort path). Returns (published version, 0) or (-1, violations). */
   def wapCommit(df: DataFrame, dir: String, append: Boolean,
                 checks: Seq[graft.operators.Quality.Check]): (Int, Long) = {
-    val stage = s"$dir/staging/wap-${java.util.UUID.randomUUID()}"
-    df.write.mode("overwrite").parquet(stage)
-    val spark = df.sparkSession
-    val staged = spark.read.parquet(stage)
-    val bad = graft.operators.Quality.quarantine(staged, checks)._2.count()
+    val staging = s"$dir/staging/wap-${java.util.UUID.randomUUID()}"
+    df.write.mode("overwrite").parquet(staging)
+    val bad = graft.operators.Quality.quarantine(
+      df.sparkSession.read.parquet(staging), checks)._2.count()
     if (bad > 0) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-      rm(new java.io.File(stage))
+      rmTree(new java.io.File(staging))
       (-1, bad)
     } else {
       // Publish under the canonical commit path, NOT the staging path:
@@ -2662,29 +2432,18 @@ object ManifestTable {
       // the bytes published) into the version directory computed at
       // publish time, the same inherit-the-publishing-sequence rule as
       // Iceberg's WAP.
-      val v = currentVersion(dir) + 1
-      val dataDir = new java.io.File(s"$dir/data/commit-$v")
-      Files.createDirectories(dataDir.getParentFile.toPath)
-      if (dataDir.exists()) {
-        // leftovers of a crashed attempt at this version: unreferenced
-        // (no manifest claimed v), safe to clear before the move
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-        rm(dataDir)
-      }
-      Files.move(Paths.get(stage), dataDir.toPath)
-      val moved = Option(dataDir.listFiles()).toSeq.flatten
-        .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).sorted
-      (publishExpected(dir, v, moved, append), 0L)
+      val (v, dataDir) = nextCommit(dir, Ref.Main)
+      val target = new java.io.File(dataDir)
+      Files.createDirectories(target.getParentFile.toPath)
+      // leftovers of a crashed attempt at this version: unreferenced (no
+      // manifest claimed v), safe to clear before the move
+      if (target.exists()) rmTree(target)
+      Files.move(Paths.get(staging), target.toPath)
+      (publish(dir, Ref.Main, v, CommitPlan(Base.of(append),
+        added = parquetFiles(dataDir).map(DataFile(_)))), 0L)
     }
   }
 
-  /** Snapshot expiry: drop every manifest older than the newest `keep`
-    * versions, then delete data files no SURVIVING manifest references
-    * (append-chain files shared with a live version are kept — liveness is
-    * a property of the file set union, not of which commit wrote the
-    * file). Returns (versions removed, orphan files deleted). Time travel
-    * to an expired version fails loudly on the missing manifest. */
   // ------------------------------------------------------------- branches
 
   private def branchMd(dir: String, name: String): Path = {
@@ -2716,8 +2475,7 @@ object ManifestTable {
       throw new CommitConflictException(s"branch '$name' already exists")
     Files.createDirectories(md)
     Files.write(md.resolve("FORK"), Seq(fork.toString).asJava)
-    claimManifestIn(md, fork, manifestFiles(dir, fork))
-    fork
+    land(dir, Ref.Branch(name), fork, CommitPlan(Base.Lines(manifestFiles(dir, fork))))
   }
 
   def branchExists(dir: String, name: String): Boolean =
@@ -2749,11 +2507,8 @@ object ManifestTable {
     * via `.option("branch", b).option("branchVersion", "tag")`. Branch
     * manifests are never expire()d (only dropBranch reclaims them), so
     * a branch tag is a pure label — no retention machinery needed. */
-  def branchTags(dir: String, branch: String): Map[String, Int] = {
-    val md = branchMd(dir, branch)
-    require(Files.isDirectory(md), s"no branch '$branch' under $dir")
-    tagsIn(md)
-  }
+  def branchTags(dir: String, branch: String): Map[String, Int] =
+    tagsIn(mdOf(dir, Ref.Branch(branch)))
 
   private def tagsIn(md: Path): Map[String, Int] = {
     if (!Files.isDirectory(md)) return Map.empty
@@ -2933,9 +2688,8 @@ object ManifestTable {
       s"createBranchTag: illegal tag name '$name' (non-empty, no '|', no " +
         "leading '#' — the GC marker — and not all digits: it must never " +
         "shadow a numeric branch version)")
-    val md = branchMd(dir, branch)
-    require(Files.isDirectory(md), s"no branch '$branch' under $dir")
-    val v = if (version > 0) version else versionsOnDisk(md).max
+    val md = mdOf(dir, Ref.Branch(branch))
+    val v = if (version > 0) version else headVersion(dir, Ref.Branch(branch))
     require(Files.exists(md.resolve(s"v$v.list")),
       s"createBranchTag: version $v of branch '$branch' does not exist")
     mutateTagsIn(md, dir, { m =>
@@ -2948,8 +2702,7 @@ object ManifestTable {
   }
 
   def dropBranchTag(dir: String, branch: String, name: String): Int = {
-    val md = branchMd(dir, branch)
-    require(Files.isDirectory(md), s"no branch '$branch' under $dir")
+    val md = mdOf(dir, Ref.Branch(branch))
     var dropped = -1
     mutateTagsIn(md, dir, { m =>
       require(m.contains(name),
@@ -2987,11 +2740,7 @@ object ManifestTable {
 
   /** Head version of the branch (its fork version until the first branch
     * commit). */
-  def branchVersion(dir: String, name: String): Int = {
-    val md = branchMd(dir, name)
-    require(Files.isDirectory(md), s"no branch '$name' under $dir")
-    versionsOnDisk(md).max
-  }
+  def branchVersion(dir: String, name: String): Int = headVersion(dir, Ref.Branch(name))
 
   /** Commit `df` onto the branch head — same protocol as [[commit]], in
     * the branch's namespace. The data directory `commit-<v>-<nonce>`
@@ -3000,166 +2749,15 @@ object ManifestTable {
     * so equality/position deletes inside a branch behave exactly as on
     * main. Returns the new branch head version. */
   def commitToBranch(df: DataFrame, dir: String, name: String,
-                     append: Boolean = true): Int = {
-    val md = branchMd(dir, name)
-    require(Files.isDirectory(md), s"no branch '$name' under $dir")
-    val v = versionsOnDisk(md).max + 1
-    val dataDir = s"$dir/data/commit-$v-${branchNonce(name)}"
-    df.write.mode("overwrite").parquet(dataDir)
-    val newFiles = Option(new java.io.File(dataDir).listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).sorted
-    val lines = (if (append) Files.readAllLines(md.resolve(s"v${v - 1}.list"))
-                   .asScala.toSeq
-                 else Seq.empty) ++ dataLines(newFiles)
-    claimManifestIn(md, v, lines)
-  }
-
-  /** Publish ALREADY-WRITTEN data files as the branch's next version —
-    * [[commitToBranch]]'s staged-file twin, backing the DataFrame writer's
-    * `.option("branch", name)` (the DSv2 batch writer stages per-task
-    * files, then one driver-side publish lands them on the branch). The
-    * caller must have staged the files under a `commit-<v>-<nonce>` data
-    * directory so sequence scoping parses ([[branchDataDir]] hands out
-    * the right target). Append-only (the branch contract); the claim is
-    * the same link-CAS as every commit. */
-  def publishBranchFiles(dir: String, name: String, v: Int,
-                         files: Seq[String]): Int = {
-    val md = branchMd(dir, name)
-    require(Files.isDirectory(md), s"no branch '$name' under $dir")
-    val head = versionsOnDisk(md).max
-    if (v != head + 1)
-      throw new CommitConflictException(
-        s"publishBranchFiles: version $v is not next on branch '$name' (head $head)")
-    val lines = Files.readAllLines(md.resolve(s"v${v - 1}.list")).asScala.toSeq ++
-      dataLines(files.sorted)
-    claimManifestIn(md, v, lines)
-  }
-
-  /** [[publishDeltaExpected]] on a BRANCH head — the landing verb of
-    * WAP-staged row-level SQL (r11): with `spark.graft.wap.branch` set, a
-    * keyed table's UPDATE / MERGE / DELETE deltas commit to the audit
-    * branch instead of main, so mutations stage + audit + fast-forward
-    * exactly like appends. Sequence scoping is inherited from the branch
-    * data-dir convention (`commit-<v>-<nonce>` parses to seq `v`, which
-    * the fork's files and earlier branch commits all precede), so the
-    * equality deletes scope identically before AND after fast-forward. */
-  def publishDeltaToBranch(dir: String, name: String, v: Int, keyCol: String,
-                           delFiles: Seq[String], rowFiles: Seq[String]): Int = {
-    val md = branchMd(dir, name)
-    require(Files.isDirectory(md), s"no branch '$name' under $dir")
-    val head = versionsOnDisk(md).max
-    if (v != head + 1)
-      throw new CommitConflictException(
-        s"publishDeltaToBranch: version $v is not next on branch '$name' (head $head)")
-    require(v > 1, s"publishDeltaToBranch: no committed data under $dir")
-    val cols = delKeyCols(keyCol)
-    require(cols.nonEmpty && cols.forall(c => !c.exists("|;:".contains(_))),
-      s"publishDeltaToBranch: illegal delete key spec '$keyCol'")
-    val lines = Files.readAllLines(md.resolve(s"v${v - 1}.list")).asScala.toSeq ++
-      delFiles.sorted.map(f => s"D|$keyCol|$f") ++
-      dataLines(rowFiles.sorted)
-    claimManifestIn(md, v, lines)
-  }
-
-  /** [[publishCowExpected]] on a BRANCH head — the landing verb of
-    * WAP-staged row-level SQL on UNKEYED tables (r11): the group
-    * rewrite's scan read the BRANCH snapshot, so the commit replaces
-    * exactly those files within the branch manifest; untouched lines —
-    * including delete entries scoping surviving data — carry forward,
-    * and position-delete lines reconcile against the replaced set
-    * exactly like on main (the rewritten delete files land in the
-    * branch's nonce commit dir). fastForward replays the resulting
-    * manifests verbatim. */
-  def publishCowToBranch(dir: String, name: String, v: Int,
-                         replaced: Set[String], newFiles: Seq[String],
-                         commitDir: Path): Int = {
-    val md = branchMd(dir, name)
-    require(Files.isDirectory(md), s"no branch '$name' under $dir")
-    val head = versionsOnDisk(md).max
-    if (v != head + 1)
-      throw new CommitConflictException(
-        s"publishCowToBranch: version $v is not next on branch '$name' (head $head)")
-    val keep = Files.readAllLines(md.resolve(s"v${v - 1}.list")).asScala.toSeq
-      .filter { l =>
-        val e = parseEntry(l)
-        !(e.isData && replaced.contains(e.path))
-      }
-    claimManifestIn(md, v,
-      reconcilePosDeletes(dir, v, keep, replaced, commitDir = Some(commitDir)) ++
-        dataLines(newFiles.sorted))
-  }
-
-  /** [[publishCowTaggedExpected]] on a BRANCH head — the landing verb of
-    * WAP-staged row-level SQL on BUCKETED unkeyed tables (r12, closes the
-    * r11 refusal): the group rewrite's scan read the BRANCH snapshot, the
-    * commit replaces exactly those files within the branch manifest, and
-    * every replacement re-enters WITH its `_ptn_bucket_*` tag — so a
-    * staged-then-fast-forwarded UPDATE keeps the table SPJ-eligible on
-    * main exactly as a direct one does. Position-delete lines reconcile
-    * into the branch's nonce commit dir. */
-  def publishCowTaggedToBranch(dir: String, name: String, v: Int,
-                               replaced: Set[String],
-                               files: Seq[(String, Map[String, (Double, Double)])],
-                               commitDir: Path): Int = {
-    val md = branchMd(dir, name)
-    require(Files.isDirectory(md), s"no branch '$name' under $dir")
-    val head = versionsOnDisk(md).max
-    if (v != head + 1)
-      throw new CommitConflictException(
-        s"publishCowTaggedToBranch: version $v is not next on branch '$name' (head $head)")
-    val keep = Files.readAllLines(md.resolve(s"v${v - 1}.list")).asScala.toSeq
-      .filter { l =>
-        val e = parseEntry(l)
-        !(e.isData && replaced.contains(e.path))
-      }
-    warmFileStats(files.map(_._1))
-    claimManifestIn(md, v,
-      reconcilePosDeletes(dir, v, keep, replaced, commitDir = Some(commitDir)) ++
-        files.sortBy(_._1).map { case (f, ex) => dataLine(f, extraStats = ex) })
-  }
-
-  /** [[publishBranchFiles]] with caller-supplied EXTRA stats merged over
-    * each file's footer stats — the bucketed branch write's landing verb
-    * (the SPJ bucket id is metadata-only, so a plain branch publish would
-    * drop it and a fast-forwarded WAP cycle would silently degrade the
-    * key-grouped scan back to shuffling). Manifest lines carry the tags,
-    * and fastForward replays lines verbatim, so the tags survive onto
-    * main. */
-  def publishBranchTagged(dir: String, name: String, v: Int,
-                          files: Seq[(String, Map[String, (Double, Double)])]): Int = {
-    val md = branchMd(dir, name)
-    require(Files.isDirectory(md), s"no branch '$name' under $dir")
-    val head = versionsOnDisk(md).max
-    if (v != head + 1)
-      throw new CommitConflictException(
-        s"publishBranchTagged: version $v is not next on branch '$name' (head $head)")
-    warmFileStats(files.map(_._1))
-    val lines = Files.readAllLines(md.resolve(s"v${v - 1}.list")).asScala.toSeq ++
-      files.sortBy(_._1).map { case (f, ex) => dataLine(f, extraStats = ex) }
-    claimManifestIn(md, v, lines)
-  }
-
-  /** The branch's next version number and the data directory its files
-    * must land under (`data/commit-<v>-<branch nonce>` — the nonce keeps
-    * branch bytes out of main's commit directories and the version
-    * parses as the entry sequence). */
-  def branchNextCommitDir(dir: String, name: String): (Int, String) = {
-    val v = branchVersion(dir, name) + 1
-    (v, s"$dir/data/commit-$v-${branchNonce(name)}")
-  }
+                     append: Boolean = true): Int =
+    commitDf(df, dir, Ref.Branch(name), CommitPlan(Base.of(append)))
 
   /** Snapshot read of a branch (head by default, any branch version via
     * `version`) — the WAP-for-many-commits read: audit an experiment's
     * whole lineage without it ever being visible on main. */
   def readBranch(spark: SparkSession, dir: String, name: String,
-                 version: Int = -1): DataFrame = {
-    val md = branchMd(dir, name)
-    require(Files.isDirectory(md), s"no branch '$name' under $dir")
-    val v = if (version > 0) version else versionsOnDisk(md).max
-    assemble(spark,
-      Files.readAllLines(md.resolve(s"v$v.list")).asScala.toSeq.map(parseEntry),
-      dir, withMeta = false)
-  }
+                 version: Int = -1): DataFrame =
+    read(spark, dir, version, ref = Ref.Branch(name))
 
   /** Fast-forward main to the branch head by REPLAYING the branch's
     * manifests as main versions fork+1…head — pure metadata (zero data
@@ -3171,10 +2769,9 @@ object ManifestTable {
     * version is itself a consistent snapshot, so an aborted replay never
     * leaves a torn table. Returns main's new head. */
   def fastForward(dir: String, name: String): Int = {
-    val md = branchMd(dir, name)
-    require(Files.isDirectory(md), s"no branch '$name' under $dir")
-    val fork = Files.readAllLines(md.resolve("FORK")).get(0).trim.toInt
-    val head = versionsOnDisk(md).max
+    val ref = Ref.Branch(name)
+    val fork = Files.readAllLines(mdOf(dir, ref).resolve("FORK")).get(0).trim.toInt
+    val head = headVersion(dir, ref)
     require(head > fork, s"fastForward: branch '$name' has no commits past its fork v$fork")
     val cur = currentVersion(dir)
     if (cur != fork)
@@ -3182,7 +2779,7 @@ object ManifestTable {
         s"fastForward: main moved to v$cur past the fork v$fork — " +
           "rebase by re-branching from current and replaying")
     (fork + 1 to head).foreach { v =>
-      claimManifest(dir, v, Files.readAllLines(md.resolve(s"v$v.list")).asScala.toSeq)
+      land(dir, Ref.Main, v, CommitPlan(Base.Lines(manifestFiles(dir, v, ref))))
     }
     head
   }
@@ -3210,13 +2807,12 @@ object ManifestTable {
     * are removed before rethrowing (nothing referenced them yet).
     * Returns main's new head. */
   def cherryPick(dir: String, name: String, v: Int): Int = {
-    val md = branchMd(dir, name)
-    require(Files.isDirectory(md), s"no branch '$name' under $dir")
+    val md = mdOf(dir, Ref.Branch(name))
     val vs = versionsOnDisk(md).toSet
     require(vs.contains(v) && vs.contains(v - 1),
       s"cherryPick: branch '$name' has no commit v$v (or no parent v${v - 1})")
-    val prev = Files.readAllLines(md.resolve(s"v${v - 1}.list")).asScala.toSeq
-    val cur = Files.readAllLines(md.resolve(s"v$v.list")).asScala.toSeq
+    val prev = linesIn(md, v - 1)
+    val cur = linesIn(md, v)
     if (!(cur.size > prev.size && cur.take(prev.size) == prev))
       throw new CommitConflictException(
         s"cherryPick: branch commit v$v is not a pure append — only append " +
@@ -3249,7 +2845,8 @@ object ManifestTable {
           val parts = l.split('|'); parts(1) = dst.toString; parts.mkString("|")
         } else dst.toString
       }.sorted
-      claimManifest(dir, target, manifestFiles(dir, target - 1) ++ relined)
+      land(dir, Ref.Main, target,
+        CommitPlan(Base.Lines(manifestFiles(dir, target - 1) ++ relined)))
     } catch {
       case e: Throwable =>
         linked.foreach(Files.deleteIfExists(_))
@@ -3346,19 +2943,8 @@ object ManifestTable {
         // subtracts delete-file __rows, so preserving any (foreign-written)
         // duplicate positions keeps the clone's zero-IO count ≡ source's
         val id2 = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-        val dDir = s"$dst/data/commit-1-$id2"
-        mapped.coalesce(1).write.mode("overwrite").parquet(dDir)
-        Option(new java.io.File(dDir).listFiles()).toSeq.flatten
-          .filter(_.getName.endsWith(".parquet"))
-          .filterNot(f => fileStats(f.getAbsolutePath).get("__rows").exists(_._1 == 0))
-          .map { f =>
-            val st = fileStats(f.getAbsolutePath)
-            val seg =
-              if (st.isEmpty) "-"
-              else st.toSeq.sortBy(_._1)
-                .map { case (n, (lo, hi)) => s"$n:$lo:$hi" }.mkString(";")
-            s"P|${f.getAbsolutePath}|$seg"
-          }
+        nonEmptyFiles(stage(mapped.coalesce(1), s"$dst/data/commit-1-$id2"))
+          .map(posDeleteLine)
       }
     // catalog-level sidecars travel: schema (+ rename map, drop
     // tombstones), constraints, and the write-layout declarations
@@ -3388,7 +2974,7 @@ object ManifestTable {
     // (wrongly) scope brand-new rows. Found by the q401 gate: an
     // appended batch lost its k%5=0 rows to a delete that pre-dated it.
     val headV = math.max(1, parsed.map(_._2.seq).foldLeft(0)(math.max))
-    val claimed = claimManifest(dst, headV, relined ++ posLine)
+    val claimed = land(dst, Ref.Main, headV, CommitPlan(Base.Lines(relined ++ posLine)))
     // origin marker: which source and source VERSION this clone mirrors,
     // and the clone head that state corresponds to — [[syncCloneTracked]]
     // uses it to make the replica contract self-enforcing
@@ -3477,8 +3063,7 @@ object ManifestTable {
     * historical, so main's time travel is untouched), then removes the
     * branch namespace. Returns the number of files reclaimed. */
   def dropBranch(dir: String, name: String): Int = {
-    val md = branchMd(dir, name)
-    require(Files.isDirectory(md), s"no branch '$name' under $dir")
+    val md = mdOf(dir, Ref.Branch(name))
     // survivors = main refs + every OTHER branch's refs: once a shared
     // fork version has been expired from main, a sibling branch can be
     // the only remaining reference to the fork snapshot's files —
@@ -3486,9 +3071,7 @@ object ManifestTable {
     val mainFiles = versionsOnDisk(manifests(dir))
       .flatMap(manifestFiles(dir, _)).map(pathOf).toSet ++
       allBranchEntries(dir, except = Set(name)).map(_.path)
-    val branchOnly = versionsOnDisk(md)
-      .flatMap(v => Files.readAllLines(md.resolve(s"v$v.list")).asScala)
-      .map(pathOf).toSet -- mainFiles
+    val branchOnly = versionsOnDisk(md).flatMap(linesIn(md, _)).map(pathOf).toSet -- mainFiles
     branchOnly.foreach(f => Files.deleteIfExists(Paths.get(f)))
     Option(md.toFile.listFiles()).toSeq.flatten.foreach(f => Files.delete(f.toPath))
     Files.delete(md)
@@ -3515,14 +3098,7 @@ object ManifestTable {
     val md = manifests(dir)
     if (!Files.isDirectory(md)) return (0, 0L)
     val mainRefs = versionsOnDisk(md).flatMap(manifestFiles(dir, _)).map(pathOf)
-    val branchRefs = Option(md.toFile.listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("branch-"))
-      .flatMap { b =>
-        versionsOnDisk(b.toPath).flatMap { v =>
-          Files.readAllLines(b.toPath.resolve(s"v$v.list")).asScala.map(pathOf)
-        }
-      }
-    val refd = (mainRefs ++ branchRefs)
+    val refd = (mainRefs ++ allBranchEntries(dir).map(_.path))
       .map(p => Paths.get(p).toAbsolutePath.normalize.toString).toSet
     val cutoff = System.currentTimeMillis() - graceMs
     var n = 0
@@ -3555,11 +3131,7 @@ object ManifestTable {
     Option(md.toFile.listFiles()).toSeq.flatten
       .filter(f => f.isDirectory && f.getName.startsWith("branch-") &&
         !except.contains(f.getName.stripPrefix("branch-")))
-      .flatMap { b =>
-        versionsOnDisk(b.toPath).flatMap { v =>
-          Files.readAllLines(b.toPath.resolve(s"v$v.list")).asScala.map(parseEntry)
-        }
-      }
+      .flatMap(b => versionsOnDisk(b.toPath).flatMap(linesIn(b.toPath, _)).map(parseEntry))
   }
 
   /** AGE-based retention (Iceberg's `expire_snapshots(older_than)`): keep
@@ -3577,6 +3149,12 @@ object ManifestTable {
     expire(dir, keep)
   }
 
+  /** Snapshot expiry: drop every manifest older than the newest `keep`
+    * versions, then delete data files no SURVIVING manifest references
+    * (append-chain files shared with a live version are kept — liveness is
+    * a property of the file set union, not of which commit wrote the
+    * file). Returns (versions removed, orphan files deleted). Time travel
+    * to an expired version fails loudly on the missing manifest. */
   def expire(dir: String, keep: Int): (Int, Int) = {
     require(keep >= 1, "expire: must keep at least the current version")
     val cutoff = currentVersion(dir) - keep + 1

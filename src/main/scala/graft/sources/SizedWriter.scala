@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
 
 /** Output-file sizing — the small-files control every 100 TB table needs.
   *

@@ -93,9 +93,10 @@ class BucketedWriteBuilder(dir: String, schema: StructType,
   private var append = true
   // DYNAMIC OVERWRITE on a bucketed table (r11; previously a capability
   // refusal): the delete side re-splits survivors per bucket and
-  // republishes them TAGGED (ManifestTable.overwriteWhereTagged), the
-  // insert side is this builder's own bucket-split staged files — so
-  // storage-partitioned joins survive the nightly partition replace
+  // republishes them TAGGED (ManifestTable.overwriteWhere with a bucket
+  // spec), the insert side is this builder's own bucket-split staged
+  // files — so storage-partitioned joins survive the nightly partition
+  // replace
   private var overwritePred: Option[org.apache.spark.sql.Column] = None
   override def truncate(): WriteBuilder = { append = false; this }
   override def overwrite(filters: Array[org.apache.spark.sql.sources.Filter])
@@ -148,23 +149,10 @@ class BucketedBatchWrite(dir: String, schema: StructType, append: Boolean,
     val staged = messages.collect { case StagedBucketFilesMessage(fs) => fs }.flatten
     // WAP staging (r12): a branch-routed CoW lands under the branch's
     // nonce commit dir at the BRANCH head's next version
-    val (v, dataDirStr) = branch match {
-      case Some(b) => ManifestTable.branchNextCommitDir(dir, b)
-      case None =>
-        val nv = ManifestTable.currentVersion(dir) + 1
-        (nv, s"$dir/data/commit-$nv")
-    }
-    val dataDir = java.nio.file.Paths.get(dataDirStr)
-    java.nio.file.Files.createDirectories(dataDir)
-    val tagged = staged.toSeq.sortBy(_._2).map { case (b, p) =>
-      // bucket-prefixed name: one task stages same-named parts for
-      // different buckets under per-bucket staging subdirs
-      val target = dataDir.resolve(
-        s"b$b-${java.nio.file.Paths.get(p).getFileName}")
-      java.nio.file.Files.move(java.nio.file.Paths.get(p), target)
-      target.toAbsolutePath.toString ->
-        Map(s"_ptn_bucket_$col" -> (b.toDouble, b.toDouble))
-    }
+    val ref = ManifestTable.Ref.of(branch)
+    val (v, dataDir) = ManifestTable.nextCommit(dir, ref)
+    val tagged = StagedFiles.moveTagged(
+      staged.toSeq.map { case (b, p) => (Some(b), p) }, dataDir, Some(col))
     (cowScanned, overwrite) match {
       // group copy-on-write UPDATE/MERGE: replace exactly the scanned
       // files, re-entering every replacement WITH its bucket tag so
@@ -173,31 +161,23 @@ class BucketedBatchWrite(dir: String, schema: StructType, append: Boolean,
         val replaced = f().getOrElse(sys.error(
           "BucketedBatchWrite: row-level write committed without a scan — " +
             "cannot determine the replaced group set")).toSet
-        branch match {
-          case Some(b) => ManifestTable.publishCowTaggedToBranch(
-            dir, b, v, replaced, tagged, dataDir): Unit
-          case None =>
-            ManifestTable.publishCowTaggedExpected(dir, v, replaced, tagged): Unit
-        }
+        ManifestTable.publish(dir, ref, v,
+          ManifestTable.CommitPlan(replaced = replaced, added = tagged)): Unit
       // dynamic overwrite: delete-matching + append-new, one atomic
       // commit, every file (kept / rewritten / new) bucket-tagged
       case (None, Some(pred)) =>
-        ManifestTable.overwriteWhereTagged(SparkSession.active, dir, pred,
-          tagged, col, n, tableSchema = tableSchema, renames = renames): Unit
+        ManifestTable.overwriteWhere(SparkSession.active, dir, pred, tagged,
+          tableSchema = tableSchema, renames = renames, bucket = Some((col, n))): Unit
       case (None, None) =>
-        ManifestTable.publishTaggedExpected(dir, v, tagged, append): Unit
+        ManifestTable.publish(dir, ref, v, ManifestTable.CommitPlan(
+          ManifestTable.Base.of(append), added = tagged)): Unit
     }
     cleanupStaging()
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = cleanupStaging()
 
-  private def cleanupStaging(): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit
-    }
-    rm(new java.io.File(stagingDir))
-  }
+  private def cleanupStaging(): Unit = ManifestTable.rmTree(new java.io.File(stagingDir))
 }
 
 final case class BucketedWriterFactory(stagingDir: String, schema: StructType,

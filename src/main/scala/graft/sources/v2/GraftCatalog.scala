@@ -1033,7 +1033,7 @@ class GraftSqlTable(ident: String, dir: String, version: Int)
     // delivers it — plain/ordered, transform (the day-partition replace
     // is THE use case), and since r11 bucketed too: the rewrite
     // re-splits survivors per bucket and republishes them tagged
-    // (overwriteWhereTagged), so SPJ survives the replace
+    // (overwriteWhere with the bucket spec), so SPJ survives the replace
     (base + TableCapability.OVERWRITE_BY_FILTER).asJava
   }
 
@@ -1050,7 +1050,7 @@ class GraftSqlTable(ident: String, dir: String, version: Int)
       val v = Option(options.get("branchVersion"))
         .map(ManifestTable.resolveBranchVersion(dir, b, _))
         .getOrElse(ManifestTable.branchVersion(dir, b))
-      ManifestTable.sqlBranchEntriesAt(dir, b, v)
+      ManifestTable.sqlEntriesAt(dir, v, ManifestTable.Ref.Branch(b))
     }
     // DataFrame-reader time travel (`.option("versionAsOf", "3" |
     // "tagname")` / `.option("timestampAsOf", "2026-01-01 00:00:00")`)
@@ -1303,7 +1303,8 @@ class GraftSqlTable(ident: String, dir: String, version: Int)
 
   override def truncateTable(): Boolean = {
     GraftSqlTable.wapGuard(spark, "TRUNCATE")
-    ManifestTable.publish(dir, Seq.empty, append = false)
+    ManifestTable.publish(dir, ManifestTable.Ref.Main, ManifestTable.currentVersion(dir) + 1,
+      ManifestTable.CommitPlan(ManifestTable.Base.Empty))
     true
   }
 
@@ -1353,8 +1354,8 @@ class GraftSqlTable(ident: String, dir: String, version: Int)
           override def representUpdateAsDeleteAndInsert(): Boolean = true
           override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
             val scanEntries = wapBranch match {
-              case Some(b) => ManifestTable.sqlBranchEntriesAt(dir, b,
-                ManifestTable.branchVersion(dir, b))
+              case Some(b) => ManifestTable.sqlEntriesAt(dir,
+                ManifestTable.branchVersion(dir, b), ManifestTable.Ref.Branch(b))
               case None => entries
             }
             new GraftScanBuilder(ident, spark, scanEntries,
@@ -1376,8 +1377,8 @@ class GraftSqlTable(ident: String, dir: String, version: Int)
       }
       case None =>
         // unkeyed WAP staging covers EVERY layout (r12): plain and
-        // write.order through publishCowToBranch (r11), bucketed through
-        // publishCowTaggedToBranch (replacements re-enter with their SPJ
+        // write.order through a branch CoW publish (r11), bucketed through
+        // a tagged branch CoW publish (replacements re-enter with their SPJ
         // tags), transform through the cell-split rewrite + branch CoW
         // (hidden-partition stats ride the files' own _ptn_* footers)
         wapBranch.foreach { b =>
@@ -1387,8 +1388,8 @@ class GraftSqlTable(ident: String, dir: String, version: Int)
         }
     }
     val cowScanEntries = wapBranch match {
-      case Some(b) => ManifestTable.sqlBranchEntriesAt(dir, b,
-        ManifestTable.branchVersion(dir, b))
+      case Some(b) => ManifestTable.sqlEntriesAt(dir,
+        ManifestTable.branchVersion(dir, b), ManifestTable.Ref.Branch(b))
       case None => entries
     }
     new RowLevelOperationBuilder {
@@ -1719,7 +1720,6 @@ class GraftScanBuilder(ident: String, spark: SparkSession,
       }
     }
   }
-  private[v2] def prunedPaths: Seq[String] = prunedDataEntries.map(_.path)
 
   /** Which columns the built scan advertises for RUNTIME filtering
     * (DPP / group-filter `IN` predicates). Default: every stats-bearing

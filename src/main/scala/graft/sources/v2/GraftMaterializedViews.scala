@@ -269,7 +269,7 @@ object GraftMaterializedViews {
             // a stored avg(col) output is DERIVED (sum/cnt already serve
             // it) — its presence must not disqualify the view's other
             // partials from rolling up
-            case Average(a: AttributeReference, _) => true
+            case Average(_: AttributeReference, _) => true
             case _ => false
           }
         case _ => false

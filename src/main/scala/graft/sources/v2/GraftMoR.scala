@@ -660,7 +660,7 @@ private[graft] object GraftMoRScan {
   * per-row deltas — delete(rowId) / insert(row) — and the whole mutation
   * commits as ONE manifest version pairing an equality-delete of the
   * touched keys with an append of the replacement rows
-  * ([[ManifestTable.publishDeltaExpected]]). Cost is O(|touched rows|)
+  * ([[ManifestTable.publish]] with equality deletes). Cost is O(|touched rows|)
   * with ZERO target-file rewrites — the asymptotic fix over the
   * group-based ReplaceData path, which rewrites the whole table. Readers
   * serve the result merge-on-read ([[GraftMoRScan]]); compact()
@@ -687,42 +687,18 @@ class GraftDeltaBatchWrite(dir: String, keyCol: String,
     // WAP-staged mutations land on the audit branch's head instead
     // (per-branch-nonce commit dirs keep sequence scoping correct both
     // before and after fast-forward)
-    val (v, commitDir) = branch match {
-      case Some(b) => ManifestTable.branchNextCommitDir(dir, b)
-      case None =>
-        val v0 = ManifestTable.currentVersion(dir) + 1
-        (v0, java.nio.file.Paths.get(dir, "data", s"commit-$v0").toString)
-    }
-    def move(staged: Seq[String], sub: String): Seq[String] = {
-      val dataDir = java.nio.file.Paths.get(commitDir, sub)
-      java.nio.file.Files.createDirectories(dataDir)
-      staged.sorted.map { p =>
-        val t = dataDir.resolve(java.nio.file.Paths.get(p).getFileName)
-        java.nio.file.Files.move(java.nio.file.Paths.get(p), t)
-        t.toAbsolutePath.toString
-      }
-    }
-    val delFinal = move(dels, "del")
-    val rowFinal = move(rows, "rows")
-    branch match {
-      case Some(b) =>
-        ManifestTable.publishDeltaToBranch(dir, b, v, keyCol,
-          delFinal, rowFinal): Unit
-      case None =>
-        ManifestTable.publishDeltaExpected(dir, v, keyCol,
-          delFinal, rowFinal): Unit
-    }
+    val ref = ManifestTable.Ref.of(branch)
+    val (v, commitDir) = ManifestTable.nextCommit(dir, ref)
+    val delFinal = StagedFiles.move(dels, s"$commitDir/del").map(_.path)
+    val rowFinal = StagedFiles.move(rows, s"$commitDir/rows")
+    ManifestTable.publish(dir, ref, v, ManifestTable.CommitPlan(
+      added = rowFinal, eqDeletes = Some(keyCol -> delFinal)))
     cleanupStaging()
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = cleanupStaging()
 
-  private def cleanupStaging(): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit
-    }
-    rm(new java.io.File(stagingDir))
-  }
+  private def cleanupStaging(): Unit = ManifestTable.rmTree(new java.io.File(stagingDir))
 }
 
 final case class GraftDeltaWriterFactory(stagingDir: String,

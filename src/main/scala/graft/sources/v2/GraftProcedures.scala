@@ -9,7 +9,6 @@ import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.ManifestTable
 
@@ -600,41 +599,12 @@ private[v2] object GraftProcedures {
     * key-grouped scan keeps reporting its partitioning. */
   private def compactBucketed(spark: SparkSession, dir: String,
                               col: String, n: Int,
-                              tableSchema: Option[StructType] = None): Int = {
-    import org.apache.spark.sql.functions.{col => c, pmod, lit}
+                              tableSchema: Option[StructType]): Int = {
     val snap = ManifestTable.read(spark, dir, tableSchema = tableSchema)
-    val v = ManifestTable.currentVersion(dir) + 1
-    val dataDir = s"$dir/data/commit-$v"
-    // one pass: a directory write partitioned by the bucket value (the
-    // pmod formula matches GraftBucketFunction.bucketOf for long keys);
-    // partitionBy strips _b from the file content, so schemas are
-    // untouched and each leaf dir holds exactly one bucket's rows
-    snap.withColumn("_b",
-        pmod(pmod(c(col), lit(n.toLong)) + n, lit(n.toLong)))
-      .repartition(n, c("_b"))
-      .write.partitionBy("_b").mode("overwrite").parquet(s"$dataDir/staged")
-    // hoist each file out of its _b= dir into the commit root with a
-    // bucket-prefixed name (partition-dir layouts confuse downstream
-    // path handling; flat bucket-tagged files are the bucketed write's
-    // own shape)
-    val tagged = Option(new java.io.File(s"$dataDir/staged").listFiles()).toSeq
-      .flatten.filter(d => d.isDirectory && d.getName.startsWith("_b="))
-      .flatMap { d =>
-        val b = d.getName.stripPrefix("_b=").toInt
-        Option(d.listFiles()).toSeq.flatten
-          .filter(_.getName.endsWith(".parquet"))
-          .map { f =>
-            val target = java.nio.file.Paths.get(dataDir, s"b$b-${f.getName}")
-            java.nio.file.Files.move(f.toPath, target)
-            target.toAbsolutePath.toString ->
-              Map(s"_ptn_bucket_$col" -> (b.toDouble, b.toDouble))
-          }
-      }
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit
-    }
-    rm(new java.io.File(s"$dataDir/staged"))
-    ManifestTable.publishTaggedExpected(dir, v, tagged, append = false)
+    val (v, dataDir) = ManifestTable.nextCommit(dir, ManifestTable.Ref.Main)
+    ManifestTable.publish(dir, ManifestTable.Ref.Main, v, ManifestTable.CommitPlan(
+      ManifestTable.Base.Empty,
+      added = ManifestTable.stageBuckets(snap, col, n, dataDir, s"$dataDir/staged", "b")))
   }
 
   private def in(name: String, dt: DataType): ProcedureParameter =

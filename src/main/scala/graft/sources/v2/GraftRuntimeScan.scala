@@ -184,7 +184,7 @@ class GraftTrackedScan(ident: String, spark: SparkSession,
       case _ => None
     }
     (colOpt, values) match {
-      case (Some(c), Some(vs)) if vs.isEmpty => false
+      case (Some(_), Some(vs)) if vs.isEmpty => false
       case (Some(c), Some(vs)) =>
         e.stats.get(renames.getOrElse(c, c)) match {
           case Some((mn, mx)) => vs.exists(v => v >= mn && v <= mx)
@@ -224,7 +224,7 @@ class GraftAdaptiveScan(ident: String, spark: SparkSession,
     applyRuntimePredicates(predicates)
 }
 
-/** GROUP copy-on-write batch write: commits `publishCowExpected` —
+/** GROUP copy-on-write batch write: publishes a replace-set commit —
   * replace exactly the files the row-level scan read, keep everything
   * else (data lines with stats, delete entries) verbatim. `scannedF`
   * resolves at COMMIT time, after runtime group filtering has shrunk the
@@ -249,40 +249,19 @@ class GroupCowBatchWrite(dir: String, schema: StructType,
         "cannot determine the replaced group set")).toSet
     // WAP staging (unkeyed tables): the rewrite replaces files WITHIN
     // the audit branch's snapshot; main is untouched until fast_forward
-    val (v, dataDir) = branch match {
-      case Some(b) =>
-        val (bv, d) = ManifestTable.branchNextCommitDir(dir, b)
-        (bv, java.nio.file.Paths.get(d))
-      case None =>
-        val v0 = ManifestTable.currentVersion(dir) + 1
-        (v0, java.nio.file.Paths.get(dir, "data", s"commit-$v0"))
-    }
-    java.nio.file.Files.createDirectories(dataDir)
-    val finalPaths = staged.toSeq.sorted.map { p =>
-      val target = dataDir.resolve(java.nio.file.Paths.get(p).getFileName)
-      java.nio.file.Files.move(java.nio.file.Paths.get(p), target)
-      target.toAbsolutePath.toString
-      // a group DELETE matching every row of its scanned files rewrites
-      // to zero rows — keep empty outputs out of the manifest (same
-      // rule as overwriteWhere)
-    }.filterNot(f =>
-      ManifestTable.fileStats(f).get("__rows").exists(_._1 == 0))
-    branch match {
-      case Some(b) =>
-        ManifestTable.publishCowToBranch(dir, b, v, replaced, finalPaths,
-          commitDir = dataDir): Unit
-      case None =>
-        ManifestTable.publishCowExpected(dir, v, replaced, finalPaths): Unit
-    }
+    val ref = ManifestTable.Ref.of(branch)
+    val (v, dataDir) = ManifestTable.nextCommit(dir, ref)
+    // a group DELETE matching every row of its scanned files rewrites to
+    // zero rows — keep empty outputs out of the manifest (same rule as
+    // overwriteWhere)
+    val files = ManifestTable.nonEmptyFiles(
+      StagedFiles.move(staged.toSeq, dataDir).map(_.path))
+    ManifestTable.publish(dir, ref, v, ManifestTable.CommitPlan(
+      replaced = replaced, added = files.map(ManifestTable.DataFile(_))))
     cleanupStaging()
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = cleanupStaging()
 
-  private def cleanupStaging(): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit
-    }
-    rm(new java.io.File(stagingDir))
-  }
+  private def cleanupStaging(): Unit = ManifestTable.rmTree(new java.io.File(stagingDir))
 }

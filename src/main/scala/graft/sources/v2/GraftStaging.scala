@@ -9,7 +9,6 @@ import org.apache.spark.sql.connector.catalog.{Identifier, StagedTable, Supports
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.sources.ManifestTable
 
@@ -133,7 +132,11 @@ class GraftStagedTable(ident: Identifier, stageDir: String, finalDir: String,
     var published = false
     while (!published) {
       val v = ManifestTable.currentVersion(finalDir) + 1
-      try { ManifestTable.publishLinesExpected(finalDir, v, lines); published = true }
+      try {
+        ManifestTable.publish(finalDir, ManifestTable.Ref.Main, v,
+          ManifestTable.CommitPlan(ManifestTable.Base.Lines(lines.sorted)))
+        published = true
+      }
       catch { case _: ManifestTable.CommitConflictException => () }
     }
     // the staged layout declarations replace the old table's — written

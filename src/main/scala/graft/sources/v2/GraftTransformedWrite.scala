@@ -28,7 +28,7 @@ import graft.sources.ManifestTable
   *    same file shape `commitPartitioned` writes, so footer stats pick
   *    the transform up and the manifest line prunes on it with no new
   *    metadata;
-  *  - the driver publishes through the ordinary `publishExpected` CAS.
+  *  - the driver publishes through the ordinary `ManifestTable.publish` CAS.
   *
   * At 100 TB this closes the last seam in the hidden-partitioning loop:
   * CREATE TABLE ... PARTITIONED BY (days(ts)), INSERT INTO, and a
@@ -268,21 +268,11 @@ class TransformedBatchWrite(dir: String, schema: StructType, append: Boolean,
     }
     // WAP staging (r12): a branch-routed CoW lands under the branch's
     // nonce commit dir at the BRANCH head's next version
-    val (v, dataDirStr) = branch match {
-      case Some(b) => ManifestTable.branchNextCommitDir(dir, b)
-      case None =>
-        val nv = ManifestTable.currentVersion(dir) + 1
-        (nv, s"$dir/data/commit-$nv")
-    }
-    val dataDir = java.nio.file.Paths.get(dataDirStr)
-    java.nio.file.Files.createDirectories(dataDir)
-    val finalPaths = staged.toSeq.sorted.map { p =>
-      // cell-prefixed names are unique across a task's cells (the
-      // writer's namePrefix), so a bare-name move never collides
-      val target = dataDir.resolve(java.nio.file.Paths.get(p).getFileName)
-      java.nio.file.Files.move(java.nio.file.Paths.get(p), target)
-      target.toAbsolutePath.toString
-    }
+    val ref = ManifestTable.Ref.of(branch)
+    val (v, dataDir) = ManifestTable.nextCommit(dir, ref)
+    // cell-prefixed names are unique across a task's cells (the writer's
+    // namePrefix), so a bare-name move never collides
+    val files = StagedFiles.move(staged.toSeq, dataDir)
     // footer stats carry the physical _ptn_* columns — the manifest line
     // prunes on them exactly as it does for commitPartitioned's output
     (cowScanned, overwrite) match {
@@ -293,32 +283,24 @@ class TransformedBatchWrite(dir: String, schema: StructType, append: Boolean,
         val replaced = f().getOrElse(sys.error(
           "TransformedBatchWrite: row-level write committed without a scan — " +
             "cannot determine the replaced group set")).toSet
-        branch match {
-          case Some(b) => ManifestTable.publishCowToBranch(
-            dir, b, v, replaced, finalPaths, dataDir): Unit
-          case None =>
-            ManifestTable.publishCowExpected(dir, v, replaced, finalPaths): Unit
-        }
+        ManifestTable.publish(dir, ref, v,
+          ManifestTable.CommitPlan(replaced = replaced, added = files)): Unit
       // dynamic overwrite: delete-matching + append-new, one commit; the
       // rewrite keeps _ptn_* so untouched rows' cell stats survive
       case (None, Some(pred)) =>
         ManifestTable.overwriteWhere(org.apache.spark.sql.SparkSession.active,
-          dir, pred, finalPaths, keepHidden = true, tableSchema = tableSchema,
+          dir, pred, files, keepHidden = true, tableSchema = tableSchema,
           renames = renames): Unit
       case (None, None) =>
-        ManifestTable.publishExpected(dir, v, finalPaths, append): Unit
+        ManifestTable.publish(dir, ref, v, ManifestTable.CommitPlan(
+          ManifestTable.Base.of(append), added = files)): Unit
     }
     cleanupStaging()
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = cleanupStaging()
 
-  private def cleanupStaging(): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit
-    }
-    rm(new java.io.File(stagingDir))
-  }
+  private def cleanupStaging(): Unit = ManifestTable.rmTree(new java.io.File(stagingDir))
 }
 
 final case class TransformedWriterFactory(stagingDir: String,

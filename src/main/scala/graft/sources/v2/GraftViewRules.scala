@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.analysis.{NoSuchViewException, UnresolvedId
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.connector.catalog.{Identifier, View, ViewInfo}
+import org.apache.spark.sql.connector.catalog.{Identifier, ViewInfo}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.StructType
 
@@ -75,7 +75,7 @@ case class GraftViewRules(spark: SparkSession) extends Rule[LogicalPlan] {
     }.flatten.toSet
     plan.resolveOperatorsUp {
       // ---- reads: expand a referenced view into its parsed definition
-      case u @ UnresolvedRelation(parts, _, false)
+      case UnresolvedRelation(parts, _, false)
           if !(parts.length == 1 && cteNames.contains(parts.head.toLowerCase)) &&
             isGraftView(parts) =>
         val (g, id) = resolve(parts).get
@@ -93,11 +93,11 @@ case class GraftViewRules(spark: SparkSession) extends Rule[LogicalPlan] {
               allowExisting = c.allowExisting, replace = c.replace)
           case _ => c
         }
-      case d @ DropView(UnresolvedIdentifier(parts, _), ifExists)
+      case DropView(UnresolvedIdentifier(parts, _), ifExists)
           if resolve(parts).isDefined =>
         val (g, id) = resolve(parts).get
         GraftDropViewCommand(g, id, ifExists)
-      case s @ ShowViews(ns: UnresolvedNamespace, pattern, output)
+      case ShowViews(ns: UnresolvedNamespace, pattern, output)
           if ns.multipartIdentifier.headOption.exists(catalogOf(_).isDefined) =>
         val parts = ns.multipartIdentifier
         GraftShowViewsCommand(catalogOf(parts.head).get, parts.tail, pattern, output)
@@ -152,7 +152,7 @@ case class GraftViewRules(spark: SparkSession) extends Rule[LogicalPlan] {
     }.flatten.toSet
     val ctx: Seq[String] = v.currentCatalog() +: v.currentNamespace().toSeq
     val qualified = parsed.resolveOperatorsUp {
-      case rel @ UnresolvedRelation(parts, opts, false) =>
+      case rel @ UnresolvedRelation(parts, _, false) =>
         val full: Seq[String] =
           if (parts.length == 1 && !cteNames.contains(parts.head.toLowerCase))
             ctx ++ parts

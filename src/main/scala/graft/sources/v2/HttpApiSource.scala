@@ -84,7 +84,7 @@ class HttpApiScanBuilder(schema: StructType, opts: Map[String, String])
     * else is residual for Spark. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val (mine, residual) = filters.partition {
-      case GreaterThan(c, v: String) if c == dateCol => true
+      case GreaterThan(c, _: String) if c == dateCol => true
       case _ => false
     }
     mine.foreach {

@@ -198,7 +198,7 @@ final case class StagedFilesMessage(paths: Seq[String]) extends WriterCommitMess
 
 /** Batch write onto a BRANCH — `df.writeTo("graft.db.t")
   * .option("branch", "exp").append()`: task-staged files land as the
-  * branch's next version via [[ManifestTable.publishBranchFiles]], main
+  * branch's next version via [[ManifestTable.publish]], main
   * never sees them (the WAP surface through the public writer API).
   * Append-only, like every branch commit; INSERT OVERWRITE refuses at
   * the builder (no SupportsTruncate).
@@ -235,35 +235,16 @@ class BranchBatchWrite(dir: String, branch: String, schema: StructType,
       case StagedBucketFilesMessage(fs) => fs.map { case (b, p) => (Some(b), p) }
       case _ => Seq.empty
     }
-    val (v, dataDir) = ManifestTable.branchNextCommitDir(dir, branch)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dataDir))
-    val moved = staged.sortBy(_._2).map { case (b, p) =>
-      val name = b.map(i => s"b$i-").getOrElse("") +
-        java.nio.file.Paths.get(p).getFileName
-      val target = java.nio.file.Paths.get(dataDir).resolve(name)
-      java.nio.file.Files.move(java.nio.file.Paths.get(p), target)
-      (b, target.toAbsolutePath.toString)
-    }
-    bucketSpec match {
-      case Some((c, _)) =>
-        ManifestTable.publishBranchTagged(dir, branch, v, moved.map { case (b, p) =>
-          p -> Map(s"_ptn_bucket_$c" ->
-            (b.get.toDouble, b.get.toDouble))
-        }): Unit
-      case None =>
-        ManifestTable.publishBranchFiles(dir, branch, v, moved.map(_._2)): Unit
-    }
+    val ref = ManifestTable.Ref.Branch(branch)
+    val (v, dataDir) = ManifestTable.nextCommit(dir, ref)
+    ManifestTable.publish(dir, ref, v, ManifestTable.CommitPlan(
+      added = StagedFiles.moveTagged(staged, dataDir, bucketSpec.map(_._1))))
     cleanupStaging()
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = cleanupStaging()
 
-  private def cleanupStaging(): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit
-    }
-    rm(new java.io.File(stagingDir))
-  }
+  private def cleanupStaging(): Unit = ManifestTable.rmTree(new java.io.File(stagingDir))
 }
 
 class ManifestBatchWrite(dir: String, schema: StructType, append: Boolean,
@@ -284,39 +265,29 @@ class ManifestBatchWrite(dir: String, schema: StructType, append: Boolean,
       case _ => Seq.empty
     }
     // Claim the version ONCE, move staged files under it, then publish at
-    // exactly that version. publishExpected's no-replace manifest rename is
+    // exactly that version. The publish's no-replace manifest claim is
     // the atomic create: if a concurrent writer claimed v first, the
     // publish throws and the moved files remain unreferenced — readers
     // resolve manifests, never listings, so nothing half-committed is ever
     // visible (the old shape published first and detected the race only
     // after the wrong manifest was already live).
-    val v = ManifestTable.currentVersion(dir) + 1
-    val dataDir = java.nio.file.Paths.get(dir, "data", s"commit-$v")
-    java.nio.file.Files.createDirectories(dataDir)
-    val finalPaths = staged.toSeq.sorted.map { p =>
-      val target = dataDir.resolve(java.nio.file.Paths.get(p).getFileName)
-      java.nio.file.Files.move(java.nio.file.Paths.get(p), target)
-      target.toAbsolutePath.toString
-    }
+    val (v, dataDir) = ManifestTable.nextCommit(dir, ManifestTable.Ref.Main)
+    val files = StagedFiles.move(staged.toSeq, dataDir)
     overwrite match {
       // dynamic overwrite: delete-matching + append-new in ONE commit
       case Some(pred) =>
-        ManifestTable.overwriteWhere(SparkSession.active, dir, pred, finalPaths,
+        ManifestTable.overwriteWhere(SparkSession.active, dir, pred, files,
           tableSchema = tableSchema, renames = renames): Unit
       case None =>
-        ManifestTable.publishExpected(dir, v, finalPaths, append): Unit
+        ManifestTable.publish(dir, ManifestTable.Ref.Main, v,
+          ManifestTable.CommitPlan(ManifestTable.Base.of(append), added = files)): Unit
     }
     cleanupStaging()
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = cleanupStaging()
 
-  private def cleanupStaging(): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit
-    }
-    rm(new java.io.File(stagingDir))
-  }
+  private def cleanupStaging(): Unit = ManifestTable.rmTree(new java.io.File(stagingDir))
 }
 
 class ManifestWriterFactory(stagingDir: String, schema: StructType,
@@ -378,26 +349,13 @@ class ManifestStreamingWrite(dir: String, schema: StructType,
       case StagedBucketFilesMessage(fs) => fs.map { case (b, p) => (Some(b), p) }
       case _ => Seq.empty
     }
-    val dataDir = java.nio.file.Paths.get(dir, "data", s"commit-$v")
-    java.nio.file.Files.createDirectories(dataDir)
-    val moved = staged.sortBy(_._2).map { case (b, p) =>
-      val name = b.map(i => s"b$i-").getOrElse("") +
-        java.nio.file.Paths.get(p).getFileName
-      val target = dataDir.resolve(name)
-      java.nio.file.Files.move(java.nio.file.Paths.get(p), target)
-      (b, target.toAbsolutePath.toString)
-    }
-    try (bucketSpec match {
-      // bucketed epochs publish their bucket ids as manifest tags —
-      // the key-grouped scan needs EVERY file tagged, so a streamed
-      // commit must not break the SPJ contract
-      case Some((c, _)) =>
-        ManifestTable.publishTaggedExpected(dir, v, moved.map { case (b, p) =>
-          p -> Map(s"_ptn_bucket_$c" -> (b.get.toDouble, b.get.toDouble))
-        }, append = v > 1)
-      case None =>
-        ManifestTable.publishExpected(dir, v, moved.map(_._2), append = v > 1)
-    }): Unit
+    // bucketed epochs publish their bucket ids as manifest tags — the
+    // key-grouped scan needs EVERY file tagged, so a streamed commit must
+    // not break the SPJ contract
+    val files = StagedFiles.moveTagged(staged, s"$dir/data/commit-$v",
+      bucketSpec.map(_._1))
+    try ManifestTable.publish(dir, ManifestTable.Ref.Main, v,
+      ManifestTable.CommitPlan(added = files)): Unit
     catch {
       case e: ManifestTable.CommitConflictException =>
         throw new IllegalStateException(
@@ -412,12 +370,35 @@ class ManifestStreamingWrite(dir: String, schema: StructType,
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
     cleanup(epochId)
 
-  private def cleanup(epochId: Long): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit
+  private def cleanup(epochId: Long): Unit =
+    ManifestTable.rmTree(new java.io.File(stagingDir(epochId)))
+}
+
+/** Moves task-staged files into a commit's data directory — the last
+  * step before one driver-side [[ManifestTable.publish]] makes them
+  * visible. */
+private[v2] object StagedFiles {
+  /** `staged` (bucket id when the writer split by bucket, path) moved
+    * under `dataDir`. Bucket files are renamed `b<id>-<name>` (one task
+    * stages same-named parts for different buckets under per-bucket
+    * staging subdirs) and, when `bucketCol` is given, carry their
+    * `_ptn_bucket_<col>` manifest tag. */
+  def moveTagged(staged: Seq[(Option[Int], String)], dataDir: String,
+                 bucketCol: Option[String]): Seq[ManifestTable.DataFile] = {
+    val target = java.nio.file.Paths.get(dataDir)
+    java.nio.file.Files.createDirectories(target)
+    staged.sortBy(_._2).map { case (b, p) =>
+      val src = java.nio.file.Paths.get(p)
+      val dst = target.resolve(b.map(i => s"b$i-").getOrElse("") + src.getFileName)
+      java.nio.file.Files.move(src, dst)
+      val tag = for (c <- bucketCol; i <- b)
+        yield s"_ptn_bucket_$c" -> (i.toDouble, i.toDouble)
+      ManifestTable.DataFile(dst.toAbsolutePath.toString, tag.toMap)
     }
-    rm(new java.io.File(stagingDir(epochId)))
   }
+
+  def move(staged: Seq[String], dataDir: String): Seq[ManifestTable.DataFile] =
+    moveTagged(staged.map(None -> _), dataDir, None)
 }
 
 /** Serializable factory shipped to executors (the enclosing

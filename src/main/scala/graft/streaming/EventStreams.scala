@@ -409,7 +409,10 @@ object EventStreams {
 
   /** The reference's EP2 sink semantics (J1 + W1): per micro-batch, drop
     * rows whose key already exists in the sink, then append. Idempotent
-    * under replays. */
+    * under replays. Only an absent sink, or one holding no data file yet,
+    * reads as empty; any other failure to read the sink (an unreadable
+    * footer, a listing error) fails the batch, since treating it as "no
+    * rows yet" would re-append every key as a duplicate. */
   def idempotentParquetSink(stream: DataFrame, sinkDir: String, key: String,
                             checkpointDir: String): StreamingQuery = {
     val spark = stream.sparkSession
@@ -419,14 +422,26 @@ object EventStreams {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val existing =
-          try spark.read.parquet(sinkDir).select(key)
-          catch { case _: Throwable => spark.createDataFrame(
+          if (hasDataFiles(spark, sinkDir)) spark.read.parquet(sinkDir).select(key)
+          else spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            batch.select(key).schema) }
+            batch.select(key).schema)
         Relational.idempotentAppend(batch, existing, key)
           .write.mode("append").parquet(sinkDir)
         ()
       }
       .start()
+  }
+
+  /** Whether `dir` exists and holds a data file or partition directory
+    * (a name Spark's file index does not skip: not `_`- or `.`-prefixed)
+    * — one listing on the driver, no Spark job. */
+  private def hasDataFiles(spark: SparkSession, dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(p) && fs.listStatus(p).exists { st =>
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
   }
 }

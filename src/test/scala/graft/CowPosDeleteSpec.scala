@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions.col
   * verbatim would erase the same rows twice: `countStar` subtracts the
   * delete's `__rows` from a data sum that no longer contains them (a
   * silent wrong COUNT(*)), and the table stays pinned on the
-  * merge-on-read path forever. `publishCowExpected` /
-  * `publishCowTaggedExpected` now reconcile: fully-covered delete files
+  * merge-on-read path forever. Copy-on-write publishes (a `replaced`
+  * set in the commit plan) now reconcile: fully-covered delete files
   * drop, untouched ones carry verbatim, and a delete file spanning
   * touched AND untouched files is rewritten to keep only positions that
   * reference surviving files. ADVICE r10 (medium): `canDeleteWhere`
@@ -84,9 +84,10 @@ class CowPosDeleteSpec extends SparkSpec {
       .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).head
     val v1Lines = java.nio.file.Files
       .readAllLines(java.nio.file.Paths.get(dir, "_manifests", "v1.list"))
-    ManifestTable.publishLinesExpected(dir, 2,
-      (v1Lines.toArray(Array.empty[String]).toSeq :+
-        s"P|$delFile|__rows:4.0:4.0"))                                   // v2
+    ManifestTable.publish(dir, ManifestTable.Ref.Main, 2,
+      ManifestTable.CommitPlan(ManifestTable.Base.Lines(
+        (v1Lines.toArray(Array.empty[String]).toSeq :+
+          s"P|$delFile|__rows:4.0:4.0").sorted)))                        // v2
     val oldPos = ManifestTable.sqlEntriesAt(dir, 2).filter(_.posDelete)
     assert(oldPos.size == 1 && ManifestTable.countStar(dir).contains(396L))
 
@@ -193,8 +194,9 @@ class CowPosDeleteSpec extends SparkSpec {
     }
     val v1Lines = java.nio.file.Files
       .readAllLines(java.nio.file.Paths.get(dir, "_manifests", "v1.list"))
-    ManifestTable.publishLinesExpected(dir, 2,
-      v1Lines.toArray(Array.empty[String]).toSeq ++ pLines)              // v2
+    ManifestTable.publish(dir, ManifestTable.Ref.Main, 2,
+      ManifestTable.CommitPlan(ManifestTable.Base.Lines(
+        (v1Lines.toArray(Array.empty[String]).toSeq ++ pLines).sorted))) // v2
     assert(ManifestTable.countStar(dir).contains(320L))
 
     // bounded CoW touching ONLY the first range file: every one of the

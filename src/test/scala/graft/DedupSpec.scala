@@ -75,6 +75,19 @@ class DedupSpec extends SparkSpec {
     ()
   }
 
+  test("connectedComponents fails loudly when the round cap stops it before convergence") {
+    // a 50-node path: min-label propagation moves one hop per round, so
+    // 20 rounds leave nodes 21..49 on their own labels (30 components)
+    val path = (0L until 49L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException] {
+      Dedup.connectedComponents(path, maxIter = 20)
+    }
+    assert(e.getMessage.contains("maxIter = 20"))
+    val comps = Dedup.connectedComponents(path, maxIter = 64)
+    assert(comps.count() == 50)
+    assert(comps.select("component").distinct().as[Long].collect().toSeq == Seq(0L))
+  }
+
   test("prefixCandidates rejects degenerate thresholds") {
     val toks = Seq((1L, "a")).toDF("doc_id", "tok")
     intercept[IllegalArgumentException] {

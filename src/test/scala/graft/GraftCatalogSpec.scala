@@ -1090,7 +1090,7 @@ class GraftCatalogSpec extends SparkSpec {
       .toDF("k", "v").repartition(8)
       .writeTo("gtest.ns.wapo").option("branch", "exp").append()
     val bv = ManifestTable.branchVersion(dir, "exp")
-    val appended = ManifestTable.sqlBranchEntriesAt(dir, "exp", bv)
+    val appended = ManifestTable.sqlEntriesAt(dir, bv, ManifestTable.Ref.Branch("exp"))
       .filter(_.isData).filter(_.stats.get("k").exists(_._1 >= 200.0))
     assert(appended.size > 1,
       s"the ordered branch append should emit several files, got ${appended.size}")

@@ -660,7 +660,7 @@ class ManifestTableSpec extends SparkSpec {
     val planned = ManifestTable.currentVersion(dir) + 1
     ManifestTable.commit(Seq(999L).toDF("k"), dir, append = true) // foreign writer wins `planned`
     intercept[ManifestTable.CommitConflictException] {
-      ManifestTable.publishExpected(dir, planned, Seq.empty, append = true)
+      ManifestTable.publish(dir, ManifestTable.Ref.Main, planned, ManifestTable.CommitPlan())
     }
     assert(ManifestTable.currentVersion(dir) == 2 + n) // only the foreign commit landed
     assert(ManifestTable.read(spark, dir).count() == (n + 2).toLong)

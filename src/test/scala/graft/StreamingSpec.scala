@@ -85,6 +85,32 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(sink).count() == 2)
   }
 
+  test("idempotent parquet sink: only an absent or data-less sink reads as empty; an unreadable one fails the batch") {
+    val tmp = Files.createTempDirectory("graft_stream_bad").toString
+    val src = s"$tmp/src"
+    Seq(ev(1, 1), ev(2, 2)).toDS().write.parquet(src)
+    def stream = spark.readStream.schema(Seq.empty[Event].toDS().schema).parquet(src)
+    // a sink directory holding only a job marker has no rows yet
+    val fresh = s"$tmp/fresh"
+    Files.createDirectories(java.nio.file.Paths.get(fresh))
+    Files.write(java.nio.file.Paths.get(fresh, "_SUCCESS"), Array.emptyByteArray)
+    EventStreams.idempotentParquetSink(stream, fresh, "event_id", s"$tmp/cp1")
+      .awaitTermination()
+    assert(spark.read.parquet(fresh).count() == 2)
+    // a sink whose data file cannot be read must not be taken as empty:
+    // that would re-append every key as a duplicate
+    val bad = s"$tmp/bad"
+    Files.createDirectories(java.nio.file.Paths.get(bad))
+    Files.write(java.nio.file.Paths.get(bad, "part-00000-corrupt.snappy.parquet"),
+      "not a parquet file".getBytes("UTF-8"))
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      EventStreams.idempotentParquetSink(stream, bad, "event_id", s"$tmp/cp2")
+        .awaitTermination()
+    }
+    assert(new java.io.File(bad).list().toSeq == Seq("part-00000-corrupt.snappy.parquet"),
+      "the failed batch must append nothing")
+  }
+
   test("manifestAppendSink: replay skips its own versions; a foreign commit at a mapped version fails loudly") {
     import graft.sources.ManifestTable
     val tmp = Files.createTempDirectory("graft_msink").toString

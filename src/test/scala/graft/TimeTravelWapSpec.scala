@@ -101,7 +101,7 @@ class TimeTravelWapSpec extends SparkSpec {
         (1L to 200L).sum, "main reads must not see staged mutations")
       val bv = ManifestTable.branchVersion(dir, "audit")
       assert(bv == 3, s"two staged mutations expected, head v$bv")
-      val be = ManifestTable.sqlBranchEntriesAt(dir, "audit", bv)
+      val be = ManifestTable.sqlEntriesAt(dir, bv, ManifestTable.Ref.Branch("audit"))
       assert(be.filter(_.isData).forall(_.stats.contains("_ptn_bucket_k")),
         "every staged replacement must re-enter WITH its bucket tag")
       val expectStaged = (1L to 190L).map(k => if (k % 2 == 0) k + 1000 else k).sum
@@ -146,7 +146,7 @@ class TimeTravelWapSpec extends SparkSpec {
       spark.sql("UPDATE gwap.ns.tw SET v = v + 1000 WHERE v % 2 = 0")  // branch v2
       assert(ManifestTable.currentVersion(dir) == 1, "main must stay pinned")
       val bv = ManifestTable.branchVersion(dir, "audit")
-      val be = ManifestTable.sqlBranchEntriesAt(dir, "audit", bv)
+      val be = ManifestTable.sqlEntriesAt(dir, bv, ManifestTable.Ref.Branch("audit"))
       assert(be.filter(_.isData).forall(_.stats.contains("_ptn_days_d")),
         "staged cell-split replacements must keep their _ptn_* day stats")
     } finally spark.conf.unset("spark.graft.wap.branch")
@@ -184,7 +184,7 @@ class TimeTravelWapSpec extends SparkSpec {
       // zero pre-mutation data files rewritten — pure delta staging
       val bv = ManifestTable.branchVersion(dir, "stage")
       assert(bv == 4, s"three staged mutations expected, head v$bv")
-      val branchEntries = ManifestTable.sqlBranchEntriesAt(dir, "stage", bv)
+      val branchEntries = ManifestTable.sqlEntriesAt(dir, bv, ManifestTable.Ref.Branch("stage"))
       assert(mainFiles.toSet.subsetOf(
         branchEntries.filter(_.isData).map(_.path).toSet),
         "staged deltas must keep every pre-mutation file")
