@@ -1,8 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.{ParityFunctions => PF}
+import graft.sources.ManifestTable
 
 /** Fuzzy-deduplication operators for a training-data pipeline: MinHash+LSH,
   * SimHash, and exact n-gram Jaccard verification.
@@ -111,38 +117,123 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Connected components over near-duplicate pairs → dedup clusters
-    * (component id = smallest member id). Min-label propagation: each
-    * iteration is one join + partial-min aggregate, converging within the
-    * cluster diameter (near-dup clusters are shallow). The GraphX-free
-    * formulation that scales with ordinary shuffle capacity.
+  /** Connected components over near-duplicate pairs → dedup clusters: one
+    * `(id, component)` row per id that a pair names, where `component` is
+    * the smallest id of the cluster in the order Spark's `min` uses and
+    * `id` keeps the pairs' id type. A pair with a null end is ignored: a
+    * null id names no row that [[keepCanonical]] could drop.
     *
-    * Fault-tolerance: labels are RELIABLY checkpointed every
-    * `checkpointEvery` iterations (`rdd.checkpoint()` to `checkpointDir` —
-    * pass a durable HDFS/S3 path in production; `localCheckpoint` would pin
-    * blocks to executors and lose them on executor failure/deallocation).
-    * Between checkpoints the persisted RDD bounds lineage to
-    * `checkpointEvery` join+agg rounds — recomputable, cheap to write. The
-    * convergence test rides the SAME job that materializes the new labels,
-    * via a changed-row accumulator — no per-iteration `isEmpty` re-scan of
-    * the join lineage. (Task retries can over-count the accumulator; it is
-    * only compared to zero, so the worst case is one redundant extra
-    * iteration.)
+    * Two paths, one output:
+    *  - **Driver.** When `id_a` and `id_b` share an id type with a
+    *    driver-side twin of Spark's order (Long and Int ids; `UTF8String`
+    *    byte order for binary-collated strings, not `String.compareTo`)
+    *    and one bounded collect, `limit(DriverPairs + 1)`, returns at most
+    *    [[DriverPairs]] rows, a union-find labels them on the driver and the
+    *    labels come back as a local relation. No checkpoint, no job per
+    *    round: the collect is one job over a materialized one-partition
+    *    pair set (what AQE makes of a small one); over P partitions Spark's
+    *    incremental limit scan takes up to about log₄ P + 1.
+    *  - **Distributed.** Otherwise (a pair set over the bound has paid one
+    *    partial pass for that collect), alternating large-star and small-star
+    *    rounds (Kiveris et al., "Connected Components in MapReduce and
+    *    Beyond", SoCC 2014), one job each: O(log n) rounds where min-label
+    *    propagation needs one per hop of the cluster diameter. Each undirected
+    *    edge is kept once as `(hi, lo)`, `hi > lo`. Large-star re-points each
+    *    edge `(v, u)` at `min Γ⁺(u)`; small-star re-points every smaller
+    *    neighbour of a node, and the node itself, at the smallest of them.
+    *    Both are identities exactly on a star forest (no `lo` is also a `hi`,
+    *    no `hi` has two `lo`s), whose centres are the component minima, so
+    *    a round that moved nothing has converged; the `dirty` flag counting
+    *    that rides the same job that materializes the round.
+    *
+    * Fault-tolerance (distributed path): each round's edges are persisted
+    * and RELIABLY checkpointed every `checkpointEvery` rounds
+    * (`rdd.checkpoint()` to `checkpointDir` — pass a durable HDFS/S3 path in
+    * production; `localCheckpoint` would pin blocks to executors and lose
+    * them on executor failure/deallocation), so lineage never spans more
+    * than `checkpointEvery` rounds. Task retries can over-count the dirty
+    * accumulator; it is only compared to zero, so the worst case is one
+    * redundant round.
+    *
+    * Throws IllegalStateException when round `maxIter` still moved an
+    * edge: the labels have not converged.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
                           checkpointDir: Option[String] = None,
                           checkpointEvery: Int = 3): DataFrame =
-    connectedComponentsStats(pairs, maxIter, checkpointDir, checkpointEvery)._1
+    components(pairs, DriverPairs, maxIter, checkpointDir, checkpointEvery)
 
-  /** [[connectedComponents]] plus per-iteration wall seconds — the scale
-    * probe ([[graft.CCProbe]]) asserts iteration count stays within the
-    * graph diameter bound and per-iteration cost stays flat (i.e. the
-    * persist/checkpoint discipline really does stop lineage growth).
-    * Throws IllegalStateException when round `maxIter` still changed a
-    * label: the labels have not converged. */
-  def connectedComponentsStats(pairs: DataFrame, maxIter: Int = 20,
-                               checkpointDir: Option[String] = None,
-                               checkpointEvery: Int = 3): (DataFrame, List[Double]) = {
+  /** Pair sets of at most this many rows take the driver path of
+    * [[connectedComponents]]. Measured with Spark's `SizeEstimator` on
+    * 2^18 Long-id pairs over 388 k distinct ids: 100 B per pair for the
+    * collected rows, 156 B for the union-find, 78 B for the label rows and
+    * 130 B for the local relation built from them, ~460 B per pair or
+    * ~120 MB at the bound while the call runs; only the local relation
+    * (~34 MB) outlives it. [[keepCanonical]] already broadcasts every
+    * non-canonical id from the driver, so the driver is assumed to hold a
+    * set of this size anyway. */
+  private val DriverPairs = 1 << 18
+
+  /** [[connectedComponents]] with the driver-path bound as a parameter: 0
+    * sends every pair set, even an empty one, to the distributed path. */
+  private[graft] def components(pairs: DataFrame, driverPairs: Int, maxIter: Int,
+                                checkpointDir: Option[String],
+                                checkpointEvery: Int): DataFrame = {
+    val (ta, tb) = (pairs.schema("id_a").dataType, pairs.schema("id_b").dataType)
+    val order = if (ta == tb && driverPairs > 0) driverOrder(ta) else None
+    val local = order.flatMap { ord =>
+      val rows = pairs.select("id_a", "id_b").limit(driverPairs + 1).collect()
+      if (rows.length > driverPairs) None
+      else Some(pairs.sparkSession.createDataFrame(unionFind(rows, ord).asJava, labelSchema(ta)))
+    }
+    local.getOrElse(distributedComponents(pairs, maxIter, checkpointDir, checkpointEvery))
+  }
+
+  private def labelSchema(t: DataType): StructType =
+    StructType(Seq(StructField("id", t, nullable = false),
+      StructField("component", t, nullable = false)))
+
+  /** The driver-side twin of the order Spark's `min` uses on `t`; None for
+    * id types without one, which take the distributed path. */
+  private def driverOrder(t: DataType): Option[Ordering[Any]] = t match {
+    case LongType => Some(Ordering.by[Any, Long](_.asInstanceOf[Long]))
+    case IntegerType => Some(Ordering.by[Any, Int](_.asInstanceOf[Int]))
+    // UTF8_BINARY strings (StringType equality includes the collation):
+    // UTF-8 byte order, not UTF-16 code-unit order. "｡" (U+FF61) sorts
+    // before "😀" (U+1F600) here and after it under String.compareTo
+    case StringType =>
+      Some(Ordering.fromLessThan[Any]((a, b) =>
+        UTF8String.fromString(a.asInstanceOf[String])
+          .compareTo(UTF8String.fromString(b.asInstanceOf[String])) < 0))
+    case _ => None
+  }
+
+  /** Union-find over collected `(id_a, id_b)` rows, skipping null ends.
+    * Every root is the smallest id of its set under `ord`, so one `find`
+    * names the component. */
+  private def unionFind(rows: Array[Row], ord: Ordering[Any]): Seq[Row] = {
+    val index = mutable.HashMap.empty[Any, Int]
+    val ids = new Array[Any](2 * rows.length)
+    val parent = new Array[Int](2 * rows.length)
+    var n = 0
+    def node(x: Any): Int = index.getOrElseUpdate(x, { ids(n) = x; parent(n) = n; n += 1; n - 1 })
+    def find(i: Int): Int = {
+      var j = i
+      while (parent(j) != j) { parent(j) = parent(parent(j)); j = parent(j) } // path halving
+      j
+    }
+    rows.foreach { r =>
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        val (a, b) = (find(node(r.get(0))), find(node(r.get(1))))
+        if (a != b) { if (ord.lt(ids(a), ids(b))) parent(b) = a else parent(a) = b }
+      }
+    }
+    (0 until n).map(i => Row(ids(i), ids(find(i))))
+  }
+
+  private def distributedComponents(pairs: DataFrame, maxIter: Int,
+                                    checkpointDir: Option[String],
+                                    checkpointEvery: Int): DataFrame = {
     val spark = pairs.sparkSession
     val sc = spark.sparkContext
     if (sc.getCheckpointDir.isEmpty) checkpointDir match {
@@ -161,38 +252,41 @@ object Dedup {
         // Checkpoint parts must outlive this call (the returned frame's
         // lineage references them until the caller materializes it), so
         // clean up at JVM exit rather than at convergence.
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-            f.delete(): Unit
-          }
-          rm(tmp.toFile)
-        }))
+        Runtime.getRuntime.addShutdownHook(new Thread(() => ManifestTable.rmTree(tmp.toFile)))
     }
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+    // every pair once as (hi, lo); self-loops stay here only so their ids
+    // get a label
+    val oriented = pairs.filter(col("id_a").isNotNull && col("id_b").isNotNull)
+      .select(greatest(col("id_a"), col("id_b")).as("hi"),
+        least(col("id_a"), col("id_b")).as("lo"))
       .distinct().checkpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("component"))
-    val labelSchema = labels.schema
-    var prevRdd: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = None
+    val idType = oriented.schema("hi").dataType
+    val edgeSchema = StructType(Seq(StructField("hi", idType), StructField("lo", idType)))
+    var edges = oriented.filter(col("hi") =!= col("lo"))
+    var prevRdd: Option[org.apache.spark.rdd.RDD[Row]] = None
     var iter = 0
     var done = false
-    val iterSecs = List.newBuilder[Double]
     while (iter < maxIter && !done) {
-      val t0 = System.nanoTime()
-      val nmin = edges
-        .join(labels.select(col("id").as("dst"), col("component").as("dcomp")), Seq("dst"))
-        .groupBy(col("src")).agg(min(col("dcomp")).as("ncomp"))
-      val flagged = labels
-        .join(nmin.select(col("src").as("id"), col("ncomp")), Seq("id"), "left")
-        .select(col("id"),
-          least(col("component"), coalesce(col("ncomp"), col("component"))).as("newc"),
-          (coalesce(col("ncomp"), col("component")) < col("component")).as("_ch"))
-      val acc = sc.longAccumulator(s"cc-changed-$iter")
-      val rdd = flagged.rdd.map { r =>
+      // large-star: edge (v, u), v > u, becomes (v, min Γ⁺(u)); `moved`
+      // when u has a smaller neighbour, i.e. a lo is also a hi
+      val lows = edges.groupBy(col("hi").as("u")).agg(min(col("lo")).as("m"))
+      val large = edges.join(lows, col("lo") === col("u"), "left")
+        .select(col("hi"), coalesce(col("m"), col("lo")).as("lo"),
+          col("m").isNotNull.as("moved"))
+      // small-star: node u and each smaller neighbour v ≠ m point at m, the
+      // smallest of them; a hi with two distinct los also moves
+      val star = large.groupBy(col("hi"))
+        .agg(min(col("lo")).as("m"), max(col("lo")).as("x"), max(col("moved")).as("moved"))
+      val next = large.join(star.select(col("hi"), col("m")), "hi")
+        .filter(col("lo") =!= col("m"))
+        .select(col("lo").as("hi"), col("m").as("lo"), lit(false).as("dirty"))
+        .unionByName(star.select(col("hi"), col("m").as("lo"),
+          (col("moved") || col("m") =!= col("x")).as("dirty")))
+        .groupBy(col("hi"), col("lo")).agg(max(col("dirty")).as("dirty"))
+      val acc = sc.longAccumulator(s"cc-dirty-$iter")
+      val rdd = next.rdd.map { r =>
         if (r.getBoolean(2)) acc.add(1L)
-        org.apache.spark.sql.Row(r.get(0), r.get(1))
+        Row(r.get(0), r.get(1))
       }
       rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       if (iter % checkpointEvery == checkpointEvery - 1)
@@ -201,17 +295,17 @@ object Dedup {
       done = acc.value == 0
       prevRdd.foreach(_.unpersist(blocking = false))
       prevRdd = Some(rdd)
-      labels = spark.createDataFrame(rdd, labelSchema)
+      edges = spark.createDataFrame(rdd, edgeSchema)
       iter += 1
-      iterSecs += (System.nanoTime() - t0) / 1e9
     }
-    // min-label propagation moves a label one hop per round, so a graph
-    // whose diameter exceeds the cap is still changing here — returning
-    // those labels would silently split real components
     if (!done) throw new IllegalStateException(
-      s"connectedComponents: labels still changing after maxIter = $maxIter " +
-        "rounds (the graph's diameter exceeds the cap); raise maxIter")
-    (labels, iterSecs.result())
+      s"connectedComponents: edges still moving after maxIter = $maxIter " +
+        "large-star/small-star rounds; raise maxIter")
+    // converged: edges is a star forest, (leaf, component minimum)
+    val ids = oriented.select(col("hi").as("id")).union(oriented.select(col("lo"))).distinct()
+    val labels = ids.join(edges, col("id") === col("hi"), "left")
+      .select(col("id"), coalesce(col("lo"), col("id")).as("component"))
+    spark.createDataFrame(labels.rdd, labelSchema(idType))
   }
 
   /** The dedup endpoint: given the corpus and near-dup components, keep

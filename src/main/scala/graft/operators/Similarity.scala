@@ -163,7 +163,8 @@ object Similarity {
     // iteration (k·dim doubles — bytes, not data) and rebuild a literal
     // frame, so the Lloyd loop carries NO growing lineage — each iteration
     // recomputes only itself, and the returned frames don't re-run the
-    // whole chain (same discipline as connectedComponents' checkpoints).
+    // whole chain (the discipline of connectedComponents' distributed
+    // rounds, which checkpoint their edges).
     import scala.jdk.CollectionConverters._
     val centroidSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("_j", org.apache.spark.sql.types.LongType),

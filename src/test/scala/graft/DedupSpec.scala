@@ -76,16 +76,20 @@ class DedupSpec extends SparkSpec {
   }
 
   test("connectedComponents fails loudly when the round cap stops it before convergence") {
-    // a 50-node path: min-label propagation moves one hop per round, so
-    // 20 rounds leave nodes 21..49 on their own labels (30 components)
+    // a 50-node path: one component at the default cap on both paths
+    // (large-star/small-star needs O(log n) rounds, the driver path none);
+    // a cap below that on the distributed path throws
     val path = (0L until 49L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val e = intercept[IllegalStateException] {
-      Dedup.connectedComponents(path, maxIter = 20)
+    for (driverPairs <- Seq(1 << 18, 0)) {
+      val comps = Dedup.components(path, driverPairs, maxIter = 20, None, 3)
+      assert(comps.count() == 50)
+      assert(comps.select("component").distinct().as[Long].collect().toSeq == Seq(0L))
     }
-    assert(e.getMessage.contains("maxIter = 20"))
-    val comps = Dedup.connectedComponents(path, maxIter = 64)
-    assert(comps.count() == 50)
-    assert(comps.select("component").distinct().as[Long].collect().toSeq == Seq(0L))
+    assert(Dedup.connectedComponents(path).select("component").distinct().count() == 1)
+    val e = intercept[IllegalStateException] {
+      Dedup.components(path, 0, maxIter = 2, None, 3)
+    }
+    assert(e.getMessage.contains("maxIter = 2"))
   }
 
   test("prefixCandidates rejects degenerate thresholds") {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.sources.ManifestTable
 import graft.sources.v2.MoRDeleteKeyLoader
 
@@ -12,6 +10,7 @@ import graft.sources.v2.MoRDeleteKeyLoader
   * other bytes is read again, never served stale. */
 class MoRDeleteMemoSpec extends SparkSpec {
   import spark.implicits._
+  import JobCount.jobsOf
 
   private lazy val wh: String = {
     val d = java.nio.file.Files.createTempDirectory("graft_mdm_wh").toString
@@ -19,43 +18,6 @@ class MoRDeleteMemoSpec extends SparkSpec {
     spark.conf.set("spark.sql.catalog.gmdm.warehouse", d)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gmdm.ns")
     d
-  }
-
-  /** Job group of every job started, and the groups whose closing
-    * marker job has started. */
-  private val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  private val markers = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private lazy val listener: Unit = spark.sparkContext.addSparkListener(new SparkListener {
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      Option(e.properties).foreach { p =>
-        Option(p.getProperty("spark.jobGroup.id")).foreach { g =>
-          if (p.getProperty("spark.job.description") == "mdm-marker") markers.add(g): Unit
-          else jobGroups.add(g): Unit
-        }
-      }
-  })
-  private var groupSeq = 0
-
-  /** Spark jobs `body` starts from this thread. A marker job in the same
-    * group closes the window: the listener bus delivers events in order,
-    * so once it has seen the marker it has seen every earlier job. */
-  private def jobsOf(body: => Unit): Int = {
-    listener
-    groupSeq += 1
-    val g = s"mdm-$groupSeq"
-    val sc = spark.sparkContext
-    sc.setJobGroup(g, g)
-    try {
-      body
-      sc.setJobDescription("mdm-marker")
-      sc.parallelize(Seq(1), 1).count(): Unit
-    } finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30000000000L
-    while (!markers.contains(g)) {
-      assert(System.nanoTime() < deadline, "the listener bus did not drain")
-      Thread.sleep(20)
-    }
-    jobGroups.toArray.count(_ == g)
   }
 
   private def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, String, Long)] =
