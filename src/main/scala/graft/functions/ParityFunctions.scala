@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 /** Column builders re-expressing the reference's row-level transforms
   * (`src/kafka_client/transformations.py`) as declarative Spark expressions —
   * they stay inside whole-stage codegen instead of running per-row Python.
+  * None uses a lambda (`transform`/`filter`): those are `CodegenFallback`
+  * in Spark 4.1 and would evaluate every element interpreted.
   */
 object ParityFunctions {
 
@@ -46,45 +48,27 @@ object ParityFunctions {
     * sampling/pipeline faces (q117/q118/q120) to pin exact sample
     * membership, not just counts. */
   def idsFingerprint(id: Column): Column =
-    md5(array_join(transform(array_sort(collect_list(id)),
-      _.cast("string")), ",").cast("binary"))
+    md5(array_join(array_sort(collect_list(id)).cast("array<string>"), ",")
+      .cast("binary"))
 
   /** Whitespace tokenization with lowercasing — shared by the text-analysis
-    * and dedup operators. Empty tokens (from repeated spaces) are dropped.
+    * and dedup operators. Empty tokens (from repeated spaces) are dropped;
+    * `split` yields no null elements.
     */
   def tokens(text: Column): Column =
-    filter(split(lower(text), " "), t => length(t) > 0)
+    array_remove(split(lower(text), " "), "")
 
   /** Distinct word n-grams (shingles) of `n` consecutive tokens, joined by a
-    * single space. Built with higher-order functions only — stays codegen'd.
-    *
-    * Perf: callers should pass a MATERIALIZED tokens column (separate
-    * projection), not `tokens(text)` inline — otherwise every array access
-    * in the lambda re-runs the split. `slice` keeps it to one array
-    * reference per shingle.
+    * single space, each at its first occurrence — the native [[Shingles]]
+    * kernel. `ts` may be [[tokens]] or the raw `split(lower(text), " ")`:
+    * the kernel drops empty tokens itself.
     */
-  def shinglesFromTokens(ts: Column, n: Int): Column =
-    array_distinct(shingleSeq(ts, n))
+  def shinglesFromTokens(ts: Column, n: Int): Column = Shingles.shingles(ts, n, distinct = true)
 
-  /** All n-token shingles IN ORDER (duplicates kept). When per-row
-    * n-gram arrays run to HUNDREDS of elements (char trigrams — q104),
-    * explode this raw sequence and dedup with a `.distinct()` aggregate:
-    * feeding `array_distinct(...)` as a generator input measured ~12×
-    * slower there than the identical expression in a plain projection,
-    * and after `spread(df, id)` the distinct aggregate is partition-local
-    * (`HashPartitioning(id)` satisfies the (id, shingle) clustering — no
-    * exchange, and downstream `groupBy(id)` stays exchange-free). For
-    * ~50-token word shingles the trade INVERTS (A/B-measured 15-25%
-    * slower): the O(n²) per-row distinct is cheap at n≈50 and beats
-    * per-row hash-table inserts — use [[shinglesFromTokens]] there. */
-  def shingleSeq(ts: Column, n: Int): Column = {
-    val cnt = size(ts) - (n - 1)
-    // Guard: sequence(1, 0) would yield a DESCENDING [1, 0] in Spark.
-    when(cnt >= 1,
-      transform(sequence(lit(1), cnt),
-        i => array_join(slice(ts, i, lit(n)), " ")))
-      .otherwise(array().cast("array<string>"))
-  }
+  /** All n-token shingles IN ORDER, duplicates kept (term-frequency
+    * vectors, span counts). */
+  def shingleSeq(ts: Column, n: Int): Column = Shingles.shingles(ts, n, distinct = false)
 
-  def wordShingles(text: Column, n: Int): Column = shinglesFromTokens(tokens(text), n)
+  def wordShingles(text: Column, n: Int): Column =
+    shinglesFromTokens(split(lower(text), " "), n)
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.functions.{ParityFunctions => PF}
+import graft.functions.{MinHashSignature, ParityFunctions => PF}
 import graft.sources.ManifestTable
 
 /** Fuzzy-deduplication operators for a training-data pipeline: MinHash+LSH,
@@ -18,53 +18,63 @@ import graft.sources.ManifestTable
   * min-hash family that the DuckDB oracle can reproduce exactly, unlike
   * engine-specific hash() builtins.
   *
-  * Scale notes (100 TB): the pipeline is explode → partial-agg → band join.
-  * Shingle explosion is linear in corpus size; signatures reduce each doc to
-  * `numHashes` strings (map-side combine); the LSH band self-join only
-  * shuffles (band_idx, band_hash) keys, never full texts. Hub buckets (a
-  * band shared by many docs) are the skew risk — AQE skew-join handles
-  * moderate cases; a frequency cap on bucket size is the escape hatch.
+  * Scale notes (100 TB): MinHash works on one row per document, `(id,
+  * shingles, sz)`, with the signature computed in the same projection by
+  * native kernels ([[graft.functions.Shingles]],
+  * [[graft.functions.MinHashSignature]]) — linear in corpus size, no
+  * shuffle. The LSH band self-join shuffles only (band_idx, band_hash, id)
+  * triples, never texts; Jaccard verification shuffles the candidate pairs
+  * and, per pair end, one per-document shingle array — never exploded
+  * shingle rows. Hub buckets (a band shared by many docs) are the skew
+  * risk — AQE skew-join handles moderate cases; a frequency cap on bucket
+  * size is the escape hatch.
   */
 object Dedup {
 
-  /** Exploded distinct (id, shingle) pairs — the base relation for both
-    * MinHash and Jaccard. Tokenization is materialized in its own
-    * projection so the per-shingle lambda doesn't re-split the text. */
-  def shingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    Relational.spread(df, col(idCol)) // shuffle raw docs (small) instead of
-                               // exploded shingles; downstream groupBy(id)
-                               // reuses this partitioning with no further
-                               // exchange; explicit count so AQE can't
-                               // coalesce the CPU-heavy shingle stage to 1
-      .select(col(idCol), PF.tokens(col(textCol)).as("_toks"))
-      // fused array_distinct is fine HERE: ~50-token docs make the O(n²)
-      // per-row distinct cheap, and A/B showed a distinct-aggregate
-      // variant 15-25% SLOWER (hash-table inserts cost more than 2.5k
-      // string compares). Char-trigram-scale arrays (hundreds of
-      // elements) are the opposite — see PF.shingleSeq and q104.
-      .select(col(idCol), explode(PF.shinglesFromTokens(col("_toks"), n)).as("shingle"))
+  /** One row per document: `(idCol, shingles, sz)` — its distinct word
+    * `n`-shingles in first-occurrence order and their count (a long).
+    * A document with fewer than `n` tokens has `sz = 0`, a null signature
+    * and no band key. */
+  def docShingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    df.select(col(idCol), PF.wordShingles(col(textCol), n).as("shingles"))
+      .select(col(idCol), col("shingles"), size(col("shingles")).cast("long").as("sz"))
 
-  /** MinHash signatures: for hash function i, `min(md5(i || ':' || shingle))`.
-    * One shuffle (groupBy id), `numHashes` partial min-aggregates — the
-    * shingle-set size rides along in the same pass (`sz`), so the
-    * Jaccard-verify stage never rescans the shingle relation for sizes.
-    */
-  def minHashSignatures(sh: DataFrame, idCol: String, numHashes: Int): DataFrame = {
-    val mins = (0 until numHashes).map { i =>
-      min(md5(concat(lit(s"$i:"), col("shingle")).cast("binary"))).as(s"m$i")
-    }
-    sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz"), mins: _*)
+  /** Exploded distinct (id, shingle) pairs of [[docShingles]], for
+    * shingle-keyed work (document frequencies, containment joins). */
+  def shingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    docShingles(df, idCol, textCol, n)
+      .select(col(idCol), explode(col("shingles")).as("shingle"))
+
+  /** Appends MinHash signature columns `m0`…`m{numHashes-1}` to a
+    * per-document relation with a `shingles` array: `m_i` =
+    * `min(md5(i || ':' || shingle))` as hex bytes, computed once per
+    * document by one kernel call (its result is referenced by every `m_i`,
+    * so the optimizer keeps it in its own projection). */
+  def withSignature(docs: DataFrame, numHashes: Int): DataFrame = {
+    val kept = docs.columns.map(c => col(s"`$c`"))
+    docs.select(kept :+ MinHashSignature.minHashSignature(col("shingles"), numHashes).as("_sig"): _*)
+      .select(kept ++ (0 until numHashes).map(i => col("_sig").getItem(i).as(s"m$i")): _*)
   }
 
+  /** MinHash signatures over exploded `(id, shingle)` rows: one `(idCol,
+    * sz, m0…)` row per id, `sz` counting its rows. The same signature
+    * kernel as [[withSignature]], over each id's collected shingles. */
+  def minHashSignatures(sh: DataFrame, idCol: String, numHashes: Int): DataFrame =
+    withSignature(
+      sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz"), collect_list(col("shingle")).as("shingles")),
+      numHashes).drop("shingles")
+
   /** LSH banding: group the signature into bands of `rowsPerBand` hashes;
-    * band key = md5 of the concatenated member hashes. Output one row per
-    * (id, band_idx, band_hash).
+    * band key = md5 of the member hashes joined by '|'. Output one row per
+    * (id, band_idx, band_hash); a null signature (no shingles) gives null
+    * band keys, which match nothing.
     */
   def lshBands(sig: DataFrame, idCol: String, numHashes: Int, rowsPerBand: Int): DataFrame = {
     val numBands = numHashes / rowsPerBand
     val bands = array((0 until numBands).map { j =>
       val members = (0 until rowsPerBand).map(r => col(s"m${j * rowsPerBand + r}"))
-      struct(lit(j).as("band_idx"), md5(concat_ws("|", members: _*).cast("binary")).as("band_hash"))
+      val joined = concat(members.flatMap(m => Seq(lit("|"), m.cast("string"))).tail: _*)
+      struct(lit(j).as("band_idx"), md5(joined.cast("binary")).as("band_hash"))
     }: _*)
     sig.select(col(idCol), explode(bands).as("b"))
       .select(col(idCol), col("b.band_idx"), col("b.band_hash"))
@@ -80,41 +90,34 @@ object Dedup {
       .select("id_a", "id_b").distinct()
   }
 
-  /** Exact Jaccard over shingle sets for given candidate pairs:
-    * |A∩B| via a co-occurrence join, |A∪B| = |A|+|B|-|A∩B|. */
-  def jaccardOnPairs(pairs: DataFrame, sh: DataFrame, idCol: String): DataFrame =
-    jaccardOnPairs(pairs, sh, idCol,
-      sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz")))
-
-  /** Variant with precomputed per-id set sizes (a `(idCol, sz)` relation). */
-  def jaccardOnPairs(pairs: DataFrame, sh: DataFrame, idCol: String,
-                     sizes: DataFrame): DataFrame = {
-    val common = pairs
-      .join(sh.select(col(idCol).as("id_a"), col("shingle")), Seq("id_a"))
-      .join(sh.select(col(idCol).as("id_b"), col("shingle").as("shingle_b")), Seq("id_b"))
-      .filter(col("shingle") === col("shingle_b"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("common"))
-    common
-      .join(sizes.select(col(idCol).as("id_a"), col("sz").as("sz_a")), Seq("id_a"))
-      .join(sizes.select(col(idCol).as("id_b"), col("sz").as("sz_b")), Seq("id_b"))
+  /** Exact Jaccard of candidate pairs over a per-document `(idCol,
+    * shingles, sz)` relation ([[docShingles]]): |A∩B| =
+    * `size(array_intersect(a, b))` of the two distinct arrays, |A∪B| =
+    * |A|+|B|-|A∩B|. A pair naming an id absent from `docs` is dropped; a
+    * disjoint pair scores 0. */
+  def jaccardOnPairs(pairs: DataFrame, docs: DataFrame, idCol: String): DataFrame = {
+    def side(s: String) = docs.select(col(idCol).as(s"id_$s"),
+      col("shingles").as(s"sh_$s"), col("sz").as(s"sz_$s"))
+    pairs.join(side("a"), Seq("id_a")).join(side("b"), Seq("id_b"))
+      .select(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"),
+        size(array_intersect(col("sh_a"), col("sh_b"))).cast("long").as("common"))
       .select(col("id_a"), col("id_b"),
         (col("common").cast("double") /
           (col("sz_a") + col("sz_b") - col("common"))).as("jaccard"))
   }
 
-  /** Full MinHash-LSH fuzzy dedup: shingle → signature → bands → candidate
-    * pairs → exact-Jaccard verification ≥ `threshold`. */
+  /** Full MinHash-LSH fuzzy dedup: per-document shingles and signature in
+    * one projection → bands → candidate pairs → exact-Jaccard verification
+    * ≥ `threshold`. Documents with fewer than `shingleN` tokens have no
+    * band key and pair with nothing. No filter drops them first: Spark
+    * would push it below the shingle projection and shingle twice. */
   def minHashDedup(df: DataFrame, idCol: String, textCol: String,
                    shingleN: Int = 3, numHashes: Int = 8, rowsPerBand: Int = 2,
                    threshold: Double = 0.4): DataFrame = {
-    // the shingle relation feeds the signature pass AND both sides of the
-    // Jaccard common-join — materialize it once instead of re-tokenizing
-    // the corpus per consumer
-    val sh = shingles(df, idCol, textCol, shingleN).localCheckpoint()
-    val sig = minHashSignatures(sh, idCol, numHashes)
-    val pairs = lshCandidatePairs(lshBands(sig, idCol, numHashes, rowsPerBand), idCol)
-    jaccardOnPairs(pairs, sh, idCol, sig.select(col(idCol), col("sz")))
-      .filter(col("jaccard") >= threshold)
+    val docs = docShingles(df, idCol, textCol, shingleN)
+    val pairs = lshCandidatePairs(
+      lshBands(withSignature(docs, numHashes), idCol, numHashes, rowsPerBand), idCol)
+    jaccardOnPairs(pairs, docs, idCol).filter(col("jaccard") >= threshold)
   }
 
   /** Connected components over near-duplicate pairs → dedup clusters: one

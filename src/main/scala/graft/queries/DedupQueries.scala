@@ -51,7 +51,8 @@ object DedupQueries {
   def ngramJaccard(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables(s, dir).documents
-    val sh = Dedup.shingles(docs, "doc_id", "text", 3).localCheckpoint()
+    val perDoc = Dedup.docShingles(docs, "doc_id", "text", 3).localCheckpoint()
+    val sh = perDoc.select($"doc_id", explode($"shingles").as("shingle"))
     // rarity must be RELATIVE to corpus size: a fixed df cap ages out as
     // the corpus grows (verified empirically — at 10× docs a df<=20 band
     // excludes every cluster shingle and finds nothing). Cap = max(20,
@@ -76,7 +77,7 @@ object DedupQueries {
       .groupBy($"id_a", $"id_b").agg(count(lit(1)).as("shared"))
       .filter($"shared" >= 5)
       .select("id_a", "id_b")
-    Dedup.jaccardOnPairs(pairs, sh, "doc_id")
+    Dedup.jaccardOnPairs(pairs, perDoc, "doc_id")
       .filter($"jaccard" >= 0.3)
       .select($"id_a", $"id_b", round($"jaccard", 6).as("jaccard"))
       .orderBy($"id_a", $"id_b")
@@ -260,17 +261,13 @@ object DedupQueries {
   // 100 TB dedup run does on a sample before committing to thresholds.
   def minhashCalibration(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // sh feeds signatures AND the exact-Jaccard join-back; sig feeds
-    // bands, sizes and BOTH signature sides — localCheckpoint pins each
-    // to one computation (4 lazy re-executions of the shingle pipeline
-    // measured 16 s at 10×; pinned: ~4 s). Signatures are |docs|-sized →
+    // sig (per-document shingles + signature) feeds bands, the
+    // exact-Jaccard join-back and BOTH signature sides — localCheckpoint
+    // pins it to one computation. Signatures are |docs|-sized →
     // broadcast to the candidate pairs.
-    val sh = Dedup.shingles(Tables(s, dir).documents, "doc_id", "text", 3)
-      .localCheckpoint()
-    val sig = Dedup.minHashSignatures(sh, "doc_id", 8).localCheckpoint()
+    val sig = signedDocs(Tables(s, dir).documents).localCheckpoint()
     val cand = Dedup.lshCandidatePairs(Dedup.lshBands(sig, "doc_id", 8, 2), "doc_id")
-    val exact = Dedup.jaccardOnPairs(cand, sh, "doc_id",
-      sig.select($"doc_id", $"sz"))
+    val exact = Dedup.jaccardOnPairs(cand, sig, "doc_id")
     val sa = sig.select(($"doc_id".as("id_a")) +:
       (0 until 8).map(i => col(s"m$i").as(s"a$i")): _*)
     val sb = sig.select(($"doc_id".as("id_b")) +:
@@ -348,6 +345,11 @@ object DedupQueries {
       .orderBy($"id_a", $"id_b")
   }
 
+  /** The dedup index of q298/q311/q336/q354: one row per document with
+    * shingles, `sz` and the 8-hash signature, as in `Dedup.minHashDedup`. */
+  private def signedDocs(docs: DataFrame): DataFrame =
+    Dedup.withSignature(Dedup.docShingles(docs, "doc_id", "text", 3), 8)
+
   // q311: incremental dedup — the daily-delta shape a 100 TB corpus
   // actually runs: yesterday's corpus already has signatures, bands and
   // verified pairs (the "index"); today's 20% delta generates signatures
@@ -362,8 +364,7 @@ object DedupQueries {
   def incrementalDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables(s, dir).documents
-    val sh = Dedup.shingles(docs, "doc_id", "text", 3).localCheckpoint()
-    val sig = Dedup.minHashSignatures(sh, "doc_id", 8).localCheckpoint()
+    val sig = signedDocs(docs).localCheckpoint()
     val bands = Dedup.lshBands(sig, "doc_id", 8, 2).localCheckpoint()
     val deltaIds = docs
       .filter(conv(substring(md5($"doc_id".cast("string").cast("binary")), 1, 6),
@@ -380,7 +381,7 @@ object DedupQueries {
       .select(least($"da", $"db").as("id_a"), greatest($"da", $"db").as("id_b"))
       .distinct()
     val incr = basePairs.unionByName(deltaPairs).distinct()
-    Dedup.jaccardOnPairs(incr, sh, "doc_id", sig.select($"doc_id", $"sz"))
+    Dedup.jaccardOnPairs(incr, sig, "doc_id")
       .filter($"jaccard" >= 0.2)
       .select($"id_a", $"id_b", round($"jaccard", 6).as("jaccard"))
       .orderBy($"id_a", $"id_b")
@@ -390,26 +391,22 @@ object DedupQueries {
   // q311's maintenance story (adds): GDPR erasures, retractions, and
   // quality purges leave the corpus daily, and re-shingling +
   // re-signing 100 TB to honor them is the recompute this exists to
-  // avoid. Maintenance is ONE anti join per index artifact (bands,
-  // shingles, sizes — all O(|index|), nothing touches raw text), and
-  // the checked identity is the strong one: pairs from the maintained
-  // index ≡ a from-scratch rebuild over the reduced corpus, hash-exact
-  // — tombstoned docs can neither surface in pairs nor affect any
-  // surviving pair's Jaccard.
+  // avoid. Maintenance is ONE anti join per index artifact (bands, the
+  // per-document shingle arrays — all O(|index|), nothing touches raw
+  // text), and the checked identity is the strong one: pairs from the
+  // maintained index ≡ a from-scratch rebuild over the reduced corpus,
+  // hash-exact — tombstoned docs can neither surface in pairs nor affect
+  // any surviving pair's Jaccard.
   def incrementalDedupDelete(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables(s, dir).documents
     // the PERSISTED index artifacts (in production: q310-style parquet)
-    val sh = Dedup.shingles(docs, "doc_id", "text", 3).localCheckpoint()
-    val sig = Dedup.minHashSignatures(sh, "doc_id", 8).localCheckpoint()
+    val sig = signedDocs(docs).localCheckpoint()
     val bands = Dedup.lshBands(sig, "doc_id", 8, 2).localCheckpoint()
     val tomb = docs.filter($"doc_id" % 17 === 0).select($"doc_id")
     val updated = bands.join(tomb, Seq("doc_id"), "left_anti")
     val pairs = Dedup.lshCandidatePairs(updated, "doc_id")
-    val shLive = sh.join(tomb, Seq("doc_id"), "left_anti")
-    val szLive = sig.join(tomb, Seq("doc_id"), "left_anti")
-      .select($"doc_id", $"sz")
-    Dedup.jaccardOnPairs(pairs, shLive, "doc_id", szLive)
+    Dedup.jaccardOnPairs(pairs, sig.join(tomb, Seq("doc_id"), "left_anti"), "doc_id")
       .filter($"jaccard" >= 0.2)
       .select($"id_a", $"id_b", round($"jaccard", 6).as("jaccard"))
       .orderBy($"id_a", $"id_b")
@@ -443,8 +440,7 @@ object DedupQueries {
     ManifestTable.commit(docs.filter($"doc_id" % 10 < 8), out, append = false)
     // index artifacts built once, at v1 (in production: q310-style parquet)
     val v1 = ManifestTable.read(s, out, 1)
-    val shB = Dedup.shingles(v1, "doc_id", "text", 3).localCheckpoint()
-    val sigB = Dedup.minHashSignatures(shB, "doc_id", 8).localCheckpoint()
+    val sigB = signedDocs(v1).localCheckpoint()
     val bandsB = Dedup.lshBands(sigB, "doc_id", 8, 2).localCheckpoint()
     val pairsB = Dedup.lshCandidatePairs(bandsB, "doc_id").localCheckpoint()
     // the table moves on: v2 appends a delta, v3 erases keys (GDPR shape)
@@ -461,8 +457,7 @@ object DedupQueries {
     require(ins.count() > 0 && tomb.count() > 0,
       "q354: the feed must carry both insert and delete events")
     // adds: delta-only signatures; removals: anti joins per artifact
-    val shD = Dedup.shingles(ins, "doc_id", "text", 3)
-    val sigD = Dedup.minHashSignatures(shD, "doc_id", 8)
+    val sigD = signedDocs(ins)
     val bandsD = Dedup.lshBands(sigD, "doc_id", 8, 2)
     val liveBands = bandsB.unionByName(bandsD)
       .join(tomb, Seq("doc_id"), "left_anti")
@@ -477,11 +472,8 @@ object DedupQueries {
       .join(tomb.select($"doc_id".as("id_a")), Seq("id_a"), "left_anti")
       .join(tomb.select($"doc_id".as("id_b")), Seq("id_b"), "left_anti")
     val pairs = livePairsB.unionByName(deltaPairs).distinct()
-    val shLive = shB.unionByName(shD).join(tomb, Seq("doc_id"), "left_anti")
-    val szLive = sigB.select($"doc_id", $"sz")
-      .unionByName(sigD.select($"doc_id", $"sz"))
-      .join(tomb, Seq("doc_id"), "left_anti")
-    Dedup.jaccardOnPairs(pairs, shLive, "doc_id", szLive)
+    val live = sigB.unionByName(sigD).join(tomb, Seq("doc_id"), "left_anti")
+    Dedup.jaccardOnPairs(pairs, live, "doc_id")
       .filter($"jaccard" >= 0.2)
       .select($"id_a", $"id_b", round($"jaccard", 6).as("jaccard"))
       .orderBy($"id_a", $"id_b")

@@ -329,8 +329,8 @@ object TextQueries {
 
   // q117: inverted-index build — the search-infrastructure face of the
   // text surface: token → document frequency + posting-list fingerprint.
-  // One (doc, token) row per distinct token per doc (fused array_distinct
-  // is right here — ~50-token arrays, see shingleSeq), one token-keyed
+  // One (doc, token) row per distinct token per doc (a fused
+  // array_distinct is cheap on ~50-token arrays), one token-keyed
   // shuffle builds every posting list; at 100 TB that shuffle IS how
   // index segments shard by term. The posting list is sorted before
   // fingerprinting, so the md5 is order-independent; top-200 by

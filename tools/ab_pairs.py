@@ -2,7 +2,7 @@
 """Alternating parent/change pairs of the repo benchmark on one host.
 
     python3 tools/ab_pairs.py <parent_dir> <change_dir> --workload W --seeds a-b \
-        [--trace 0|1] [--seconds 10]
+        [--trace 0|1] [--seconds 10] [--claim METRIC]
 
 Each directory is a checkout holding `perfbench/` and `BENCHMARK.json`.
 For every seed in a..b it runs `python3 perfbench/run.py` once in each
@@ -17,6 +17,13 @@ parent's interquartile range, the change/parent ratio and how many pairs
 the change won. With --trace 1 the end-to-end figures come from the traced
 runs' reference line (they include the tracing overhead) and the per-layer
 medians are printed as well.
+
+With --claim METRIC it ends with a verdict line over the end-to-end
+metrics. The claimed metric passes when the change is better in at least
+9 of 10 pairs and its median beats the parent's median by more than the
+parent's interquartile range. Every other end-to-end metric passes when
+the change's median stays within the parent's median times (1 + bound),
+in the metric's worse direction, with the bound read from BENCHMARK.json.
 """
 import argparse
 import json
@@ -64,6 +71,34 @@ def better(value, base, direction):
     return value < base if direction == "lower" else value > base
 
 
+def iqr(xs):
+    q = statistics.quantiles(xs, n=4) if len(xs) > 1 else [xs[0]] * 3
+    return q[2] - q[0]
+
+
+def verdict(claim, metrics, got):
+    """One line: the claimed metric's win rule, the others' bounds."""
+    cells, ok = [], True
+    for m in metrics:
+        name, direction = m["name"], m["better"]
+        ps = [r[0][name] for r in got["parent"]]
+        cs = [r[0][name] for r in got["change"]]
+        pm, cm = statistics.median(ps), statistics.median(cs)
+        if name == claim:
+            wins = sum(better(c, p, direction) for p, c in zip(ps, cs))
+            gap = pm - cm if direction == "lower" else cm - pm
+            passed = wins * 10 >= 9 * len(ps) and gap > iqr(ps)
+            cells.append(f"{name} claimed: wins {wins}/{len(ps)}, median gap {fmt(gap)} vs parent IQR "
+                         f"{fmt(iqr(ps))} {'ok' if passed else 'FAIL'}")
+        else:
+            limit = pm * (1 + m["bound"]) if direction == "lower" else pm * (1 - m["bound"])
+            passed = cm <= limit if direction == "lower" else cm >= limit
+            cells.append(f"{name} {fmt(cm)} {'<=' if direction == 'lower' else '>='} {fmt(limit)} "
+                         f"{'ok' if passed else 'FAIL'}")
+        ok = ok and passed
+    return f"verdict {'PASS' if ok else 'FAIL'}: " + "; ".join(cells)
+
+
 def fmt(x):
     return f"{x:.6g}" if isinstance(x, float) else str(x)
 
@@ -76,10 +111,13 @@ def main():
     ap.add_argument("--seeds", required=True, type=seeds_of, help="inclusive range a-b, or one seed")
     ap.add_argument("--trace", default="0", choices=("0", "1"))
     ap.add_argument("--seconds", default=10, type=int)
+    ap.add_argument("--claim", help="end-to-end metric the change claims to improve")
     args = ap.parse_args()
 
     with open(os.path.join(args.change_dir, "BENCHMARK.json")) as f:
         bench = json.load(f)
+    if args.claim and args.claim not in [m["name"] for m in bench["end_to_end"]]:
+        ap.error(f"--claim {args.claim} is not an end-to-end metric of BENCHMARK.json")
     e2e = [(m["name"], m["better"]) for m in bench["end_to_end"]]
     layers = [(m["name"], m["better"]) for m in bench.get("per_layer", [])]
     sides = {"parent": args.parent_dir, "change": args.change_dir}
@@ -108,15 +146,17 @@ def main():
             if len(ps) != n or len(cs) != n or not any(ps + cs):
                 continue  # missing, or a layer this workload does not touch
             pm, cm = statistics.median(ps), statistics.median(cs)
-            q = statistics.quantiles(ps, n=4) if n > 1 else [ps[0]] * 3
             wins = sum(better(c, p, direction) for p, c in zip(ps, cs))
             ratio = f"{cm / pm:.3f}" if pm else "-"
-            print(f"{name:<44} {fmt(pm):>12} {fmt(q[2] - q[0]):>12} {fmt(cm):>12} {ratio:>8} {wins:>3}/{n}")
+            print(f"{name:<44} {fmt(pm):>12} {fmt(iqr(ps)):>12} {fmt(cm):>12} {ratio:>8} {wins:>3}/{n}")
 
     summary(e2e, 0)
     if args.trace == "1":
         print()
         summary(layers, 1)
+    if args.claim:
+        print()
+        print(verdict(args.claim, bench["end_to_end"], got))
 
 
 if __name__ == "__main__":
