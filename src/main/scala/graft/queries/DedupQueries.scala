@@ -430,12 +430,7 @@ object DedupQueries {
   def cdcDedupIndex(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.ManifestTable
-    val base0 = s"${sys.props("java.io.tmpdir")}/graft_q354_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base0}_p${ProcessHandle.current().pid()}"
-    graft.queries.Q88Scratch.sweepAndRegister(base0, out)
-    def rmf(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rmf); f.delete(): Unit }
-    rmf(new java.io.File(out))
+    val out = Scratch.dir("q354", dir)
     val docs = Tables(s, dir).documents
     ManifestTable.commit(docs.filter($"doc_id" % 10 < 8), out, append = false)
     // index artifacts built once, at v1 (in production: q310-style parquet)

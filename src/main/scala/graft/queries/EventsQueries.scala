@@ -902,12 +902,7 @@ object EventsQueries {
     import s.implicits._
     import graft.sources.ManifestTable
     import graft.streaming.EventStreams
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q333_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    graft.queries.Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q333", dir)
     // stage the events as THREE source files so AvailableNow +
     // maxFilesPerTrigger=1 drives three distinct micro-batches — the
     // batch→version mapping is then exercised across a real sequence
@@ -957,12 +952,7 @@ object EventsQueries {
     import s.implicits._
     import graft.sources.ManifestTable
     import org.apache.spark.sql.types.StructType
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q344_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    graft.queries.Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q344", dir)
     val events = Tables(s, dir).events
       .select($"event_id", $"event_type", round($"value" * 100).cast("long").as("cents"))
     val tbl = s"$out/tbl"
@@ -1023,12 +1013,7 @@ object EventsQueries {
     import s.implicits._
     import graft.sources.ManifestTable
     import org.apache.spark.sql.types.StructType
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q402_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    graft.queries.Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q402", dir)
     val orders = Tables(s, dir).orders
       .select($"o_custkey".cast("long").as("ckey"),
         round($"o_totalprice" * 100).cast("long").as("cents"),
@@ -1146,12 +1131,7 @@ object EventsQueries {
     import s.implicits._
     import graft.sources.ManifestTable
     import org.apache.spark.sql.types.StructType
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q350_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    graft.queries.Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q350", dir)
     val events = Tables(s, dir).events
       .select($"event_id", $"user_id", $"event_type",
         round($"value" * 100).cast("long").as("cents"))
@@ -1576,9 +1556,7 @@ object EventsQueries {
   // persist → read → merge → estimate) against the exact distinct count.
   def sketchPersistence(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q310_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
+    val out = Scratch.dir("q310", dir)
     val ev = Tables(s, dir).events.select($"user_id", to_date($"ts").as("day"))
     ev.groupBy($"day").agg(expr("hll_sketch_agg(user_id)").as("sk"))
       .write.mode("overwrite").parquet(out)

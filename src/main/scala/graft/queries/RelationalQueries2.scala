@@ -102,26 +102,20 @@ object RelationalQueries2 {
   // which is the only way a recurring fact⋈fact join survives daily runs
   // at scale. PlanGuardSpec pins the exchange-free join subtree; the
   // merge hints keep AQE from demoting the face to a broadcast join at
-  // this toy scale. External-table paths (PID-suffixed scratch, swept
-  // like q88's) keep concurrent bench/verify JVMs apart.
+  // this toy scale. External-table paths (PID-suffixed `Scratch.dir`s)
+  // keep concurrent bench/verify JVMs apart.
   def bucketedJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val pid = ProcessHandle.current().pid()
-    def scratch(tag: String): String = {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_${tag}_${Integer.toHexString(dir.hashCode)}"
-      val out = s"${base}_p$pid"
-      Q88Scratch.sweepAndRegister(base, out)
-      out
-    }
     val (tO, tC) = (s"q125_orders_p$pid", s"q125_customer_p$pid")
     Tables(s, dir).orders.select($"o_orderkey", $"o_custkey", $"o_totalprice")
       .write.mode("overwrite").format("parquet")
       .bucketBy(16, "o_custkey").sortBy("o_custkey")
-      .option("path", scratch("q125o")).saveAsTable(tO)
+      .option("path", Scratch.dir("q125o", dir)).saveAsTable(tO)
     Tables(s, dir).customer.select($"c_custkey", $"c_mktsegment")
       .write.mode("overwrite").format("parquet")
       .bucketBy(16, "c_custkey").sortBy("c_custkey")
-      .option("path", scratch("q125c")).saveAsTable(tC)
+      .option("path", Scratch.dir("q125c", dir)).saveAsTable(tC)
     s.table(tO).hint("merge")
       .join(s.table(tC).hint("merge"), $"o_custkey" === $"c_custkey")
       .groupBy($"c_mktsegment")
@@ -142,9 +136,7 @@ object RelationalQueries2 {
   // mangled by the partitioned round trip breaks the hash.
   def partitionPrunedRead(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q126_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
+    val out = Scratch.dir("q126", dir)
     Tables(s, dir).documents.select($"doc_id", $"source", $"n_chars", $"text", $"lang")
       .write.mode("overwrite").partitionBy("lang").parquet(out)
     s.read.parquet(out)
@@ -445,9 +437,7 @@ object RelationalQueries2 {
   // pins the dynamicpruningexpression in the fact scan.
   def dynamicPartitionPruning(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q271_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
+    val out = Scratch.dir("q271", dir)
     Tables(s, dir).documents.select($"doc_id", $"source", $"n_chars", $"lang")
       .write.mode("overwrite").partitionBy("lang").parquet(out)
     val fact = s.read.parquet(out)
@@ -621,9 +611,7 @@ object RelationalQueries2 {
   // with the same even/odd writer split.
   def schemaEvolution(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q150_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
+    val out = Scratch.dir("q150", dir)
     val docs = Tables(s, dir).documents
     docs.filter($"doc_id" % 2 === 0).select($"doc_id", $"lang")
       .write.mode("overwrite").parquet(s"$out/v1")
@@ -1054,14 +1042,7 @@ object RelationalQueries2 {
   def sizedWriteRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val rowsPerFile = 120L
-    // PID in the path: two concurrent JVMs (bench + correctness run) must
-    // not share an overwrite-vs-read scratch dir. Own dir is removed at
-    // JVM exit (the returned frame reads it lazily, so not before); stale
-    // siblings from crashed runs are swept here so repeated runs can't
-    // accumulate one documents-copy per process in tmpdir.
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q88_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
+    val out = Scratch.dir("q88", dir)
     val docs = Tables(s, dir).documents.select($"doc_id", $"lang", $"n_chars", $"text")
     val n = docs.count()
     graft.sources.SizedWriter
@@ -1300,9 +1281,7 @@ object RelationalQueries2 {
   // breaks the hash.
   def jsonlRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q111_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
+    val out = Scratch.dir("q111", dir)
     val docs = Tables(s, dir).documents
       .select($"doc_id", $"lang", $"n_chars", $"text")
     docs.write.mode("overwrite").json(out)
@@ -1323,9 +1302,7 @@ object RelationalQueries2 {
   // predicate-pushdown path exercised too.
   def orcRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q113_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
+    val out = Scratch.dir("q113", dir)
     Tables(s, dir).documents
       .select($"doc_id", $"lang", $"n_chars", $"text")
       .write.mode("overwrite").orc(out)
@@ -1349,9 +1326,7 @@ object RelationalQueries2 {
   // same per-lang fingerprint contract as q88/q111/q113.
   def csvRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q114_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
+    val out = Scratch.dir("q114", dir)
     Tables(s, dir).documents
       .select($"doc_id", $"lang", $"n_chars", $"text")
       .write.mode("overwrite")
@@ -2775,7 +2750,7 @@ object RelationalQueries2 {
 
   // q254: TPC-H Q11 important stock. Classic Q11's threshold is a FIXED
   // fraction (0.0001/SF) — which silently empties as the corpus grows
-  // (the same aging-cap bug ScaleTest caught in the rare-shingle df cap).
+  // (the same aging-cap bug a 10× corpus run caught in the rare-shingle df cap).
   // Here "important" is scale-invariant: value > 3× the MEAN part value,
   // as the integer-exact cross-multiply cents·n > 3·Σcents over one
   // shared scalar subquery (no double-average drift between engines).
@@ -4666,30 +4641,4 @@ object RelationalQueries2 {
         |  GROUP BY l_returnflag)
         |ORDER BY l_returnflag""".stripMargin
   )
-}
-
-/** q88 scratch-dir hygiene: sweep stale sibling dirs (dead PIDs from
-  * crashed runs) and remove this JVM's own dir at exit — repeated runs
-  * must not accumulate one documents-table copy per process in tmpdir. */
-private[queries] object Q88Scratch {
-  private val registered = scala.collection.mutable.Set.empty[String]
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).toSeq.flatten.foreach(rmTree)
-    f.delete(): Unit
-  }
-  def sweepAndRegister(prefix: String, own: String): Unit = synchronized {
-    val dir = new java.io.File(prefix).getParentFile
-    val name = new java.io.File(prefix).getName
-    Option(dir.listFiles()).toSeq.flatten
-      .filter(f => f.getPath != own &&
-        // dead-PID siblings, plus exact-name dirs from the pre-PID scheme
-        (f.getName == name || (f.getName.startsWith(name + "_p") && {
-          val pid = f.getName.substring(f.getName.lastIndexOf("_p") + 2)
-          pid.toLongOption.exists(p => !ProcessHandle.of(p).map[Boolean](_.isAlive).orElse(false))
-        })))
-      .foreach(f => scala.util.Try(rmTree(f)))
-    if (registered.add(own))
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        scala.util.Try(rmTree(new java.io.File(own))): Unit))
-  }
 }

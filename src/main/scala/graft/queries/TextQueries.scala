@@ -766,12 +766,7 @@ object TextQueries {
     import s.implicits._
     import graft.sources.ManifestTable
     val terms = Seq("merge", "window", "stream")
-    val base0 = s"${sys.props("java.io.tmpdir")}/graft_q392_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base0}_p${ProcessHandle.current().pid()}"
-    graft.queries.Q88Scratch.sweepAndRegister(base0, out)
-    def rmf(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rmf); f.delete(): Unit }
-    rmf(new java.io.File(out))
+    val out = Scratch.dir("q392", dir)
     val docs = Tables(s, dir).documents.select($"doc_id", $"text")
     ManifestTable.commit(docs.filter($"doc_id" % 10 < 8), out, append = false) // v1
     def lex(df: DataFrame): DataFrame =

@@ -768,10 +768,10 @@ object VectorQueries {
     rrfHybridFusionN(s, dir, 5L)
 
   /** The q386 pipeline with a parametrized query-set size — the gate face
-    * runs 5 query docs; `graft.RrfProbe` drives the SAME plan at
-    * production volume (|q| = 10³) to confirm the legs stay shuffle-keyed
-    * on (token) and (q_id, c_id) with no cartesian anywhere (r11 verdict
-    * item 7). */
+    * runs 5 query docs; `PlanGuardSpec` drives the SAME plan at
+    * |q| = 10³ to confirm the legs stay keyed on (token) and (q_id, c_id)
+    * with no cartesian anywhere; the dense leg's brute kNN is the one
+    * nested loop, over the broadcast queries (r11 verdict item 7). */
   def rrfHybridFusionN(s: SparkSession, dir: String, nq: Long): DataFrame = {
     import s.implicits._
     val docs = Tables(s, dir).documents
@@ -965,12 +965,7 @@ object VectorQueries {
     import s.implicits._
     import graft.sources.ManifestTable
     val kCoarse = 8
-    val base0 = s"${sys.props("java.io.tmpdir")}/graft_q391_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base0}_p${ProcessHandle.current().pid()}"
-    graft.queries.Q88Scratch.sweepAndRegister(base0, out)
-    def rmf(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rmf); f.delete(): Unit }
-    rmf(new java.io.File(out))
+    val out = Scratch.dir("q391", dir)
     val emb = Relational.spread(Tables(s, dir).embeddings, $"vec_id")
       .select($"vec_id", $"embedding")
     ManifestTable.commit(emb.filter($"vec_id" % 10 < 8), out,
@@ -1107,12 +1102,7 @@ object VectorQueries {
     graft.streaming.ScratchCheckpoints.lean(s) {
     import s.implicits._
     import graft.sources.ManifestTable
-    val base0 = s"${sys.props("java.io.tmpdir")}/graft_q397_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base0}_p${ProcessHandle.current().pid()}"
-    graft.queries.Q88Scratch.sweepAndRegister(base0, out)
-    def rmf(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rmf); f.delete(): Unit }
-    rmf(new java.io.File(out))
+    val out = Scratch.dir("q397", dir)
     val emb = Relational.spread(Tables(s, dir).embeddings, $"vec_id")
       .select($"vec_id", $"embedding")
     val tbl = s"$out/tbl"
@@ -1342,12 +1332,7 @@ object VectorQueries {
     import graft.sources.ManifestTable
     val kCoarse = 8
     val Thresh = 0.2 // the standard PSI "significant shift" bar
-    val base0 = s"${sys.props("java.io.tmpdir")}/graft_q410_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base0}_p${ProcessHandle.current().pid()}"
-    graft.queries.Q88Scratch.sweepAndRegister(base0, out)
-    def rmf(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rmf); f.delete(): Unit }
-    rmf(new java.io.File(out))
+    val out = Scratch.dir("q410", dir)
     val emb = Relational.spread(Tables(s, dir).embeddings, $"vec_id")
       .select($"vec_id", $"embedding")
     val embT = emb.schema("embedding").dataType
@@ -1473,12 +1458,7 @@ object VectorQueries {
     import graft.sources.ManifestTable
     val kCoarse = 8
     val Thresh = 0.2
-    val base0 = s"${sys.props("java.io.tmpdir")}/graft_q420_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base0}_p${ProcessHandle.current().pid()}"
-    graft.queries.Q88Scratch.sweepAndRegister(base0, out)
-    def rmf(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rmf); f.delete(): Unit }
-    rmf(new java.io.File(out))
+    val out = Scratch.dir("q420", dir)
     val emb = Relational.spread(Tables(s, dir).embeddings, $"vec_id")
       .select($"vec_id", $"embedding")
     val embT = emb.schema("embedding").dataType
@@ -1613,12 +1593,7 @@ object VectorQueries {
   def maxsimOverIndex(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.ManifestTable
-    val base0 = s"${sys.props("java.io.tmpdir")}/graft_q411_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base0}_p${ProcessHandle.current().pid()}"
-    graft.queries.Q88Scratch.sweepAndRegister(base0, out)
-    def rmf(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rmf); f.delete(): Unit }
-    rmf(new java.io.File(out))
+    val out = Scratch.dir("q411", dir)
     val emb = Relational.spread(Tables(s, dir).embeddings, $"vec_id")
       .select($"vec_id", $"embedding")
     def assign(q: DataFrame, ckm: Seq[(Int, Seq[Int])]): DataFrame =

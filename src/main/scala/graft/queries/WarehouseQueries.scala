@@ -242,13 +242,8 @@ object WarehouseQueries {
   // recompute is the hash-checked identity.
   def timeTravel(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q270_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
+    val out = Scratch.dir("q270", dir)
     // deterministic versions on every run (bench measures this 3×)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
     val cut = lit("1999-01-01").cast("timestamp")
     import graft.sources.ManifestTable
     def slice(cond: Column) = Tables(s, dir).orders.filter(cond)
@@ -281,12 +276,7 @@ object WarehouseQueries {
   // ≡ post-expiry content, with manifest file counts pinned per stage.
   def compactExpire(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q273_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q273", dir)
     import graft.sources.ManifestTable
     val cut1 = lit("1997-01-01").cast("timestamp")
     val cut2 = lit("1999-01-01").cast("timestamp")
@@ -338,12 +328,7 @@ object WarehouseQueries {
   // table: restore ≡ recompute is the checked identity.
   def restoreRollback(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q318_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q318", dir)
     val cut = lit("1999-01-01").cast("timestamp")
     import graft.sources.ManifestTable
     def slice(cond: Column) = Tables(s, dir).orders.filter(cond)
@@ -378,12 +363,7 @@ object WarehouseQueries {
   // predicate scan — clustering must never change results.
   def clusterCompact(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q331_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q331", dir)
     import graft.sources.ManifestTable
     // epoch-day long, not the raw timestamp: Spark writes parquet
     // timestamps as INT96 by default, whose footer stats fileStats
@@ -424,12 +404,7 @@ object WarehouseQueries {
   // oracle.
   def ndvStats(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q338_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q338", dir)
     import graft.sources.ManifestTable
     val o = Tables(s, dir).orders
       .select($"o_orderkey", $"o_custkey", $"o_orderdate")
@@ -490,12 +465,7 @@ object WarehouseQueries {
   // output is the exact range aggregate the bounds bracket.
   def histogramSelectivity(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q339_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q339", dir)
     import graft.sources.ManifestTable
     val o = Tables(s, dir).orders
       .select($"o_orderkey", $"o_orderdate",
@@ -536,12 +506,7 @@ object WarehouseQueries {
   // the exact residual filter — clustering must never change results.
   def zorderCompact(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q337_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q337", dir)
     import graft.sources.ManifestTable
     ManifestTable.commit(Tables(s, dir).lineitem
       .select($"l_orderkey", $"l_returnflag",
@@ -581,12 +546,7 @@ object WarehouseQueries {
   // per (change_type, status) counts + cents.
   def changeFeedCdc(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q332_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q332", dir)
     val cut = lit("1998-01-01").cast("timestamp")
     import graft.sources.ManifestTable
     def proj(df: DataFrame) = df.select($"o_orderkey", $"o_orderstatus",
@@ -640,12 +600,7 @@ object WarehouseQueries {
   // i.e. the aborted rows left no trace.
   def wapFace(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q330_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q330", dir)
     val cut = lit("1998-01-01").cast("timestamp")
     import graft.sources.ManifestTable
     import graft.operators.Quality
@@ -686,12 +641,7 @@ object WarehouseQueries {
   // pre-evolution rows under its NULL bucket, exact cents per group.
   def schemaEvolutionManifest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q329_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q329", dir)
     val cut = lit("1998-01-01").cast("timestamp")
     import graft.sources.ManifestTable
     val o = Tables(s, dir).orders
@@ -725,12 +675,7 @@ object WarehouseQueries {
   // construction).
   def bloomPointSkip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q326_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q326", dir)
     val cut = lit("1998-01-01").cast("timestamp")
     import graft.sources.ManifestTable
     def slice(cond: Column) = Tables(s, dir).orders.filter(cond)
@@ -834,12 +779,7 @@ object WarehouseQueries {
   // three states; the requires pin file-level bookkeeping.
   def deleteVectors(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q283_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q283", dir)
     import graft.sources.ManifestTable
     val cut = lit("1998-01-01").cast("timestamp")
     def slice(cond: Column) = Tables(s, dir).orders.filter(cond)
@@ -882,12 +822,7 @@ object WarehouseQueries {
   // staging → atomic publish → manifest-scoped scan.
   def dsv2Write(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q299_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q299", dir)
     val fmt = "graft.sources.v2.ManifestWriteSource"
     val cut = lit("1998-01-01").cast("timestamp")
     def slice(cond: Column) = Tables(s, dir).orders.filter(cond)
@@ -929,12 +864,7 @@ object WarehouseQueries {
   // fail loudly) are spec-covered.
   def incrementalRead(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q301_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q301", dir)
     import graft.sources.ManifestTable
     val cut1 = lit("1997-01-01").cast("timestamp")
     val cut2 = lit("1999-01-01").cast("timestamp")
@@ -971,12 +901,7 @@ object WarehouseQueries {
   // hash compare certifies no row was wrongly skipped).
   def fileSkipping(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q315_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q315", dir)
     import graft.sources.ManifestTable
     val rows = Tables(s, dir).orders
       .select($"o_orderkey", $"o_orderpriority",
@@ -1017,12 +942,7 @@ object WarehouseQueries {
   // files as v1 (merge-on-read, not copy-on-write).
   def positionDeletes(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q316_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q316", dir)
     import graft.sources.ManifestTable
     val cut = lit("1998-01-01").cast("timestamp")
     def slice(cond: Column) = Tables(s, dir).orders.filter(cond)
@@ -1068,12 +988,7 @@ object WarehouseQueries {
   // skipped file breaks the hash.
   def hiddenPartitioning(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q342_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q342", dir)
     import graft.sources.ManifestTable
     import graft.sources.ManifestTable.{BucketTransform, DaysTransform}
     val spec = Seq(BucketTransform(16, "o_orderkey"), DaysTransform("od"))
@@ -1128,12 +1043,7 @@ object WarehouseQueries {
   // recompute of the same upsert.
   def mergeInto(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q343_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q343", dir)
     import graft.sources.ManifestTable
     val rows = Tables(s, dir).orders
       .select($"o_orderkey", $"o_orderpriority",
@@ -1186,12 +1096,7 @@ object WarehouseQueries {
   // the final aggregate must hash-equal a plain recompute over orders.
   def optimisticWriters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q345_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q345", dir)
     import graft.sources.ManifestTable
     val rows = Tables(s, dir).orders
       .select($"o_orderkey", $"o_orderpriority",
@@ -1242,12 +1147,7 @@ object WarehouseQueries {
   // or wrong stat breaks the hash.
   def metadataAggregates(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q347_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q347", dir)
     import graft.sources.ManifestTable
     val rows = Tables(s, dir).orders
       .select($"o_orderkey",
@@ -1303,12 +1203,7 @@ object WarehouseQueries {
   // and hash-checked against the oracle's relational recompute.
   def sqlCatalog(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q348_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q348", dir)
     s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat.warehouse", out)
     Tables(s, dir).orders
@@ -1373,12 +1268,7 @@ object WarehouseQueries {
   // against the oracle's relational recompute.
   def branchesFastForward(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q349_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q349", dir)
     import graft.sources.ManifestTable
     val rows = Tables(s, dir).orders
       .select($"o_orderkey", $"o_orderpriority",
@@ -1438,12 +1328,7 @@ object WarehouseQueries {
   // claim — promotion of a validated backfill slice costs no data IO.
   def cherryPickFace(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q399_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q399", dir)
     import graft.sources.ManifestTable
     val keys = Tables(s, dir).orders.select($"o_orderkey".cast("long").as("k"))
     def slice(m: Int, grp: String, mult: Int) =
@@ -1528,12 +1413,7 @@ object WarehouseQueries {
   // the join broadcast, the scan unchanged — provenance costs nothing.
   def rowProvenance(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q400_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q400", dir)
     import graft.sources.ManifestTable
     val rows = Tables(s, dir).orders
       .select($"o_orderkey".cast("long").as("k"), year($"o_orderdate").as("y"))
@@ -1570,12 +1450,7 @@ object WarehouseQueries {
   // claim; the hot use is fearless staging-env copies of prod.
   def zeroCopyClone(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q401_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q401", dir)
     import graft.sources.ManifestTable
     val (src, dst) = (s"$out/src", s"$out/clone")
     val rows = Tables(s, dir).orders
@@ -1646,12 +1521,7 @@ object WarehouseQueries {
   // history is itself time-travelable (its pre-sync snapshot intact).
   def cloneCatchup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q404_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q404", dir)
     import graft.sources.ManifestTable
     val (src, dst) = (s"$out/src", s"$out/clone")
     val keys = Tables(s, dir).orders.select($"o_orderkey".cast("long").as("k"))
@@ -1709,12 +1579,7 @@ object WarehouseQueries {
   // time-travelable.
   def binpackCompact(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q405_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q405", dir)
     import graft.sources.ManifestTable
     val rows = Tables(s, dir).orders
       .select($"o_orderkey".cast("long").as("k"),
@@ -1805,12 +1670,7 @@ object WarehouseQueries {
   // lead() for closure, the delete horizon as the final valid_to).
   def cdfScd2(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q409_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q409", dir)
     import graft.sources.ManifestTable
     val keys = Tables(s, dir).customer
       .select($"c_custkey".cast("long").as("k"))
@@ -1889,12 +1749,7 @@ object WarehouseQueries {
   // closed table's append-only pin surviving both.
   def scd2Keyed(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q412_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q412", dir)
     import graft.sources.ManifestTable
     val (src, open, closed) = (s"$out/src", s"$out/open", s"$out/closed")
     val keys = Tables(s, dir).customer
@@ -2034,12 +1889,7 @@ object WarehouseQueries {
   // replication actually needs.
   def maintenanceSync(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q413_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q413", dir)
     import graft.sources.ManifestTable
     val (src, dst) = (s"$out/src", s"$out/replica")
     val rows = Tables(s, dir).orders
@@ -2107,12 +1957,7 @@ object WarehouseQueries {
   // rewrite commits are feed-invisible.
   def cdcJdbc(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q415_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q415", dir)
     import graft.sources.{JdbcIO, ManifestTable}
     val src = s"$out/src"
     val url = s"jdbc:derby:memory:q415_${ProcessHandle.current().pid()}_${System.nanoTime()};create=true"
@@ -2179,12 +2024,7 @@ object WarehouseQueries {
   // version check costs one directory listing.
   def mvRewrite(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q416_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q416", dir)
     import graft.sources.v2.GraftMaterializedViews
     s.conf.set("spark.sql.catalog.graft_cat416", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat416.warehouse", out)
@@ -2245,12 +2085,7 @@ object WarehouseQueries {
   // O(plan), serve O(|groups|).
   def mvIncremental(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q417_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q417", dir)
     import graft.sources.ManifestTable
     import graft.sources.v2.GraftMaterializedViews
     s.conf.set("spark.sql.catalog.graft_cat417", "graft.sources.v2.GraftCatalog")
@@ -2312,12 +2147,7 @@ object WarehouseQueries {
   def mvJoinIncremental(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.functions.lit
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q418_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q418", dir)
     import graft.sources.ManifestTable
     import graft.sources.v2.GraftMaterializedViews
     s.conf.set("spark.sql.catalog.graft_cat418", "graft.sources.v2.GraftCatalog")
@@ -2385,12 +2215,7 @@ object WarehouseQueries {
   def mvMinMax(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.functions.max
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q419_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q419", dir)
     import graft.sources.ManifestTable
     import graft.sources.v2.GraftMaterializedViews
     s.conf.set("spark.sql.catalog.graft_cat419", "graft.sources.v2.GraftCatalog")
@@ -2449,12 +2274,7 @@ object WarehouseQueries {
     graft.streaming.ScratchCheckpoints.lean(s) {
     import s.implicits._
     import org.apache.spark.sql.functions.{count, lit, sum}
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q422_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q422", dir)
     import graft.sources.ManifestTable
     import graft.sources.v2.GraftMaterializedViews
     s.conf.set("spark.sql.catalog.graft_cat422", "graft.sources.v2.GraftCatalog")
@@ -2524,12 +2344,7 @@ object WarehouseQueries {
   // now serves the whole rollup lattice beneath it, not one query text.
   def mvRollup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q421_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q421", dir)
     import graft.sources.v2.GraftMaterializedViews
     s.conf.set("spark.sql.catalog.graft_cat421", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat421.warehouse", out)
@@ -2602,12 +2417,7 @@ object WarehouseQueries {
   // column per sum column in an O(|groups|) table.
   def mvCountAvg(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q428_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q428", dir)
     import graft.sources.ManifestTable
     import graft.sources.v2.GraftMaterializedViews
     s.conf.set("spark.sql.catalog.graft_cat428", "graft.sources.v2.GraftCatalog")
@@ -2701,12 +2511,7 @@ object WarehouseQueries {
   // reads |groups| rows instead of re-scanning the fact N times.
   def mvDistinctFilter(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q430_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q430", dir)
     import graft.sources.ManifestTable
     import graft.sources.v2.GraftMaterializedViews
     s.conf.set("spark.sql.catalog.graft_cat430", "graft.sources.v2.GraftCatalog")
@@ -2792,12 +2597,7 @@ object WarehouseQueries {
   // view to declare or maintain.
   def mvJoinBack(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q431_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q431", dir)
     import graft.sources.ManifestTable
     import graft.sources.v2.GraftMaterializedViews
     s.conf.set("spark.sql.catalog.graft_cat431", "graft.sources.v2.GraftCatalog")
@@ -2904,12 +2704,7 @@ object WarehouseQueries {
   // replicas instead of scanning the fact once per dashboard render.
   def mvCube(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q432_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q432", dir)
     import graft.sources.ManifestTable
     import graft.sources.v2.GraftMaterializedViews
     s.conf.set("spark.sql.catalog.graft_cat432", "graft.sources.v2.GraftCatalog")
@@ -3004,12 +2799,7 @@ object WarehouseQueries {
   // driver-sized cliff between "works" and "compact first".
   def morLazyDeletes(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q433_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q433", dir)
     import graft.sources.ManifestTable
     import graft.sources.v2.MoRDeleteKeyLoader
     s.conf.set("spark.sql.catalog.graft_cat433", "graft.sources.v2.GraftCatalog")
@@ -3084,12 +2874,7 @@ object WarehouseQueries {
   // throw it away at the filter.
   def mvFiltered(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q429_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q429", dir)
     import graft.sources.ManifestTable
     import graft.sources.v2.GraftMaterializedViews
     s.conf.set("spark.sql.catalog.graft_cat429", "graft.sources.v2.GraftCatalog")
@@ -3179,12 +2964,7 @@ object WarehouseQueries {
     graft.streaming.ScratchCheckpoints.lean(s) {
     import s.implicits._
     import graft.sources.ManifestTable
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q427_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q427", dir)
     import graft.sources.v2.GraftMaterializedViews
     s.conf.set("spark.sql.catalog.graft_cat427", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat427.warehouse", out)
@@ -3263,7 +3043,7 @@ object WarehouseQueries {
   // dashboard reads the O(|days × types|) SKETCH TABLE and unions the
   // partials to any calendar grain (week, month, global). The automatic
   // rewrite keeps ESTIMATE shapes fail-closed (merge-structure-
-  // dependent numbers — graft.HllProbe) while the SAME view's exact
+  // dependent numbers — SketchesSpec) while the SAME view's exact
   // count partials serve the month count dashboard through the
   // time-hierarchy containment (plan-pinned). Require-pinned: the
   // naive sum-of-daily-estimates STRICTLY exceeds the deduped month
@@ -3277,12 +3057,7 @@ object WarehouseQueries {
   def mvDailyUniques(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.ManifestTable
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q426_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q426", dir)
     import graft.sources.v2.GraftMaterializedViews
     s.conf.set("spark.sql.catalog.graft_cat426", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat426.warehouse", out)
@@ -3394,9 +3169,9 @@ object WarehouseQueries {
   // the dashboard's serving surface. The automatic rewrite deliberately
   // REFUSES every sketch-derived base-query shape — estimate numbers
   // are merge-structure-dependent (DataSketches switches HIP →
-  // composite estimation on union; graft.HllProbe shows direct,
-  // single-partition, and union-of-parts all differing at |set| ≈
-  // 1000), and approximate-but-DIFFERENT is still a changed answer —
+  // composite estimation on union; SketchesSpec shows the direct and
+  // the union-of-parts estimates differing at |set| = 1000), and
+  // approximate-but-DIFFERENT is still a changed answer —
   // while the SAME view's exact count partials keep serving the rollup
   // lattice. Require-pinned: estimate and count(DISTINCT) probes fail
   // closed; the exact defSql serves; the global count(*) rolls up from
@@ -3410,12 +3185,7 @@ object WarehouseQueries {
   def mvDistinct(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.ManifestTable
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q425_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q425", dir)
     import graft.sources.v2.GraftMaterializedViews
     s.conf.set("spark.sql.catalog.graft_cat425", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat425.warehouse", out)
@@ -3505,12 +3275,7 @@ object WarehouseQueries {
   def mvSnowflake(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.ManifestTable
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q424_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q424", dir)
     import graft.sources.v2.GraftMaterializedViews
     s.conf.set("spark.sql.catalog.graft_cat424", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat424.warehouse", out)
@@ -3590,12 +3355,7 @@ object WarehouseQueries {
   // asks, and the fact table is never re-scanned for any of them.
   def mvTimeHierarchy(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q423_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q423", dir)
     import graft.sources.v2.GraftMaterializedViews
     s.conf.set("spark.sql.catalog.graft_cat423", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat423.warehouse", out)
@@ -3655,12 +3415,7 @@ object WarehouseQueries {
   // matched the predicate inside an un-rewritten file) breaks the hash.
   def updateWhereFace(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q352_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q352", dir)
     import graft.sources.ManifestTable
     val rows = Tables(s, dir).orders
       .select($"o_orderkey", $"o_orderpriority",
@@ -3711,12 +3466,7 @@ object WarehouseQueries {
   // swept a referenced file breaks the hash or the v1 require.
   def vacuumFace(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q355_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q355", dir)
     import graft.sources.ManifestTable
     val rows = Tables(s, dir).orders
       .select($"o_orderkey", $"o_orderpriority",
@@ -3761,12 +3511,7 @@ object WarehouseQueries {
   // head); both stages hash-check against the oracle's recompute.
   def sqlDelete(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q357_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q357", dir)
     // own catalog NAME per face: a catalog instance caches its warehouse
     // at first resolution, so q348's "graft_cat" must not be reused here
     s.conf.set("spark.sql.catalog.graft_cat357", "graft.sources.v2.GraftCatalog")
@@ -3830,12 +3575,7 @@ object WarehouseQueries {
   // hash-check against the oracle's relational recompute.
   def sqlUpdateMerge(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q360_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q360", dir)
     s.conf.set("spark.sql.catalog.graft_cat360", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat360.warehouse", out)
     Tables(s, dir).orders
@@ -3893,12 +3633,7 @@ object WarehouseQueries {
   // recompute of the same update+merge+delete pipeline.
   def sqlDeltaUpdateMerge(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q365_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q365", dir)
     s.conf.set("spark.sql.catalog.graft_cat365", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat365.warehouse", out)
     Tables(s, dir).orders
@@ -3970,12 +3705,7 @@ object WarehouseQueries {
   // the oracle's relational recompute of the same five-way CASE.
   def sqlMergeMatrix(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q379_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q379", dir)
     s.conf.set("spark.sql.catalog.graft_cat379", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat379.warehouse", out)
     Tables(s, dir).orders
@@ -4034,12 +3764,7 @@ object WarehouseQueries {
   // dimension slice touches.
   def sqlRuntimeDpp(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q366_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q366", dir)
     s.conf.set("spark.sql.catalog.graft_cat366", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat366.warehouse", out)
     // the classic DPP shape: a fact clustered by DAY and a calendar
@@ -4113,12 +3838,7 @@ object WarehouseQueries {
   // stages against the oracle's relational recompute.
   def sqlBoundedGroupCow(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q367_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q367", dir)
     s.conf.set("spark.sql.catalog.graft_cat367", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat367.warehouse", out)
     Tables(s, dir).orders
@@ -4169,12 +3889,7 @@ object WarehouseQueries {
   // base ∪ experiment rows.
   def sqlBranchWap(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q368_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q368", dir)
     s.conf.set("spark.sql.catalog.graft_cat368", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat368.warehouse", out)
     Tables(s, dir).orders
@@ -4225,12 +3940,7 @@ object WarehouseQueries {
   // oracle's relational recompute.
   def sqlCompositeKeyDelta(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q369_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q369", dir)
     s.conf.set("spark.sql.catalog.graft_cat369", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat369.warehouse", out)
     // the synthetic lineitem repeats (orderkey, linenumber) pairs —
@@ -4304,12 +4014,7 @@ object WarehouseQueries {
   // the oracle's plain recompute.
   def sqlStoragePartitionedJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q370_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q370", dir)
     s.conf.set("spark.sql.catalog.graft_cat370", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat370.warehouse", out)
     Tables(s, dir).orders
@@ -4369,12 +4074,7 @@ object WarehouseQueries {
   // commitPartitioned's discipline.
   def sqlHiddenPartitioning(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q371_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q371", dir)
     s.conf.set("spark.sql.catalog.graft_cat371", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat371.warehouse", out)
     import graft.sources.ManifestTable
@@ -4418,12 +4118,7 @@ object WarehouseQueries {
   // with no compaction pass and no reader-side knowledge of the layout.
   def sqlPartitionedInsert(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q372_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q372", dir)
     s.conf.set("spark.sql.catalog.graft_cat372", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat372.warehouse", out)
     Tables(s, dir).events
@@ -4474,12 +4169,7 @@ object WarehouseQueries {
   // every untouched file still on the fully-pushed vectorized path.
   def sqlMixedDeletes(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q373_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q373", dir)
     s.conf.set("spark.sql.catalog.graft_cat373", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat373.warehouse", out)
     Tables(s, dir).orders
@@ -4547,12 +4237,7 @@ object WarehouseQueries {
   // organizes and prunes itself with zero library imports.
   def sqlMd5BucketDdl(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q374_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q374", dir)
     s.conf.set("spark.sql.catalog.graft_cat374", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat374.warehouse", out)
     Tables(s, dir).events
@@ -4613,12 +4298,7 @@ object WarehouseQueries {
   // stale, and a view read costs exactly its query.
   def sqlCtasViews(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q375_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q375", dir)
     s.conf.set("spark.sql.catalog.graft_cat375", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat375.warehouse", out)
     Tables(s, dir).events
@@ -4663,12 +4343,7 @@ object WarehouseQueries {
   // pinned to VERSION AS OF never notices the swap.
   def sqlAtomicRtas(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q376_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q376", dir)
     s.conf.set("spark.sql.catalog.graft_cat376", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat376.warehouse", out)
     Tables(s, dir).events
@@ -4721,12 +4396,7 @@ object WarehouseQueries {
   // rejects them today, enforced at every writer with zero reader cost.
   def sqlCheckConstraints(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q377_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q377", dir)
     s.conf.set("spark.sql.catalog.graft_cat377", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat377.warehouse", out)
     Tables(s, dir).events
@@ -4786,12 +4456,7 @@ object WarehouseQueries {
   // answer (rewrite the table to a new schema) is a day of cluster time.
   def sqlSchemaEvolution(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q378_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q378", dir)
     s.conf.set("spark.sql.catalog.graft_cat378", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat378.warehouse", out)
     Tables(s, dir).events
@@ -4859,12 +4524,7 @@ object WarehouseQueries {
   // rewrite; here it is one metadata write and the old files never learn.
   def sqlColumnDefaults(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q380_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q380", dir)
     s.conf.set("spark.sql.catalog.graft_cat380", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat380.warehouse", out)
     Tables(s, dir).events
@@ -4911,12 +4571,7 @@ object WarehouseQueries {
   // against the oracle's relational recompute of the replacement.
   def sqlDynamicOverwrite(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q381_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q381", dir)
     s.conf.set("spark.sql.catalog.graft_cat381", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat381.warehouse", out)
     Tables(s, dir).events
@@ -4973,12 +4628,7 @@ object WarehouseQueries {
   // recompute.
   def sqlRenameColumn(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q382_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q382", dir)
     s.conf.set("spark.sql.catalog.graft_cat382", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat382.warehouse", out)
     Tables(s, dir).events
@@ -5052,12 +4702,7 @@ object WarehouseQueries {
   // hash-checked against the oracle's recompute of the tagged slice.
   def sqlSnapshotTags(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q383_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q383", dir)
     s.conf.set("spark.sql.catalog.graft_cat383", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat383.warehouse", out)
     Tables(s, dir).events
@@ -5107,12 +4752,7 @@ object WarehouseQueries {
   // would lose rows and break the hash.
   def sqlPartitionEvolution(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q384_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q384", dir)
     s.conf.set("spark.sql.catalog.graft_cat384", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat384.warehouse", out)
     Tables(s, dir).events
@@ -5170,12 +4810,7 @@ object WarehouseQueries {
   // against the oracle's three-stage relational recompute.
   def sqlCowUnderPosDeletes(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q385_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q385", dir)
     s.conf.set("spark.sql.catalog.graft_cat385", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat385.warehouse", out)
     Tables(s, dir).orders
@@ -5245,12 +4880,7 @@ object WarehouseQueries {
   // oracle's recompute over the surviving rows.
   def sqlRewriteDeletes(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q395_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q395", dir)
     s.conf.set("spark.sql.catalog.graft_cat395", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat395.warehouse", out)
     Tables(s, dir).orders
@@ -5317,12 +4947,7 @@ object WarehouseQueries {
   // the oracle's relational recompute.
   def sqlWapStagedMutations(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q387_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q387", dir)
     s.conf.set("spark.sql.catalog.graft_cat387", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat387.warehouse", out)
     Tables(s, dir).orders
@@ -5388,12 +5013,7 @@ object WarehouseQueries {
   // recompute.
   def sqlErasureProof(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q390_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q390", dir)
     s.conf.set("spark.sql.catalog.graft_cat390", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat390.warehouse", out)
     Tables(s, dir).orders
@@ -5478,12 +5098,7 @@ object WarehouseQueries {
   def sqlStreamTable(s: SparkSession, dir: String): DataFrame =
     graft.streaming.ScratchCheckpoints.lean(s) {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q363_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q363", dir)
     s.conf.set("spark.sql.catalog.graft_cat363", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat363.warehouse", out)
     Tables(s, dir).events
@@ -5524,12 +5139,7 @@ object WarehouseQueries {
   // the public reader API. Both stages hash-check against the oracle.
   def sqlBranchRead(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_q364_${Integer.toHexString(dir.hashCode)}"
-    val out = s"${base}_p${ProcessHandle.current().pid()}"
-    Q88Scratch.sweepAndRegister(base, out)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-    rm(new java.io.File(out))
+    val out = Scratch.dir("q364", dir)
     s.conf.set("spark.sql.catalog.graft_cat364", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_cat364.warehouse", out)
     val rows = Tables(s, dir).orders

@@ -758,11 +758,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def dropTable(ident: Identifier): Boolean = {
     val dir = tableDir(ident)
     if (!isTable(dir)) false
-    else {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit }
-      rm(new java.io.File(dir)); true
-    }
+    else { ManifestTable.rmTree(new java.io.File(dir)); true }
   }
 
   /** ALTER TABLE ... RENAME TO — a metadata operation: move the
@@ -818,10 +814,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       // DROP NAMESPACE ... CASCADE: recursive delete of every table under
       // the namespace (ADVICE r9 — a plain Files.delete threw
       // DirectoryNotEmptyException on any non-empty namespace)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit
-      }
-      rm(p.toFile); true
+      ManifestTable.rmTree(p.toFile); true
     } else {
       val empty = {
         val s = java.nio.file.Files.list(p)

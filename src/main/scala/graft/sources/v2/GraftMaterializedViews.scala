@@ -257,9 +257,9 @@ object GraftMaterializedViews {
             // served: the estimate of a union of partials is NOT the
             // estimate the direct query computes (DataSketches switches
             // HIP → composite estimation on union, so the number
-            // depends on merge structure — graft.HllProbe demonstrates
-            // direct, single-partition, and union-of-parts all
-            // differing at |set| ≈ 1000). Approximate-but-different is
+            // depends on merge structure — SketchesSpec pins a direct
+            // estimate of 995 against 996 for the union of per-part
+            // sketches at |set| = 1000). Approximate-but-different is
             // still a changed answer: fail closed.
             case h: HllSketchAgg => h.left.isInstanceOf[AttributeReference]
             case Count(Seq(a: AttributeReference)) => cnts(a.name) = nm; true
@@ -380,7 +380,7 @@ object GraftMaterializedViews {
     // deliberately does NOT substitute sketch math for a base query's
     // `hll_sketch_estimate(hll_sketch_agg(c))`: the estimate of a union
     // of partials is merge-structure-dependent (HIP → composite,
-    // graft.HllProbe) — approximate-but-DIFFERENT is still a changed
+    // pinned in SketchesSpec) — approximate-but-DIFFERENT is still a changed
     // answer, so that shape fails closed.
     val defSql = s"SELECT ${groupCols.mkString(", ")}, count(*) AS n_rows" +
       sumCols.map(c => s", sum($c) AS sum_$c").mkString +
@@ -1321,7 +1321,7 @@ case class GraftMvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // DataSketches estimates switch HIP → composite on union, so
       // estimate(union of stored partials) ≠ estimate(direct query)
       // in general — merge-structure-dependent numbers
-      // (graft.HllProbe). The sketch TABLE is the serving surface for
+      // (pinned in SketchesSpec). The sketch TABLE is the serving surface for
       // uniques dashboards; the rewrite fails closed here.
       case ex if ex.deterministic && refOk(ex) &&
           !ex.exists(_.isInstanceOf[AggregateExpression]) && {

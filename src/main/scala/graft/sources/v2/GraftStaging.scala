@@ -168,7 +168,7 @@ class GraftStagedTable(ident: Identifier, stageDir: String, finalDir: String,
   }
 
   override def abortStagedChanges(): Unit = {
-    GraftStagedTable.rm(new java.io.File(stageDir))
+    ManifestTable.rmTree(new java.io.File(stageDir))
     cleanupNonceDir()
   }
 
@@ -189,10 +189,6 @@ object GraftStagedTable {
       (f.lastModified() +: Option(f.listFiles()).toSeq.flatten.map(newestMtime)).max
     Option(p.toFile.listFiles()).toSeq.flatten
       .filter(f => f.isDirectory && newestMtime(f) < cutoff)
-      .foreach(rm)
-  }
-
-  private[v2] def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit
+      .foreach(ManifestTable.rmTree)
   }
 }

@@ -145,4 +145,30 @@ class DedupSpec extends SparkSpec {
       Seq((1L, 2L, 8L, 1L), (2L, 11L, 8L, 1L)), s"doc 4: ${spansOf(4L)}")
     ()
   }
+
+  test("positional prefix filter on a Zipf-vocabulary corpus: candidates are a small fraction of all pairs") {
+    // The corpus shape of tools/gen_zipf.py: a 10 000-word vocabulary
+    // with Zipf(1.05) frequencies and documents of 10..100 words, drawn
+    // here from a fixed seed. On it most tokens are rare, so prefix
+    // blocking can prune; on the uniform 31-word sf corpora every token
+    // is common and candidates are all pairs.
+    val vocab = 10000
+    val cum = (1 to vocab).map(r => 1.0 / math.pow(r.toDouble, 1.05)).scanLeft(0.0)(_ + _).tail
+    val rng = new java.util.Random(9001)
+    def word(): String = {
+      val u = rng.nextDouble() * cum.last
+      val i = cum.search(u).insertionPoint.min(vocab - 1)
+      f"w${i + 1}%05d"
+    }
+    val nDocs = 500L
+    val docs = (0L until nDocs).map(id => (id, Seq.fill(10 + rng.nextInt(91))(word()).mkString(" ")))
+      .toDF("doc_id", "text")
+    val toks = docs.select($"doc_id",
+      explode(array_distinct(graft.functions.ParityFunctions.tokens($"text"))).as("tok"))
+    val cands = Dedup.prefixCandidates(toks, "doc_id", "tok", positional = true).count()
+    val allPairs = nDocs * (nDocs - 1) / 2
+    info(s"candidates=$cands of $allPairs pairs")
+    // measured: 486 candidate pairs of 124 750 (0.39%)
+    assert(cands <= allPairs / 200, s"$cands candidates of $allPairs pairs")
+  }
 }

@@ -897,9 +897,9 @@ class MaterializedViewSpec extends SparkSpec {
       distinctCols = Seq("u"))
     assert(defSql.contains("hll_sketch_agg(u) AS hll_u"))
     // NO sketch-derived shape is ever substituted: estimates are
-    // merge-structure-dependent (HIP vs composite — graft.HllProbe
-    // shows direct/1-partition/union-of-parts all differing at
-    // |set| ≈ 1000) and raw bytes encoding-dependent. Approximate but
+    // merge-structure-dependent (HIP vs composite — SketchesSpec
+    // shows the direct and union-of-parts estimates differing at
+    // |set| = 1000) and raw bytes encoding-dependent. Approximate but
     // DIFFERENT is a changed answer: every probe computes from base.
     val h0 = GraftMaterializedViews.hits("mv_dc")
     spark.sql("SELECT g1, g2, hll_sketch_estimate(hll_sketch_agg(u)) AS nd " +

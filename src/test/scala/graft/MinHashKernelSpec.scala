@@ -3,8 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.execution.{ProjectExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.ProjectExec
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -196,19 +195,12 @@ class MinHashKernelSpec extends SparkSpec {
     }
   }
 
-  /** Every operator of an executed plan, AQE stages included. */
-  private def operators(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => operators(a.executedPlan)
-    case s: QueryStageExec => s +: operators(s.plan)
-    case o => o +: (o.children ++ o.subqueries).flatMap(operators)
-  }
-
   test("the executed minHashDedup plan has no interpreted expression and signs each document once") {
     // a checkpointed input, as pipelines hand it over: over a local
     // relation the optimizer would fold the per-document projections away
     val out = Dedup.minHashDedup(nearDupCorpus(1).localCheckpoint(), "id", "text", threshold = 0.2)
     out.collect()
-    val ops = operators(out.queryExecution.executedPlan)
+    val ops = PlanOps.operators(out.queryExecution.executedPlan)
     val fallback = ops.flatMap(_.expressions.flatMap(_.collect { case e: CodegenFallback => e }))
     assert(fallback.isEmpty, s"interpreted expressions: ${fallback.map(_.prettyName).distinct}")
     // each kernel sits in one projection, evaluated once per row there: not

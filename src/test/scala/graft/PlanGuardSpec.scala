@@ -51,6 +51,25 @@ class PlanGuardSpec extends SparkSpec {
     }
   }
 
+  test("q386 at |q| = 1000: no cartesian, one broadcast-query kNN loop, every query document answered") {
+    // the gate face runs 5 query docs; at sf0.01 |q| = 1000 makes every
+    // one of the 500 documents (and vectors) a query, 200x the face
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+    val df = graft.queries.VectorQueries.rrfHybridFusionN(spark, "/root/testdata/sf0.01", 1000L)
+    // collect() runs this frame's own plan, so executedPlan is AQE-final
+    val answered = df.collect().map(_.getAs[Long]("q_id")).toSet
+    val plan = df.queryExecution.executedPlan
+    val ops = PlanOps.operators(plan)
+    assert(!ops.exists(_.isInstanceOf[CartesianProductExec]), s"cartesian at query volume:\n$plan")
+    // the lexical leg and the fusion are keyed joins; the dense leg is a
+    // brute-force kNN, a nested loop over the BROADCAST query vectors
+    val loops = ops.collect { case j: BroadcastNestedLoopJoinExec => j }
+    assert(loops.size == 1 && loops.head.right.output.exists(_.name == "q_vec"),
+      s"expected only the dense leg's broadcast-query loop:\n$plan")
+    assert(answered == (0L until 500L).toSet,
+      s"${500 - answered.size} query documents got no row")
+  }
+
   test("q91: centroid sides broadcast — the corpus is never shuffled for assignment") {
     val p = planOf("q91_kmeans_train")
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"),

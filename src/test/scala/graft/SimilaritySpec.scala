@@ -189,4 +189,46 @@ class SimilaritySpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().toSet
     assert(p == Set((0L, 0L, 2L), (1L, 1L, 4L)))
   }
+
+  test("semanticDedup: AQE splits a hot cluster's pair join (skew=true) without changing the pairs") {
+    // Half the vectors share one direction (noise near the int8 step), so
+    // one cluster holds about half the corpus; the other half are one-hot
+    // vectors over 63 directions. Broadcast joins are off, as for a corpus
+    // whose assigned relation is far past broadcast size, and the skew
+    // thresholds are lowered to test scale (defaults: 256 MB, factor 5).
+    val dim = 64
+    val emb = spark.range(0L, 1000L, 1L, 4).select($"id".as("vec_id"),
+      transform(sequence(lit(0), lit(dim - 1)), j =>
+        when($"id" % 2 === 0,
+          when(j === 0, 1.0).otherwise(pmod($"id" * 31 + j, lit(7)).cast("double") * 0.001))
+        .otherwise(when(j === pmod($"id", lit(dim - 1)) + 1, 1.0).otherwise(0.0)))
+        .cast("array<float>").as("embedding"))
+    def pairsWith(conf: Seq[(String, String)]) = {
+      val keys = conf.map(_._1)
+      val saved = keys.map(k => k -> spark.conf.getOption(k))
+      try {
+        conf.foreach { case (k, v) => spark.conf.set(k, v) }
+        val (_, pairs) = Similarity.semanticDedup(emb, k = 8, thrNum = 95, thrDen = 100)
+        // collect() drives this frame's own plan, so executedPlan is final
+        val rows = pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+        (rows, pairs.queryExecution.executedPlan.toString)
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val atScale = Seq(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB")
+    val (split, plan) = pairsWith(atScale :+ ("spark.sql.adaptive.skewJoin.enabled" -> "true"))
+    val (whole, planOff) = pairsWith(atScale :+ ("spark.sql.adaptive.skewJoin.enabled" -> "false"))
+    assert(plan.contains("skew=true"), s"hot cluster's pair join not split:\n$plan")
+    assert(!planOff.contains("skew=true"))
+    info(s"${split.size} pairs; top clusters ${split.groupBy(_._1).view.mapValues(_.size).toSeq.sortBy(-_._2).take(3)}")
+    assert(split.nonEmpty && split == whole)
+  }
 }

@@ -33,4 +33,24 @@ class SketchesSpec extends SparkSpec {
       .as[Long].collect()
     assert(pos.length == 700 && pos.forall(p => p >= 0 && p < 4096))
   }
+
+  test("hll: the estimate of a union of per-part sketches is not the direct estimate") {
+    // GraftMaterializedViews refuses to serve any sketch-derived output
+    // from stored partials because DataSketches switches HIP → composite
+    // estimation on union, so the number depends on merge structure. The
+    // input is fixed: 8 range partitions, 3 rows per uid, 30 parts.
+    import org.apache.spark.sql.functions._
+    val sizes = Seq(100, 1000, 5000, 50000)
+    val est = sizes.map { n =>
+      val df = spark.range(0L, n * 3L, 1L, 8)
+        .select(($"id" % 30).as("part"), ($"id" % n).as("uid"))
+      val direct = df.agg(hll_sketch_estimate(hll_sketch_agg($"uid"))).head().getLong(0)
+      val unioned = df.groupBy($"part").agg(hll_sketch_agg($"uid").as("sk"))
+        .agg(hll_sketch_estimate(hll_union_agg($"sk"))).head().getLong(0)
+      info(s"n=$n direct=$direct unionOfParts=$unioned")
+      (n, direct, unioned)
+    }
+    assert(est.exists { case (_, d, u) => d != u },
+      s"direct and union-of-parts estimates agree at every size: $est")
+  }
 }
